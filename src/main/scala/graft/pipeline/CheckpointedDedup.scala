@@ -1,6 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, GraftBridge, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.DedupConfig
 
@@ -16,10 +20,19 @@ import graft.core.DedupConfig
   * deterministic generator/pipeline is deterministic by construction:
   * seeded permutations, stable sort keys, deterministic compaction).
   *
-  * The checksum is an order-insensitive bit_xor of xxhash64 over the
-  * stage's key columns; the HLL sketch counts distinct conv_ids per
-  * partition — both are the reference sketch families doing the metrics
-  * job the north star assigns them (SURVEY §2b P12).
+  * The lineage is computed inside the stage's own write tasks
+  * (`PartitionLineageAgg` observed on the written DataFrame), so
+  * `partition_id` is the written partition — one row per non-empty output
+  * file. The checksum is an order-insensitive XOR of xxhash64 over the
+  * stage's key columns; the HLL sketch counts distinct values of the first
+  * key column per partition — both are the reference sketch families doing
+  * the metrics job the north star assigns them (SURVEY §2b P12).
+  *
+  * Job budget: a computed stage costs its own write plus the metrics
+  * append; a skipped stage costs no job. A run reads the metrics table
+  * once, as (stage, rows_out) rows: that decides which stages are
+  * complete and chains rows_in(stage N) = Σrows_out(stage N-1). Only the
+  * docs stage counts its input.
   */
 final class CheckpointedDedup(
     io: TableIO,
@@ -33,6 +46,9 @@ final class CheckpointedDedup(
   /** Stages that executed (not resumed) in the last `run` call. */
   var computedStages: List[String] = Nil
 
+  /** Σrows_out per stage with lineage rows, as of the current `run`. */
+  private val rowsOut = mutable.Map.empty[String, Long]
+
   /** @param docsBuilder optional replacement for the docs stage body —
     *   callers whose input layout has a cheaper correct reconstruction
     *   (BucketedCorpus.readDocs streams docs off the bucket sort) inject
@@ -41,13 +57,15 @@ final class CheckpointedDedup(
           docsBuilder: Option[() => DataFrame] = None): DataFrame = {
     val spark = transcripts.sparkSession
     computedStages = Nil
+    rowsOut.clear()
+    rowsOut ++= lineageTotals(spark)
 
     val docs = stage(spark, "docs", keyCols = Seq("conv_id"),
-      rowsInOf = () => transcripts.count()) { () =>
+      rowsIn = transcripts.count()) { () =>
       docsBuilder.map(_.apply()).getOrElse(DedupPipeline.buildDocs(transcripts))
     }
     val sigs = stage(spark, "signatures", keyCols = Seq("conv_id"),
-      rowsInOf = () => docs.count()) { () =>
+      rowsIn = rowsOut("docs")) { () =>
       // checkpoint only what downstream stages consume: bands need the
       // minhash, CC needs conv_id, simhash is a cheap per-doc metric. The
       // shingle array (~8x the text bytes) is recomputed pair-locally by
@@ -57,19 +75,19 @@ final class CheckpointedDedup(
         .select(col("conv_id"), col("doc_len"), col("minhash"), col("simhash"))
     }
     val bands = stage(spark, "bands", keyCols = Seq("conv_id", "band_key"),
-      rowsInOf = () => sigs.count()) { () =>
+      rowsIn = rowsOut("signatures")) { () =>
       DedupPipeline.bands(sigs, cfg)
     }
     val cand = stage(spark, "cand_pairs", keyCols = Seq("a", "b"),
-      rowsInOf = () => bands.count()) { () =>
+      rowsIn = rowsOut("bands")) { () =>
       DedupPipeline.candidatePairs(bands, cfg)
     }
     val verified = stage(spark, "verified_pairs", keyCols = Seq("a", "b"),
-      rowsInOf = () => cand.count()) { () =>
+      rowsIn = rowsOut("cand_pairs")) { () =>
       DedupPipeline.verifyPairs(cand, docs, cfg)
     }
     val assignments = stage(spark, "cluster_assignments", keyCols = Seq("conv_id", "cluster_id"),
-      rowsInOf = () => verified.count()) { () =>
+      rowsIn = rowsOut("verified_pairs")) { () =>
       DedupPipeline.connectedComponents(verified, sigs.select(col("conv_id")))
     }
     assignments
@@ -78,88 +96,66 @@ final class CheckpointedDedup(
   /** Read the metrics table (for tests / the resume planner). */
   def metrics(spark: SparkSession): DataFrame = io.read(spark, metricsName)
 
-  /** Stages with lineage rows at construction time — read ONCE per runner
-    * (resume used to pay a metrics-table read per stage). The per-stage
-    * table existence check stays live (cheap FS/catalog lookup, no job). */
-  private var metricsStageSet: Option[Set[String]] = None
-  private def stagesWithLineage(spark: SparkSession): Set[String] = {
-    if (metricsStageSet.isEmpty) {
-      metricsStageSet = Some(
-        if (!io.exists(spark, metricsName)) Set.empty
-        else metrics(spark).select(col("stage")).distinct()
-          .collect().map(_.getString(0)).toSet)
-    }
-    metricsStageSet.get
+  /** The one metrics read of a run: (stage, rows_out) rows collected and
+    * summed locally — no shuffle. */
+  private def lineageTotals(spark: SparkSession): Map[String, Long] =
+    if (!io.exists(spark, metricsName)) Map.empty
+    else metrics(spark).select(col("stage"), col("rows_out")).collect()
+      .groupMapReduce(_.getString(0))(_.getLong(1))(_ + _)
+
+  /** Rewrites `metrics` without `name`'s rows. The rows are collected
+    * before the overwrite: a table cannot be overwritten while it is read. */
+  private def dropLineage(spark: SparkSession, name: String): Unit = {
+    val m = metrics(spark)
+    val kept = m.where(col("stage") =!= name).collect()
+    io.write(spark.createDataFrame(java.util.Arrays.asList(kept: _*), m.schema), metricsName)
   }
-
-  private def stageComplete(spark: SparkSession, name: String): Boolean =
-    stagesWithLineage(spark).contains(name) && io.exists(spark, s"$runId/$name")
-
-  private val profile = sys.env.contains("SPARK_GRAFT_CKPT_PROFILE")
-  private def prof[A](label: String)(f: => A): A = {
-    if (!profile) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[ckpt] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
-
-  /** rows_out total of the stage computed immediately before, when that
-    * stage ran in THIS call (resumed predecessors fall back to rowsInOf —
-    * a metadata-only parquet count). Chaining the totals removes one count
-    * job per stage: rows_in(stage N) == sum(rows_out(stage N-1)). */
-  private var prevRowsOut: Long = -1L
 
   private def stage(spark: SparkSession, name: String, keyCols: Seq[String],
-                    rowsInOf: () => Long)(compute: () => DataFrame): DataFrame = {
-    if (prof(s"$name complete?")(stageComplete(spark, name))) {
-      prevRowsOut = -1L
-      io.read(spark, s"$runId/$name")
-    } else {
-      val out = compute()
-      prof(s"$name write")(io.write(out, s"$runId/$name"))
+                    rowsIn: => Long)(compute: () => DataFrame): DataFrame = {
+    val table = s"$runId/$name"
+    if (rowsOut.contains(name) && io.exists(spark, table)) io.read(spark, table)
+    else {
+      val (out, observation) = observeLineage(compute(), keyCols)
+      io.write(out, table)
       // stage output is on disk: release any intermediates the pipeline
       // persisted while computing it (verifyPairs' spread, winnow tables)
       DedupPipeline.unpersistIntermediates(spark)
       computedStages = computedStages :+ name
-      val persisted = io.read(spark, s"$runId/$name")
-      val rowsIn = prof(s"$name rowsIn")(
-        if (prevRowsOut >= 0) prevRowsOut else rowsInOf())
-      // collect the per-partition lineage (<= #partitions small rows): one
-      // aggregation job yields BOTH the metrics rows and the rows_out
-      // total the next stage needs; the append then writes driver-local
-      // data with no second pass over the stage output
-      val lineageLocal = prof(s"$name lineage")(
-        partitionLineage(persisted, keyCols).collect())
-      prevRowsOut = lineageLocal.map(_.getLong(1)).sum
-      val lineage = spark.createDataFrame(
-          java.util.Arrays.asList(lineageLocal: _*),
-          lineageLocal.headOption.map(_.schema)
-            .getOrElse(partitionLineage(persisted, keyCols).schema))
-        .withColumn("run_id", lit(runId))
-        .withColumn("stage", lit(name))
-        .withColumn("rows_in", lit(rowsIn))
-        .withColumn("ts", current_timestamp())
-        .select("run_id", "stage", "partition_id", "rows_in", "rows_out",
-          "checksum", "hll_sketch", "ts")
-      prof(s"$name append")(io.append(lineage, metricsName))
-      persisted
+      val parts = lineageOf(observation)
+      // the table vanished while its lineage stayed: replace, not add to, it
+      if (rowsOut.contains(name)) dropLineage(spark, name)
+      rowsOut(name) = parts.map(_.getLong(1)).sum
+      val lineage = spark.createDataFrame(java.util.Arrays.asList(parts: _*),
+          PartitionLineageAgg.PartitionType)
+        .select(lit(runId).as("run_id"), lit(name).as("stage"), col("partition_id"),
+          lit(rowsIn).as("rows_in"), col("rows_out"), col("checksum"), col("hll_sketch"),
+          current_timestamp().as("ts"))
+      io.append(lineage, metricsName)
+      io.read(spark, table)
     }
   }
 }
 
 object CheckpointedDedup {
-  /** Per-partition counters over a materialized stage output. */
-  def partitionLineage(df: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val keyHash = xxhash64(keyCols.map(col): _*)
-    val convLike = keyCols.head
-    df.withColumn("partition_id", spark_partition_id())
-      .groupBy(col("partition_id"))
-      .agg(
-        count(lit(1)).as("rows_out"),
-        coalesce(bit_xor(keyHash), lit(0L)).as("checksum"),
-        graft.functions.hll_agg(col(convLike), 12).as("hll_sketch"))
+  /** `df` observed by a `PartitionLineageAgg` over `keyCols` (checksum
+    * over all of them, HLL over the first), plus the Observation that
+    * completes when the returned DataFrame has been written. */
+  private def observeLineage(df: DataFrame, keyCols: Seq[String]): (DataFrame, Observation) = {
+    val agg = PartitionLineageAgg(
+      GraftBridge.expression(xxhash64(keyCols.map(col): _*)),
+      GraftBridge.expression(col(keyCols.head)))
+    val observation = Observation()
+    (df.observe(observation, GraftBridge.column(agg.toAggregateExpression()).as("lineage")),
+      observation)
+  }
+
+  /** The per-partition lineage rows (partition_id, rows_out, checksum,
+    * hll_sketch) an `observeLineage` observation delivered. Spark delivers
+    * them through its listener bus shortly after the write returns; the
+    * bound only turns a TableIO that never executed the DataFrame it was
+    * given into an error instead of a hang. */
+  private def lineageOf(observation: Observation): Seq[Row] = {
+    Await.result(observation.future, 10.minutes).getSeq[Row](0)
   }
 }

@@ -1,6 +1,12 @@
 package graft.pipeline
 
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Storage seam (SURVEY §2b P1/P11): the north star writes Iceberg tables;
   * this sandbox has no Iceberg runtime jars, so the default implementation
@@ -74,12 +80,41 @@ final class ParquetTableIO(root: String) extends TableIO {
   override def append(df: DataFrame, name: String): Unit =
     df.write.mode(SaveMode.Append).parquet(path(name))
 
-  override def read(spark: SparkSession, name: String): DataFrame =
-    spark.read.parquet(path(name))
+  /** Reads without a schema-inference job (Spark's inference launches one
+    * even for a single footer): the schema comes from one data file's
+    * footer, read locally without a Spark job. */
+  override def read(spark: SparkSession, name: String): DataFrame = {
+    val reader = spark.read
+    ParquetTableIO.footerSchema(spark, path(name)).fold(reader)(reader.schema).parquet(path(name))
+  }
 
   override def exists(spark: SparkSession, name: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path(name), "_SUCCESS")
+    val p = new Path(path(name), "_SUCCESS")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p)
+  }
+}
+
+object ParquetTableIO {
+  /** Footer key under which Spark stores the schema JSON of every parquet
+    * file it writes; its own schema inference reads the same entry. */
+  private val RowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The Spark schema recorded in the footer of one data file under `dir`;
+    * None (so the caller falls back to inference) when the directory
+    * cannot be listed, holds no data file, or the footer has no such
+    * entry. */
+  def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    Try(root.getFileSystem(conf).listStatus(root)).toOption
+      .flatMap(_.iterator.map(_.getPath).find(_.getName.endsWith(".parquet")))
+      .flatMap { file =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+        try Option(reader.getFileMetaData.getKeyValueMetaData.get(RowMetadataKey))
+        finally reader.close()
+      }
+      .flatMap(json => Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
   }
 }

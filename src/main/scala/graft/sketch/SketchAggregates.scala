@@ -24,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 // ---------- shared input hashing --------------------------------------------
 
-private[sketch] object SketchInput {
+private[graft] object SketchInput {
   /** Update an HLL sketch from any supported input type with the
     * reference's canonical byte imaging (string→UTF8 bytes, integral→int64
     * LE bytes, double canonicalized; hll/hll_sketch.go:274-295). */

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.DedupConfig
@@ -12,23 +13,7 @@ import graft.core.DedupConfig
 class CatalogTableIOSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private def freshIo(ns: String): CatalogTableIO = {
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $ns")
-    spark.sql(s"SHOW TABLES IN $ns").collect().foreach { r =>
-      spark.sql(s"DROP TABLE IF EXISTS $ns.${r.getString(1)}")
-    }
-    // the in-memory catalog forgets tables across sessions but their
-    // managed locations persist — clear them so runs are hermetic
-    val wh = new java.io.File(s"/tmp/graft-test-warehouse/$ns.db")
-    if (wh.isDirectory) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(wh)
-    }
-    new CatalogTableIO(ns)
-  }
+  private def freshIo(ns: String): CatalogTableIO = CatalogTableIOSpec.freshIo(spark, ns)
 
   test("write / overwrite / append / exists round-trip through the catalog") {
     import spark.implicits._
@@ -65,5 +50,19 @@ class CatalogTableIOSpec extends AnyFunSuite {
     // lineage metrics landed as a catalog table
     val m = r2.metrics(spark)
     assert(m.where(col("stage") === "cluster_assignments").count() > 0)
+  }
+}
+
+object CatalogTableIOSpec {
+  /** A CatalogTableIO over an emptied namespace of the session catalog. */
+  def freshIo(spark: SparkSession, ns: String): CatalogTableIO = {
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS $ns")
+    spark.sql(s"SHOW TABLES IN $ns").collect().foreach { r =>
+      spark.sql(s"DROP TABLE IF EXISTS $ns.${r.getString(1)}")
+    }
+    // the in-memory catalog forgets tables across sessions but their
+    // managed locations persist — clear them so runs are hermetic
+    CheckpointLineageSpec.deleteDir(new java.io.File(s"/tmp/graft-test-warehouse/$ns.db"))
+    new CatalogTableIO(ns)
   }
 }

@@ -1,0 +1,183 @@
+package graft.pipeline
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.GraftTestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.DedupConfig
+import graft.functions.{hll_agg, hll_estimate, hll_merge_agg}
+
+/** CheckpointedDedup's in-write lineage against the read-back oracle, the
+  * rows_in chain, and the Spark jobs a checkpointed run submits. */
+class CheckpointLineageSpec extends AnyFunSuite {
+  import CheckpointLineageSpec._
+
+  lazy val spark: SparkSession = SparkTestSession.spark
+
+  val cfg = DedupConfig()
+  lazy val turns = Transcripts.generate(150)
+  lazy val tdf = Transcripts.asDataFrame(spark, turns, 6).cache()
+
+  /** A session in which every stage writes several partitions: AQE does
+    * not coalesce shuffle partitions, and each small file is its own read
+    * split (a split closes below the 4 MB per-file open cost). The default
+    * session writes this corpus as one partition per stage, where the
+    * per-partition checks below could not tell partitions apart. */
+  lazy val splitSpark: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    s.conf.set("spark.sql.files.maxPartitionBytes", "1m")
+    s
+  }
+  lazy val splitTdf = Transcripts.asDataFrame(splitSpark, turns, 6)
+
+  /** Per stage: the read-back `partitionLineage` and the in-write lineage
+    * agree on Σrows_out, the XOR of the checksums and the merged-HLL
+    * estimate; and there is one lineage row per non-empty written
+    * partition, with that partition's own counters. Each write task
+    * writes one file named after its partition, so the files are the
+    * written partitions. */
+  private def assertLineageMatchesReadBack(io: TableIO, runId: String): Unit = {
+    val metrics = io.read(spark, s"$runId/metrics")
+    for ((stage, keys) <- StageKeys) {
+      val written = metrics.where(col("stage") === stage)
+      val table = io.read(spark, s"$runId/$stage")
+      assert(totals(written) === totals(partitionLineage(table, keys)), stage)
+
+      val perFile = table
+        .groupBy(regexp_extract(input_file_name(), "part-(\\d+)-", 1).cast("int"))
+        .agg(count(lit(1)), bit_xor(xxhash64(keys.map(col): _*)))
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+      val rows = written.select("partition_id", "rows_out", "checksum")
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+      assert(rows.map(_._1).distinct.length === rows.length, s"$stage: repeated partition")
+      assert(rows.toSet === perFile.toSet, stage)
+      if (stage == "docs") assert(rows.length > 1, "docs wrote a single partition")
+    }
+  }
+
+  private def totals(lineage: DataFrame): (Long, Long, Double) = {
+    val r = lineage.agg(
+      coalesce(sum("rows_out"), lit(0L)),
+      coalesce(bit_xor(col("checksum")), lit(0L)),
+      hll_estimate(hll_merge_agg(col("hll_sketch"), 12))).head()
+    (r.getLong(0), r.getLong(1), r.getDouble(2))
+  }
+
+  /** rows_in(docs) is the transcript row count and rows_in(N) equals
+    * Σrows_out(N-1) on every lineage row of stage N. */
+  private def assertRowsInChain(io: TableIO, runId: String): Unit = {
+    val byStage = io.read(spark, s"$runId/metrics").groupBy("stage")
+      .agg(min("rows_in"), max("rows_in"), sum("rows_out"))
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    assert(byStage("docs")._1 === turns.size.toLong)
+    assert(byStage("docs")._2 === turns.size.toLong)
+    for (Seq(prev, next) <- Stages.sliding(2)) {
+      val (lo, hi, _) = byStage(next)
+      assert(lo === byStage(prev)._3, s"rows_in($next)")
+      assert(hi === byStage(prev)._3, s"rows_in($next)")
+    }
+  }
+
+  /** Jobs submitted while `f` runs. */
+  private def jobsOf(f: => Any): Int = {
+    val sc = spark.sparkContext
+    GraftTestBridge.drainListeners(sc)
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      GraftTestBridge.drainListeners(sc)
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("in-write lineage matches the read-back oracle through ParquetTableIO") {
+    val io = new ParquetTableIO(Files.createTempDirectory("lineage").toString)
+    new CheckpointedDedup(io, cfg, "run-P").run(splitTdf)
+    assertLineageMatchesReadBack(io, "run-P")
+    assertRowsInChain(io, "run-P")
+  }
+
+  test("in-write lineage matches the read-back oracle through CatalogTableIO") {
+    val io = CatalogTableIOSpec.freshIo(spark, "graft_lineage_t1")
+    new CheckpointedDedup(io, cfg, "runL").run(splitTdf)
+    assertLineageMatchesReadBack(io, "runL")
+    assertRowsInChain(io, "runL")
+  }
+
+  test("rows_in chains from lineage totals after a mid-pipeline resume") {
+    val root = Files.createTempDirectory("lineage").toString
+    val io = new ParquetTableIO(root)
+    new CheckpointedDedup(io, cfg, "run-R").run(splitTdf)
+    // a crash just after 'bands': later tables and their lineage are gone
+    val kept = io.read(spark, "run-R/metrics").where(col("stage").isin(Stages.take(3): _*))
+    val rows = kept.collect()
+    io.write(spark.createDataFrame(java.util.Arrays.asList(rows: _*), kept.schema), "run-R/metrics")
+    for (s <- Stages.drop(3)) deleteDir(new java.io.File(s"$root/run-R/$s"))
+
+    val resumed = new CheckpointedDedup(io, cfg, "run-R")
+    resumed.run(splitTdf)
+    assert(resumed.computedStages === Stages.drop(3))
+    assertLineageMatchesReadBack(io, "run-R")
+    assertRowsInChain(io, "run-R")
+  }
+
+  test("job budget: a no-op resume submits one job, a table read none") {
+    val root = Files.createTempDirectory("lineage").toString
+    val io = new ParquetTableIO(root)
+    val first = new CheckpointedDedup(io, cfg, "run-J")
+    val expected = first.run(tdf).collect().map(_.toString).sorted
+
+    var resumed: DataFrame = null
+    val resumeJobs = jobsOf {
+      val p = new CheckpointedDedup(io, cfg, "run-J")
+      resumed = p.run(tdf)
+      assert(p.computedStages === Nil)
+    }
+    assert(resumeJobs === 1, "a no-op resume reads the metrics table once and nothing else")
+    assert(resumed.collect().map(_.toString).sorted === expected)
+
+    for (name <- Stages :+ "metrics") {
+      var read: DataFrame = null
+      assert(jobsOf { read = io.read(spark, s"run-J/$name"); read.schema } === 0, name)
+      // the footer schema is the schema Spark's own inference finds
+      assert(read.schema === spark.read.parquet(s"$root/run-J/$name").schema, name)
+    }
+    assert(ParquetTableIO.footerSchema(spark, s"$root/run-J/absent").isEmpty)
+  }
+}
+
+object CheckpointLineageSpec {
+  val Stages: List[String] = List("docs", "signatures", "bands", "cand_pairs",
+    "verified_pairs", "cluster_assignments")
+
+  /** The lineage key columns CheckpointedDedup uses per stage. */
+  val StageKeys: Seq[(String, Seq[String])] = Stages.zip(Seq(
+    Seq("conv_id"), Seq("conv_id"), Seq("conv_id", "band_key"), Seq("a", "b"),
+    Seq("a", "b"), Seq("conv_id", "cluster_id")))
+
+  /** The read-back lineage the in-write lineage replaced, kept as its
+    * oracle: per-partition counters of a committed table, partitioned by
+    * read split. */
+  def partitionLineage(df: DataFrame, keyCols: Seq[String]): DataFrame =
+    df.withColumn("partition_id", spark_partition_id())
+      .groupBy(col("partition_id"))
+      .agg(
+        count(lit(1)).as("rows_out"),
+        coalesce(bit_xor(xxhash64(keyCols.map(col): _*)), lit(0L)).as("checksum"),
+        hll_agg(col(keyCols.head), 12).as("hll_sketch"))
+
+  def deleteDir(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(deleteDir)
+    f.delete()
+  }
+}

@@ -77,4 +77,31 @@ class ResumeSpec extends AnyFunSuite {
     assert(p2.computedStages === Nil)
     assert(a1 === a2)
   }
+
+  test("a vanished table whose lineage stayed is recomputed with one lineage set") {
+    val root = Files.createTempDirectory("ckpt").toString
+    val io = new ParquetTableIO(root)
+    val p1 = new CheckpointedDedup(io, cfg, "run-D")
+    val a1 = asgMap(p1.run(tdf))
+    val before = p1.metrics(spark).groupBy("stage").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+    CheckpointLineageSpec.deleteDir(new java.io.File(s"$root/run-D/cand_pairs"))
+    val p2 = new CheckpointedDedup(io, cfg, "run-D")
+    val a2 = asgMap(p2.run(tdf))
+    assert(p2.computedStages === List("cand_pairs"))
+    assert(a2 === a1)
+
+    val m = p2.metrics(spark)
+    val after = m.groupBy("stage").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(after === before, "every stage keeps exactly one lineage set")
+    val cand = m.where(col("stage") === "cand_pairs")
+    // one set: a single append (one ts), one row per written partition
+    assert(cand.select("ts").distinct().count() === 1L)
+    val ids = cand.select("partition_id").collect().map(_.getInt(0))
+    assert(ids.distinct.length === ids.length)
+    assert(cand.agg(sum("rows_out")).head().getLong(0) ===
+      io.read(spark, "run-D/cand_pairs").count())
+  }
 }
