@@ -94,20 +94,6 @@ object PairVerify {
     * tens of MB per executor thread for the application lifetime. */
   private final val RetainCap = 1 << 19 // 512k shingles ≈ 4 MB per buffer
 
-  /** Kernel selection: "probe" (open-addressing hash set + probe
-    * intersect — default) vs "merge" (sorted-shingle arrays + merge
-    * intersect). Identical results (same inter/union integers → same
-    * doubles; SimHash votes are order-insensitive — VerifyKernelSpec).
-    * Default from the same-sitting 8/32-thread A/B (VerifyKernelBench,
-    * BENCH/BASELINE.md r5): probe wins 21-37% in BOTH regimes — fresh-B
-    * (no sort on recompute) and memo-hit (the merge's 50/50 x<y branch
-    * mispredicts per element; the probe's near-dup hit branch is
-    * predictable and the table is L2-resident at typical doc sizes).
-    * SPARK_GRAFT_VERIFY_KERNEL=merge re-selects the loser per JVM for
-    * re-measurement. */
-  private[graft] val KernelProbe: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_VERIFY_KERNEL", "probe") == "probe"
-
   /** One side's reusable state: the shingle buffer plus a LAST-SEEN memo.
     * The verify stream arrives from a sort-merge join, so consecutive rows
     * repeat one side's doc (a doc in p pairs is shingled once, not p
@@ -182,10 +168,19 @@ object PairVerify {
     val b = new Side(probe)
   }
   private val scratch: ThreadLocal[Scratch] =
-    ThreadLocal.withInitial(() => new Scratch(KernelProbe))
+    ThreadLocal.withInitial(() => new Scratch(true))
 
-  /** Kernel body on an explicit scratch — the A/B harness and equivalence
-    * spec drive both kernels in one JVM through this. */
+  /** Kernel body on an explicit scratch. Two kernels: "probe"
+    * (open-addressing hash set + probe intersect) is the production one;
+    * "merge" (sorted-shingle arrays + merge intersect) stays as
+    * VerifyKernelSpec's oracle and VerifyKernelBench's baseline. Identical
+    * results (same inter/union integers → same doubles; SimHash votes are
+    * order-insensitive). The probe kernel won the same-sitting 8/32-thread
+    * A/B (VerifyKernelBench, BENCH/BASELINE.md r5) by 21-37% in BOTH
+    * regimes — fresh-B (no sort on recompute) and memo-hit (the merge's
+    * 50/50 x<y branch mispredicts per element; the probe's near-dup hit
+    * branch is predictable and the table is L2-resident at typical doc
+    * sizes). */
   private[graft] def computeWith(s: Scratch, a: UTF8String, b: UTF8String,
                                  k: Int, seed: Long, probe: Boolean): (Double, Int) = {
     if (!s.a.hit(a, k, seed)) s.a.recompute(a, k, seed)
@@ -197,7 +192,7 @@ object PairVerify {
   }
 
   def compute(a: UTF8String, b: UTF8String, k: Int, seed: Long): org.apache.spark.sql.catalyst.InternalRow = {
-    val (j, dist) = computeWith(scratch.get(), a, b, k, seed, KernelProbe)
+    val (j, dist) = computeWith(scratch.get(), a, b, k, seed, probe = true)
     org.apache.spark.sql.catalyst.InternalRow(j, dist)
   }
 }

@@ -116,15 +116,8 @@ object BucketedCorpus {
   def readDocs(spark: SparkSession, dir: String,
                where: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     def filtered(df: DataFrame) = where.map(df.filter).getOrElse(df)
-    // measurement escape hatch (same pattern as SPARK_GRAFT_STRING_PATH /
-    // SPARK_GRAFT_VERIFY_KERNEL): force one path for same-sitting A/Bs
-    val force = sys.env.get("SPARK_GRAFT_DOCS_PATH") // "agg" | "stream"
-    val streaming = force match {
-      case Some("agg") => false
-      case Some("stream") => true
-      case _ => isBucketed(dir) && singleFilePerBucket(dir)
-    }
-    if (streaming) {
+    // the layout picks the path; both give identical docs (DocsSortedSpec)
+    if (isBucketed(dir) && singleFilePerBucket(dir)) {
       // The streaming reconstruction is only correct when each task reads
       // WHOLE bucket files. A bare projection carries no distribution
       // requirement, so Spark's DisableUnnecessaryBucketedScan rule
@@ -143,8 +136,7 @@ object BucketedCorpus {
       // a concurrent query planned in this session inside the window would
       // see the rule disabled (and the finally-restore could clobber a
       // concurrent change). Single-threaded planning per session is the
-      // documented assumption here, as for the other scoped-conf seams
-      // (q28's state sizing, the CC star override).
+      // documented assumption here, as for q28's state sizing.
       val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
       val prior = spark.conf.getOption(key)
       spark.conf.set(key, "false")

@@ -7,6 +7,7 @@ import scala.concurrent.duration._
 import org.apache.spark.sql.{DataFrame, GraftBridge, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.DedupConfig
+import graft.sketch.HllSketch
 
 /** Checkpointed, resumable pipeline runner (SURVEY §2b P10–P12; north rule:
   * "resumable from checkpoint with per-partition lineage + metrics").
@@ -23,10 +24,13 @@ import graft.core.DedupConfig
   * The lineage is computed inside the stage's own write tasks
   * (`PartitionLineageAgg` observed on the written DataFrame), so
   * `partition_id` is the written partition — one row per non-empty output
-  * file. The checksum is an order-insensitive XOR of xxhash64 over the
-  * stage's key columns; the HLL sketch counts distinct values of the first
-  * key column per partition — both are the reference sketch families doing
-  * the metrics job the north star assigns them (SURVEY §2b P12).
+  * file. A stage with no output rows gets one row instead (partition_id
+  * 0, rows_out 0, checksum 0, an empty HLL), so that it too counts as
+  * complete on resume. The checksum is an order-insensitive XOR of
+  * xxhash64 over the stage's key columns; the HLL sketch counts distinct
+  * values of the first key column per partition — both are the reference
+  * sketch families doing the metrics job the north star assigns them
+  * (SURVEY §2b P12).
   *
   * Job budget: a computed stage costs its own write plus the metrics
   * append; a skipped stage costs no job. A run reads the metrics table
@@ -122,7 +126,8 @@ final class CheckpointedDedup(
       // persisted while computing it (verifyPairs' spread, winnow tables)
       DedupPipeline.unpersistIntermediates(spark)
       computedStages = computedStages :+ name
-      val parts = lineageOf(observation)
+      val observed = lineageOf(observation)
+      val parts = if (observed.isEmpty) Seq(EmptyLineage) else observed
       // the table vanished while its lineage stayed: replace, not add to, it
       if (rowsOut.contains(name)) dropLineage(spark, name)
       rowsOut(name) = parts.map(_.getLong(1)).sum
@@ -138,6 +143,10 @@ final class CheckpointedDedup(
 }
 
 object CheckpointedDedup {
+  /** The lineage row of a stage that wrote no rows. */
+  private val EmptyLineage: Row =
+    Row(0, 0L, 0L, new HllSketch(HllSketch.DefaultLgK).serialize())
+
   /** `df` observed by a `PartitionLineageAgg` over `keyCols` (checksum
     * over all of them, HLL over the first), plus the Observation that
     * completes when the returned DataFrame has been written. */

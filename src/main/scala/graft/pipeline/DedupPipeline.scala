@@ -48,11 +48,6 @@ object DedupPipeline {
     new java.util.concurrent.ConcurrentHashMap[SparkSession,
       java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]()
 
-  /** Verify-stage candidate-docs persist (VerifyProbe winner, r5);
-    * SPARK_GRAFT_VERIFY_DPERSIST=0 re-selects the inline loser per JVM. */
-  private def dPersist: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_VERIFY_DPERSIST", "1") != "0"
-
   private def trackPersist(df: DataFrame): DataFrame = {
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     trackedPersists
@@ -375,17 +370,22 @@ object DedupPipeline {
         col("sig._3").as("simhash"))
   }
 
-  /** P5: signatures → bands(conv_id, band_idx, band_key).
+  /** P5: signatures → bands(conv_id, band_key).
     * band_key folds the band index in, so one global shuffle key space
     * serves all bands. Map-side only. */
-  def bands(signatures: DataFrame, cfg: DedupConfig): DataFrame = {
+  def bands(signatures: DataFrame, cfg: DedupConfig): DataFrame =
+    bandsOf(signatures, "conv_id", cfg)
+
+  /** The banding body both key types share: (key, band_key) rows, one per
+    * band, off a frame carrying `key` and `minhash`. */
+  private def bandsOf(sigs: DataFrame, key: String, cfg: DedupConfig): DataFrame = {
     val r = cfg.rowsPerBand
     val keys = transform(
       sequence(lit(0), lit(cfg.bands - 1)),
       i => xxhash64(i, slice(col("minhash"), i * lit(r) + lit(1), lit(r))))
-    signatures
-      .select(col("conv_id"), posexplode(keys).as(Seq("band_idx", "band_key")))
+    sigs.select(col(key), explode(keys).as("band_key"))
   }
+
 
   /** P6: bands → cand_pairs(a, b) with a < b.
     * Chain + star per band bucket via window functions (see scale notes).
@@ -413,69 +413,38 @@ object DedupPipeline {
     * boilerplate bucket is bounded at bucket/S — and connectivity across
     * sub-buckets is restored by chaining the S sub-bucket minima in a
     * second, tiny window pass (≤ S rows per band key). */
-  /** Chain+star edges generated map-side from a SORTED bucket member
-    * array (no window sort): chain = adjacent members, star = first
-    * member to every member beyond the second (the chain already links
-    * first to member 2). Identical edge set to the windowed chainStar
-    * when the array uses the same bucket order. */
-  private[pipeline] def chainStarArrayEdges(ms: Column): Column = concat(
-    filter(zip_with(ms, slice(ms, lit(2), greatest(size(ms) - 1, lit(1))),
-      (a, b) => struct(a.as("a"), b.as("b"))), p => p.getField("b").isNotNull),
-    transform(slice(ms, lit(3), greatest(size(ms) - 2, lit(1))),
-      y => struct(element_at(ms, 1).as("a"), y.as("b"))))
+  def candidatePairs(bands: DataFrame, cfg: DedupConfig): DataFrame =
+    chainStarPairs(bands, "conv_id", Some(xxhash64(col("conv_id"))), cfg)
 
-  /** A/B alternative to candidatePairs (unsalted path): hash-aggregate
-    * per-bucket sorted member arrays, then emit chain+star edges
-    * map-side — replaces the global (band_key, conv_id) window SORT of
-    * the 9.6M-row band stream with a hash aggregation. Bucket arrays are
-    * materialized per key, so this variant is for salt-bounded/advised
-    * streams (the windowed form streams hot buckets in O(1) memory).
-    *
-    * MEASURED (graft.tools.CandAB, 300k convs, identical 110,344-pair
-    * output, empty symmetric difference): window 3.11 s / agg 3.25 s at
-    * 32 cores, window 4.77 s / agg 5.74 s at 8 — the windowed form wins
-    * at both widths AND has the better skew story, so it stays the
-    * production path; this one remains as the measured alternative. */
-  private[graft] def candidatePairsAgg(bands: DataFrame, cfg: DedupConfig): DataFrame = {
-    bands.groupBy(col("band_key"))
-      // members sorted by (xxhash64(conv_id), conv_id) — the same bucket
-      // order the windowed production path uses, so the emitted edge set
-      // is identical
-      .agg(transform(
-        sort_array(collect_list(struct(xxhash64(col("conv_id")).as("h"), col("conv_id")))),
-        s => s.getField("conv_id")).as("ms"))
-      .where(size(col("ms")) >= 2)
-      .select(explode(chainStarArrayEdges(col("ms"))).as("e"))
-      .where(col("e.a") =!= col("e.b"))
-      .select(least(col("e.a"), col("e.b")).as("a"),
-        greatest(col("e.a"), col("e.b")).as("b"))
-      .distinct()
-  }
-
-  def candidatePairs(bands: DataFrame, cfg: DedupConfig): DataFrame = {
-    val salted = if (cfg.bandSalt > 1) {
-      bands.withColumn("salt", pmod(xxhash64(col("conv_id")), lit(cfg.bandSalt)))
-    } else bands.withColumn("salt", lit(0L))
+  /** The chain+star candidate body both key types share. Bucket members
+    * are ordered by (keyHash, key), or by key alone when `keyHash` is None
+    * — the id key IS xxhash64(conv_id), so while ids are unique both keys
+    * see the same total order. The salt is pmod(keyHash, S) (the id
+    * itself for the id key); each sub-bucket enters the across pass
+    * through its min(key). Returns (a, b) keys, a < b. */
+  private def chainStarPairs(bands: DataFrame, key: String, keyHash: Option[Column],
+                             cfg: DedupConfig): DataFrame = {
+    val k = col(key)
+    // Members are ordered by a 64-bit hash first, not by conv_id:
+    // chain+star connectivity holds under ANY deterministic total order,
+    // and the window sort — this stage's dominant cost — compares one
+    // 8-byte long (ties broken by the string) instead of UTF8 strings.
+    // Measured on the 1M-conv band stream: 13.8 → 11.1 s at 32 cores,
+    // 19.6 → 18.9 s at 8; stage 8→32 ratio 0.36 → 0.43.
+    val order = if (keyHash.isDefined) Seq(col("h"), k) else Seq(k)
 
     def chainStar(df: DataFrame, parts: Seq[String]): DataFrame = {
       val pcols = parts.map(col)
-      // Bucket members are ordered by (xxhash64(conv_id), conv_id), not by
-      // conv_id: chain+star connectivity holds under ANY deterministic
-      // total order, and the window sort — this stage's dominant cost —
-      // compares one 8-byte long (ties broken by the string) instead of
-      // UTF8 strings. Measured (CandAB, 1M-conv band stream): 13.8 → 11.1 s
-      // at 32 cores, 19.6 → 18.9 s at 8; stage 8→32 ratio 0.36 → 0.43.
-      val ord = Seq(col("h"), col("conv_id"))
-      val w = Window.partitionBy(pcols: _*).orderBy(ord: _*)
+      val w = Window.partitionBy(pcols: _*).orderBy(order: _*)
       val wAll = Window.partitionBy(pcols: _*)
-        .orderBy(ord: _*)
+        .orderBy(order: _*)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       // ONE pass over the window output: both edge kinds are emitted from
       // the same row via a 2-element explode (a union of two filters over
       // the window subtree would shuffle + sort the band stream TWICE —
       // Spark has no automatic subtree reuse without an explicit persist).
-      // chain edge: (prev, conv_id) when prev exists; star edge:
-      // (bucket_first, conv_id) when it adds information beyond the chain
+      // chain edge: (prev, key) when prev exists; star edge:
+      // (bucket_first, key) when it adds information beyond the chain
       // (null `when` arms drop out in the filter below).
       //
       // The repartition is EXPLICIT for the same reason as verifyPairs
@@ -483,19 +452,19 @@ object DedupPipeline {
       // (35 partitions at 32 cores, 14 at 8 on the 1M band stream) and
       // this stage's uniform sort-heavy tasks then run in two waves with
       // a mostly-idle second wave — measured 7.6 s of the 14.7 s stage
-      // wall at 32 cores. An explicit partition count is honored by AQE,
-      // keeps tasks ~1/8 the size (cache-friendlier sorts), and satisfies
-      // the window's required distribution so no second exchange appears.
+      // wall at 32 cores (id key: 34 tasks, median 1.88 s, ~1.8 s of idle
+      // width). An explicit partition count is honored by AQE, keeps
+      // tasks ~1/8 the size (cache-friendlier sorts), and satisfies the
+      // window's required distribution so no second exchange appears.
       val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
-      df
-        .repartition(nParts, pcols: _*)
-        .withColumn("h", xxhash64(col("conv_id")))
-        .withColumn("prev", lag(col("conv_id"), 1).over(w))
-        .withColumn("bmin", first(col("conv_id")).over(wAll))
+      val spread = df.repartition(nParts, pcols: _*)
+      keyHash.fold(spread)(h => spread.withColumn("h", h))
+        .withColumn("prev", lag(k, 1).over(w))
+        .withColumn("bmin", first(k).over(wAll))
         .select(explode(array(
-          struct(col("prev").as("a"), col("conv_id").as("b")),
-          struct(when(col("bmin") =!= col("conv_id") && col("bmin") =!= col("prev"),
-            col("bmin")).as("a"), col("conv_id").as("b")))).as("e"))
+          struct(col("prev").as("a"), k.as("b")),
+          struct(when(col("bmin") =!= k && col("bmin") =!= col("prev"),
+            col("bmin")).as("a"), k.as("b")))).as("e"))
         .where(col("e.a").isNotNull)
         // orient a < b explicitly (hash order is not conv_id order); self
         // edges (band_key hash collisions within one conv) drop here
@@ -505,16 +474,17 @@ object DedupPipeline {
     }
 
     if (cfg.bandSalt > 1) {
-      val within = chainStar(salted.select(col("band_key"), col("salt"), col("conv_id")),
+      val salted = bands.withColumn("salt", pmod(keyHash.getOrElse(k), lit(cfg.bandSalt.toLong)))
+      val within = chainStar(salted.select(col("band_key"), col("salt"), k),
         Seq("band_key", "salt"))
       // sub-bucket minima, then link them per band key (tiny: ≤ S rows/key)
       val minima = salted.groupBy(col("band_key"), col("salt"))
-        .agg(min(col("conv_id")).as("conv_id"))
-      val across = chainStar(minima.select(col("band_key"), col("conv_id")), Seq("band_key"))
+        .agg(min(k).as(key))
+      val across = chainStar(minima.select(col("band_key"), k), Seq("band_key"))
       within.unionByName(across)
         .distinct()
     } else {
-      chainStar(bands.select(col("band_key"), col("conv_id")), Seq("band_key"))
+      chainStar(bands.select(col("band_key"), k), Seq("band_key"))
         .distinct()
     }
   }
@@ -575,13 +545,26 @@ object DedupPipeline {
     // persisted for the same reason as the id path (verifyPairsById): both
     // side joins consume d, and recomputing it re-scans the full docs
     // cache twice (VerifyProbe A/B — see verifyPairsById).
-    val d0 = docs.select(col("conv_id"), col("doc"))
-      .join(candIds, Seq("conv_id"), "left_semi")
-    val d = if (dPersist) trackPersist(d0) else d0
+    val d = trackPersist(docs.select(col("conv_id"), col("doc"))
+      .join(candIds, Seq("conv_id"), "left_semi"))
 
-    spread
+    verifyGate(spread
       .join(d.select(col("conv_id").as("a"), col("doc").as("doc_a")), Seq("a"))
-      .join(d.select(col("conv_id").as("b"), col("doc").as("doc_b")), Seq("b"))
+      .join(d.select(col("conv_id").as("b"), col("doc").as("doc_b")), Seq("b")),
+      col("a"), col("b"), cfg)
+  }
+
+  /** The verify gate both key types share — the recall contract — over
+    * joined candidate rows carrying `doc_a` and `doc_b`: pair_verify,
+    * Jaccard ≥ cfg.tauJaccard, then the length-adaptive LCS check.
+    * Returns verified_pairs(a, b, jaccard, simhash_dist, simhash_ok), where
+    * `a` and `b` are the caller's output columns, named a and b: the
+    * string caller's candidates are already oriented a < b and pass
+    * through, the id caller orients the conv_ids it joined with
+    * least/greatest (id order is not conv_id order). */
+  private def verifyGate(joined: DataFrame, a: Column, b: Column,
+                         cfg: DedupConfig): DataFrame =
+    joined
       .withColumn("pv",
         graft.functions.pair_verify(col("doc_a"), col("doc_b"), cfg.shingleK, cfg.seed))
       .withColumn("jaccard", col("pv.jaccard"))
@@ -593,10 +576,9 @@ object DedupPipeline {
       .where(graft.functions.lcs_at_least(col("doc_a"), col("doc_b"),
         least(lit(cfg.tauLcs),
           (least(length(col("doc_a")), length(col("doc_b"))) / 2).cast("int"))))
-      .select(col("a"), col("b"), col("jaccard"),
+      .select(a, b, col("jaccard"),
         col("pv.simhash_dist").as("simhash_dist"),
         (col("pv.simhash_dist") <= lit(cfg.simhashMaxDist)).as("simhash_ok"))
-  }
 
   /** Complete near-dup PAIR listing: verified edges → connected
     * components → exhaustive intra-cluster verification. Chain+star keeps
@@ -661,6 +643,17 @@ object DedupPipeline {
       transform(slice(ms, i + lit(2), size(ms)), y =>
         struct(x.as("a"), y.as("b")))))
 
+  /** Chain+star edges generated map-side from a SORTED member array (no
+    * window sort): chain = sorted-adjacent members, star = first member to
+    * every member beyond the second (the chain already links first to
+    * member 2). The same edge set as chainStarPairs' window over a bucket
+    * in the same order, and LINEAR in the array size. */
+  private def chainStarArrayEdges(ms: Column): Column = concat(
+    filter(zip_with(ms, slice(ms, lit(2), greatest(size(ms) - 1, lit(1))),
+      (a, b) => struct(a.as("a"), b.as("b"))), p => p.getField("b").isNotNull),
+    transform(slice(ms, lit(3), greatest(size(ms) - 2, lit(1))),
+      y => struct(element_at(ms, 1).as("a"), y.as("b"))))
+
   /** Internal: the weighted candidate-pair stream (a, b, wt, tier) BEFORE
     * per-pair aggregation — exposed for the linear-growth scale tests.
     * tier 1 rows carry wt = 1 (exact co-occurrence counts); tier 2 rows
@@ -699,14 +692,7 @@ object DedupPipeline {
     // minimum observation count. tier2PairRecall extends PAIR-level recall
     // into docs whose vocabulary is >allPairsCap-frequency (w.h.p., not
     // guaranteed), at the cost of generating the sub-bucket quadratic.
-    def chainStarEdges(sub: Column): Column = concat(
-      // chain: sorted-adjacent members
-      filter(zip_with(sub, slice(sub, lit(2), greatest(size(sub) - 1, lit(1))),
-        (a, b) => struct(a.as("a"), b.as("b"))), p => p.getField("b").isNotNull),
-      // star: sub-bucket min to every non-adjacent member
-      transform(slice(sub, lit(3), greatest(size(sub) - 2, lit(1))),
-        y => struct(element_at(sub, 1).as("a"), y.as("b"))))
-    val edgeGen: Column => Column = if (tier2PairRecall) arrayCombos else chainStarEdges
+    val edgeGen: Column => Column = if (tier2PairRecall) arrayCombos else chainStarArrayEdges
     val t2pairs = t2
       .select(col("S"), explode(flatten(transform(col("subs"), sub => edgeGen(sub)))).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"), col("S").cast("long").as("wt"))
@@ -765,11 +751,11 @@ object DedupPipeline {
     // connectivity are key-insensitive and unchanged; the tier-2 sub-bucket
     // split hashes the key VALUE (pmod(xxhash64(key, band), S)), so the
     // tier-2 probabilistic pair sample differs between the long-keyed and
-    // string-fallback paths (ADVICE r4) — A/B runs via
-    // SPARK_GRAFT_STRING_PATH compare recall, not candidate identity.
+    // string-fallback paths (ADVICE r4): the two compare on recall, not
+    // on candidate identity.
     // Guarded by the same uniqueness check + string fallback as run().
     val u = docs.agg(count(lit(1)), count_distinct(xxhash64(col("conv_id")))).head()
-    if (u.getLong(0) == u.getLong(1) && !sys.env.contains("SPARK_GRAFT_STRING_PATH")) {
+    if (u.getLong(0) == u.getLong(1)) {
       val idDocs = docs.select(xxhash64(col("conv_id")).as("conv_id"), col("doc"))
       val idPairs = winnowCandidatePairsKeyed(idDocs, k, w, cfg, minFpOverlap,
         allPairsCap, subBucketSize, stopFpFreq, tier2PairRecall)
@@ -1055,17 +1041,9 @@ object DedupPipeline {
     // 256 in an interleaved A/B (star_on 3.1-3.2 s vs 2.4-2.5 s; 64
     // partitions likewise) — the star wall at this size is the sequential
     // job barriers per run, not per-task launch overhead, and 256 small
-    // tasks overlap stragglers/GC pauses better than 32 larger sorts. The
-    // env override stays for future same-sitting A/Bs; the default keeps
-    // the session conf (scoped-conf plumbing retained so an override is
-    // honored by every round exchange, then restored before the lazy
-    // final join below).
-    val starParts = sys.env.get("SPARK_GRAFT_CC_STAR_PARTS").map(_.toInt)
-      .getOrElse(spark.sessionState.conf.numShufflePartitions)
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", starParts.toString)
-    val converged0 = try {
-
+    // tasks overlap stragglers/GC pauses better than 32 larger sorts. So
+    // the round exchanges keep the session's shuffle-partition count.
+    //
     // Round-latency audit (r6): at 357k edges the star wall is the chain
     // of sequential job barriers, not shuffle bytes — so the up-front
     // distinct+checkpoint pass is GONE (every production edge stream —
@@ -1118,12 +1096,13 @@ object DedupPipeline {
       } else edges1.where(col("u") =!= col("v"))
 
     // One JOB per round: checkpoint the round's RDD and compute the
-    // convergence fingerprint (count + xor of a per-row 64-bit hash —
-    // internal detection only, same collision class as the old
-    // bit_xor(xxhash64) agg) INSIDE the materializing runJob, then wrap
-    // the checkpointed RDD back as a flat-plan DataFrame. The old form
-    // paid a second agg job per round just to read back what the
-    // materialization had already streamed past.
+    // convergence fingerprint (roundFingerprint: count + xor of a mixed
+    // per-row 64-bit hash) INSIDE the materializing runJob, then wrap the
+    // checkpointed RDD back as a flat-plan DataFrame. The old form paid a
+    // second agg job per round just to read back what the materialization
+    // had already streamed past. The fingerprint is 64 bits, so a
+    // collision can still end the loop one round early; nothing
+    // certifies convergence yet.
     val edgeSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("u",
         org.apache.spark.sql.types.StringType, nullable = true),
@@ -1137,18 +1116,7 @@ object DedupPipeline {
       // rows are reused by the scan/exchange — copy before caching
       val rdd = nextDf.queryExecution.toRdd.map(_.copy()).localCheckpoint()
       val partFps = spark.sparkContext.runJob(rdd,
-        (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-          var c = 0L
-          var x = 0L
-          while (it.hasNext) {
-            val r = it.next()
-            val hu = if (r.isNullAt(0)) 0 else r.getUTF8String(0).hashCode
-            val hv = if (r.isNullAt(1)) 0 else r.getUTF8String(1).hashCode
-            c += 1
-            x ^= (hu.toLong << 32) ^ (hv.toLong & 0xffffffffL)
-          }
-          (c, x)
-        })
+        (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => roundFingerprint(it))
       val fp = (partFps.map(_._1).sum, partFps.map(_._2).foldLeft(0L)(_ ^ _))
       converged = fp == prevFp
       prevFp = fp
@@ -1158,90 +1126,75 @@ object DedupPipeline {
       iter += 1
     }
     if (ccProf) println(s"[cc] global rounds: $iter")
-    edges
-    } finally spark.conf.set("spark.sql.shuffle.partitions", savedParts)
 
     // After convergence every edge is (member, root) with root = component min.
-    val roots = converged0.groupBy(col("u")).agg(min(col("v")).as("root"))
+    val roots = edges.groupBy(col("u")).agg(min(col("v")).as("root"))
     allNodes.select(col("conv_id"))
       .join(roots.select(col("u").as("conv_id"), col("root")), Seq("conv_id"), "left")
       .select(col("conv_id"),
         coalesce(col("root"), col("conv_id")).as("cluster_id"))
   }
 
+  /** A CC round's convergence fingerprint over one partition of (u, v)
+    * string edge rows: (row count, XOR of one 64-bit hash per row). Each
+    * row packs hashCode(u) and hashCode(v) into one long and mixes it
+    * with fmix64 BEFORE the fold, so the fold couples u with its own v: a
+    * round that only re-pairs labels ({(a,x),(b,y)} → {(a,y),(b,x)})
+    * changes the XOR. Folding the unmixed halves XORs each column on its
+    * own, and such a swap cancels out. */
+  private[pipeline] def roundFingerprint(
+      it: Iterator[org.apache.spark.sql.catalyst.InternalRow]): (Long, Long) = {
+    var c = 0L
+    var x = 0L
+    while (it.hasNext) {
+      val r = it.next()
+      val hu = if (r.isNullAt(0)) 0 else r.getUTF8String(0).hashCode
+      val hv = if (r.isNullAt(1)) 0 else r.getUTF8String(1).hashCode
+      c += 1
+      x ^= MinHasher.mix64((hu.toLong << 32) | (hv.toLong & 0xffffffffL))
+    }
+    (c, x)
+  }
+
   // ---- id-keyed internal path --------------------------------------------
   //
-  // Between the scan and the final output the pipeline keys docs by
-  // id = xxhash64(conv_id) instead of the conv_id string. Motivation is
-  // byte traffic through the shuffle/sort stages: at high core counts the
+  // runWithDocs (and with it run, q12, streaming and the benches) keys docs
+  // by id = xxhash64(conv_id) between the scan and the final output;
+  // CheckpointedDedup (graft.Main), q09–q11 and SkewTools keep the conv_id
+  // string. Each stage has ONE body both keys call — bandsOf,
+  // chainStarPairs, verifyGate — so the key choice changes the key column
+  // and the bucket order, not the stage. Motivation for the id key is byte
+  // traffic through the shuffle/sort stages: at high core counts the
   // shared memory bus is the scarce resource (BENCH/BASELINE.md MemBw:
   // per-thread DRAM bandwidth at 32 threads is ~7x lower than at 8), so a
   // fixed 8-byte sort/join key in place of a variable-length UTF8 string
   // (+16 bytes/row in UnsafeRow terms, plus pointer-chasing comparisons)
-  // directly lifts the wide-cluster legs. The banding window ALREADY
-  // ordered members by xxhash64(conv_id) — the id path just stops carrying
-  // the string alongside its own hash. conv_id strings re-enter through
-  // the verification join (they ride with the doc text, which dominates
-  // that join's bytes anyway), so no extra mapping join exists.
+  // directly lifts the wide-cluster legs. The banding window orders
+  // string members by (xxhash64(conv_id), conv_id) — the id key just
+  // stops carrying the string alongside its own hash. conv_id strings
+  // re-enter through the verification join (they ride with the doc text,
+  // which dominates that join's bytes anyway), so no extra mapping join
+  // exists. The two verify join preambles stay separate on purpose: the
+  // string one lets AQE pick the spread width (small query and resume
+  // streams), the id one fixes it (the 1M in-memory waves).
   //
   // Correctness: ids are verified globally unique with one cheap
   // aggregation over the persisted docs (count vs count_distinct; at 10^6
   // docs the collision probability is ~3e-8, at 10^9 ~3e-2 — the check is
-  // NOT optional); on a collision run() falls back to the string path,
-  // whose candidate order (xxhash64(conv_id), conv_id) the id order
-  // refines, producing the identical edge set when ids are unique.
+  // NOT optional); on a collision runWithDocs falls back to the string
+  // key, whose candidate order (xxhash64(conv_id), conv_id) the id order
+  // equals while ids are unique, so both keys give the identical edge set
+  // (KeyEquivalenceSpec).
 
   /** P5, id form: bands(id, band_key). Same band keys as `bands`. */
-  private[graft] def bandsById(sigs: DataFrame, cfg: DedupConfig): DataFrame = {
-    val r = cfg.rowsPerBand
-    val keys = transform(
-      sequence(lit(0), lit(cfg.bands - 1)),
-      i => xxhash64(i, slice(col("minhash"), i * lit(r) + lit(1), lit(r))))
-    sigs.select(col("id"), explode(keys).as("band_key"))
-  }
+  private[graft] def bandsById(sigs: DataFrame, cfg: DedupConfig): DataFrame =
+    bandsOf(sigs, "id", cfg)
 
   /** P6, id form: chain+star per band bucket ordered by id — the same
-    * total order as the public path (id IS xxhash64(conv_id)), minus the
+    * total order as the string key (id IS xxhash64(conv_id)), minus the
     * string payload in the window sort. Returns (a, b) ids, a < b. */
-  private[graft] def candidatePairsById(bands: DataFrame, cfg: DedupConfig): DataFrame = {
-    def chainStar(df: DataFrame, parts: Seq[String]): DataFrame = {
-      val pcols = parts.map(col)
-      val w = Window.partitionBy(pcols: _*).orderBy(col("id"))
-      val wAll = Window.partitionBy(pcols: _*).orderBy(col("id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // EXPLICIT repartition for the same wave-quantization reason as the
-      // string path's chainStar (r5): left to AQE, the window exchange on
-      // the fused sig+band stream coalesces to ~cores (34 partitions at 32
-      // cores on the 1M-conv corpus — BenchStages r6: 34 tasks, med 1.88 s
-      // → a 2-wave stage with a 2-task second wave, ~1.8 s of idle width).
-      // An explicit count is honored by AQE and satisfies the window's
-      // required distribution, so no second exchange appears.
-      val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
-      df
-        .repartition(nParts, pcols: _*)
-        .withColumn("prev", lag(col("id"), 1).over(w))
-        .withColumn("bmin", first(col("id")).over(wAll))
-        .select(explode(array(
-          struct(col("prev").as("a"), col("id").as("b")),
-          struct(when(col("bmin") =!= col("id") && col("bmin") =!= col("prev"),
-            col("bmin")).as("a"), col("id").as("b")))).as("e"))
-        .where(col("e.a").isNotNull)
-        .where(col("e.a") =!= col("e.b"))
-        .select(least(col("e.a"), col("e.b")).as("a"),
-          greatest(col("e.a"), col("e.b")).as("b"))
-    }
-    if (cfg.bandSalt > 1) {
-      val salted = bands.withColumn("salt", pmod(col("id"), lit(cfg.bandSalt.toLong)))
-      val within = chainStar(salted.select(col("band_key"), col("salt"), col("id")),
-        Seq("band_key", "salt"))
-      val minima = salted.groupBy(col("band_key"), col("salt"))
-        .agg(min(col("id")).as("id"))
-      val across = chainStar(minima.select(col("band_key"), col("id")), Seq("band_key"))
-      within.unionByName(across).distinct()
-    } else {
-      chainStar(bands.select(col("band_key"), col("id")), Seq("band_key")).distinct()
-    }
-  }
+  private[graft] def candidatePairsById(bands: DataFrame, cfg: DedupConfig): DataFrame =
+    chainStarPairs(bands, "id", None, cfg)
 
   /** P7, id form: candidate (a, b) id pairs verified against docs carrying
     * (id, conv_id, doc). Output schema and orientation (a < b
@@ -1266,26 +1219,12 @@ object DedupPipeline {
     // isn't stalled there), so the gain lands on 8→32 efficiency. At 10^12
     // turns candidates are a tiny fraction of the corpus, so the extra
     // cache is small while the avoided second full-corpus pass dominates.
-    // SPARK_GRAFT_VERIFY_DPERSIST=0 re-selects the inline plan per JVM for
-    // future same-sitting A/Bs.
-    val d0 = docsWithId.select(col("id"), col("conv_id"), col("doc"))
-      .join(candIds, Seq("id"), "left_semi")
-    val d = if (dPersist) trackPersist(d0) else d0
-    spread
+    val d = trackPersist(docsWithId.select(col("id"), col("conv_id"), col("doc"))
+      .join(candIds, Seq("id"), "left_semi"))
+    verifyGate(spread
       .join(d.select(col("id").as("a"), col("conv_id").as("ca"), col("doc").as("doc_a")), Seq("a"))
-      .join(d.select(col("id").as("b"), col("conv_id").as("cb"), col("doc").as("doc_b")), Seq("b"))
-      .withColumn("pv",
-        graft.functions.pair_verify(col("doc_a"), col("doc_b"), cfg.shingleK, cfg.seed))
-      .withColumn("jaccard", col("pv.jaccard"))
-      .where(col("jaccard") >= lit(cfg.tauJaccard))
-      .where(graft.functions.lcs_at_least(col("doc_a"), col("doc_b"),
-        least(lit(cfg.tauLcs),
-          (least(length(col("doc_a")), length(col("doc_b"))) / 2).cast("int"))))
-      .select(least(col("ca"), col("cb")).as("a"),
-        greatest(col("ca"), col("cb")).as("b"),
-        col("jaccard"),
-        col("pv.simhash_dist").as("simhash_dist"),
-        (col("pv.simhash_dist") <= lit(cfg.simhashMaxDist)).as("simhash_ok"))
+      .join(d.select(col("id").as("b"), col("conv_id").as("cb"), col("doc").as("doc_b")), Seq("b")),
+      least(col("ca"), col("cb")).as("a"), greatest(col("ca"), col("cb")).as("b"), cfg)
   }
 
   /** Full pipeline: transcripts → cluster_assignments(conv_id, cluster_id). */
@@ -1316,35 +1255,27 @@ object DedupPipeline {
         graft.functions.text_signature(col("doc"), cfg.shingleK, cfg.numHashes, cfg.seed))
       .select(col("id"), col("sig.minhash").as("minhash"))
     val sigs = if (cfg.bandSalt > 1) trackPersist(sigs0) else sigs0
-    // measurement escape hatch: force the string path for A/B runs
-    val forceString = sys.env.contains("SPARK_GRAFT_STRING_PATH")
-    // xxhash64 collision (probability ~n²/2^65): identical semantics on
-    // string keys; candidate order (xxhash64(conv_id), conv_id) is the
-    // order the id path refines
-    def stringPath(): DataFrame = {
+    val assigned = connectedComponents(
+      verifyPairsById(candidatePairsById(bandsById(sigs, cfg), cfg), docs, cfg),
+      docs.select(col("conv_id")))
+    // xxhash64-injectivity audit, POST-HOC off the docs cache (one row
+    // per conversation). connectedComponents materializes the edge set
+    // internally, so by this point docs is cached and the agg is a
+    // ~0.1 s cache read. The former EAGER probe (rawIds.distinct + agg
+    // before the main DAG) was a whole extra column-pruned corpus scan
+    // plus a distinct shuffle — at 10^12 turns a full extra pass over
+    // the conv_id column, and a width-invariant ~1-3 s on every bench
+    // leg (ProbeCost: 3.2/2.9 s cold at 8/32 cores). Optimism is safe:
+    // on the ~2^-45 collision (probability ~n²/2^65) the id-keyed work is
+    // discarded unseen and the string key recomputes identical semantics.
+    val u = docs.agg(count(lit(1)), count_distinct(col("id"))).head()
+    if (u.getLong(0) == u.getLong(1)) assigned
+    else {
       val sigsStr = trackPersist(signatures(docs, cfg)
         .select(col("conv_id"), col("minhash")))
       connectedComponents(
         verifyPairs(candidatePairs(bands(sigsStr, cfg), cfg), docs, cfg),
         docs.select(col("conv_id")))
-    }
-    if (forceString) stringPath()
-    else {
-      val assigned = connectedComponents(
-        verifyPairsById(candidatePairsById(bandsById(sigs, cfg), cfg), docs, cfg),
-        docs.select(col("conv_id")))
-      // xxhash64-injectivity audit, POST-HOC off the docs cache (one row
-      // per conversation). connectedComponents materializes the edge set
-      // internally, so by this point docs is cached and the agg is a
-      // ~0.1 s cache read. The former EAGER probe (rawIds.distinct + agg
-      // before the main DAG) was a whole extra column-pruned corpus scan
-      // plus a distinct shuffle — at 10^12 turns a full extra pass over
-      // the conv_id column, and a width-invariant ~1-3 s on every bench
-      // leg (ProbeCost: 3.2/2.9 s cold at 8/32 cores). Optimism is safe:
-      // on the ~2^-45 collision the id-keyed work is discarded unseen and
-      // the string-keyed pipeline recomputes identical semantics.
-      val u = docs.agg(count(lit(1)), count_distinct(col("id"))).head()
-      if (u.getLong(0) == u.getLong(1)) assigned else stringPath()
     }
   }
 }

@@ -8,9 +8,9 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.PairVerify
 
 /** Same-sitting A/B of the pair-verify kernels, Spark-free (SURVEY r5
-  * candidate #1): "merge" (sorted shingle arrays + merge intersect — the
-  * shipped kernel) vs "probe" (open-addressing hash set + probe
-  * intersect). The pair stream mimics the verify stage's sort-merge
+  * candidate #1): "merge" (sorted shingle arrays + merge intersect —
+  * VerifyKernelSpec's oracle) vs "probe" (open-addressing hash set + probe
+  * intersect — the production kernel). The pair stream mimics the verify stage's sort-merge
   * output: side A repeats in runs (the memo absorbs its recompute), side
   * B is fresh per pair — so the A/B weighs exactly what the stage pays
   * per pair (B's recompute: sort vs hash-insert; the intersection: merge

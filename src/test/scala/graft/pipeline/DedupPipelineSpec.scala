@@ -224,16 +224,23 @@ class DedupPipelineSpec extends AnyFunSuite {
     assert(out === expected)
   }
 
-  test("candidatePairsAgg (measured alternative) emits the identical pair set") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(5)
-    val rows = (1 to 800).map { i =>
-      (f"c$i%04d", i % 7, rnd.nextInt(120).toLong) // collide into ~120 buckets
+  test("CC round fingerprint tells label swaps apart") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    def fp(edges: Seq[(String, String)]): (Long, Long) =
+      DedupPipeline.roundFingerprint(edges.iterator.map { case (u, v) =>
+        InternalRow(UTF8String.fromString(u), UTF8String.fromString(v))
+      })
+    // {(a,x),(b,y)} → {(a,y),(b,x)}: same count, same labels per column
+    assert(fp(Seq("a" -> "x", "b" -> "y")) !== fp(Seq("a" -> "y", "b" -> "x")))
+    val rnd = new scala.util.Random(11)
+    for (_ <- 1 to 200) {
+      val Seq(a, b, x, y) = Seq.fill(4)(rnd.alphanumeric.take(6).mkString)
+      val base = Seq(a -> x, b -> y, "m" -> "r")
+      // order-insensitive, so the fold can run per partition
+      assert(fp(base) === fp(base.reverse))
+      if (a != b && x != y)
+        assert(fp(base) !== fp(Seq(a -> y, b -> x, "m" -> "r")), s"$a $b $x $y")
     }
-    val bands = rows.toDF("conv_id", "band_idx", "band_key")
-    val w = DedupPipeline.candidatePairs(bands, cfg)
-    val a = DedupPipeline.candidatePairsAgg(bands, cfg)
-    assert(w.exceptAll(a).count() === 0L)
-    assert(a.exceptAll(w).count() === 0L)
   }
 }

@@ -104,4 +104,30 @@ class ResumeSpec extends AnyFunSuite {
     assert(cand.agg(sum("rows_out")).head().getLong(0) ===
       io.read(spark, "run-D/cand_pairs").count())
   }
+
+  test("a corpus without duplicates resumes as a full no-op") {
+    val t0 = new java.sql.Timestamp(0L)
+    val unrelated = Seq(
+      "the quick brown fox jumps over the lazy dog beside the quiet river bank",
+      "telescopes gather faint light from distant galaxies on a cold clear night",
+      "a loaf of bread needs flour, water, salt, yeast and a very patient baker"
+    ).zipWithIndex.map { case (text, i) =>
+      Transcripts.Turn(s"conv-$i", 0, "user", text, null, t0)
+    }
+    val df = Transcripts.asDataFrame(spark, unrelated)
+    val io = new ParquetTableIO(Files.createTempDirectory("ckpt").toString)
+    val p1 = new CheckpointedDedup(io, cfg, "run-E")
+    val a1 = asgMap(p1.run(df))
+    assert(a1 === unrelated.map(t => t.conv_id -> t.conv_id).toMap)
+    // the empty stages still leave one lineage row each
+    val empty = p1.metrics(spark).where(col("stage").isin("cand_pairs", "verified_pairs"))
+      .select("stage", "partition_id", "rows_out", "checksum").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
+    assert(empty === Set(("cand_pairs", 0, 0L, 0L), ("verified_pairs", 0, 0L, 0L)))
+
+    val p2 = new CheckpointedDedup(io, cfg, "run-E")
+    val a2 = asgMap(p2.run(df))
+    assert(p2.computedStages === Nil)
+    assert(a2 === a1)
+  }
 }
