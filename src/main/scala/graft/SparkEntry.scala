@@ -640,34 +640,35 @@ object SparkEntry {
       val basePath = new org.apache.hadoop.fs.Path(base)
       val fs = basePath.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (fs.exists(basePath)) fs.delete(basePath, true)
-      // the shared corpus already carries the far-future sentinel row that
-      // closes the session windows (availableNow = one batch, so in-dir
-      // placement is safe); only the stream checkpoint is per-run state
-      val in = s.readStream
-        .schema("conv_id STRING, turn_idx INT, ts TIMESTAMP, text STRING")
-        .parquet(sharedTranscriptsDir(s, dir))
-      val name = "q28docs_" + java.lang.Long.toHexString(System.nanoTime())
       // state-store partition count is fixed at the stream's FIRST batch
       // from the session shuffle-partition conf: at the bench's 256 the
       // per-partition HDFS state commits dominate the query (measured
       // 36+93 summed commit-seconds for 5001 sessions — 85 s wall under
       // post-bench I/O pressure, 13 s of it streaming work); r5 cut the
       // commit fan-out 8x with 32 state partitions, and the r6 interleaved
-      // A/B (Q28Prof, 2 rounds each of 8/16/32) reads 8 partitions
-      // fastest for this state volume (5.2 s vs 5.5-6.2 stream wall —
-      // both batches commit every partition's state files, so fan-out is
-      // paid twice). Production streams size this to their state volume,
-      // not to the batch shuffle width — scoped here, restored after.
-      val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-      val q = try {
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        StreamingDedup.sessionDocs(in, watermark = "1 minute", gap = "5 minutes")
-          .writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", s"$base/ckpt")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", savedParts)
+      // A/B (2 rounds each of 8/16/32 state partitions) reads 8 fastest
+      // for this state volume (5.2 s vs 5.5-6.2 stream wall — both batches
+      // commit every partition's state files, so fan-out is paid twice).
+      // Production streams size this to their state volume, not to the
+      // batch shuffle width. The stream runs in a child session with its
+      // own conf (SQL conf, temp views), so the caller's session is never
+      // touched; the child shares the SparkContext and the cache, and the
+      // memory-sink table is a temp view of the child.
+      val child = s.newSession()
+      child.conf.set("spark.sql.shuffle.partitions", "8")
+      // the shared corpus already carries the far-future sentinel row that
+      // closes the session windows (availableNow = one batch, so in-dir
+      // placement is safe); only the stream checkpoint is per-run state
+      val in = child.readStream
+        .schema("conv_id STRING, turn_idx INT, ts TIMESTAMP, text STRING")
+        .parquet(sharedTranscriptsDir(s, dir))
+      val name = "q28docs_" + java.lang.Long.toHexString(System.nanoTime())
+      val q = StreamingDedup.sessionDocs(in, watermark = "1 minute", gap = "5 minutes")
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", s"$base/ckpt")
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      val streamed = s.table(name).where(col("conv_id") =!= "__sentinel__")
+      val streamed = child.table(name).where(col("conv_id") =!= "__sentinel__")
         .select(col("conv_id"), col("doc").as("doc_stream"))
       val batch = DedupPipeline.buildDocs(docTranscriptsCached(s, dir))
         .select(col("conv_id"), col("doc").as("doc_batch"))

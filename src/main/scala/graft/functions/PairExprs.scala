@@ -173,14 +173,13 @@ object PairVerify {
   /** Kernel body on an explicit scratch. Two kernels: "probe"
     * (open-addressing hash set + probe intersect) is the production one;
     * "merge" (sorted-shingle arrays + merge intersect) stays as
-    * VerifyKernelSpec's oracle and VerifyKernelBench's baseline. Identical
-    * results (same inter/union integers → same doubles; SimHash votes are
-    * order-insensitive). The probe kernel won the same-sitting 8/32-thread
-    * A/B (VerifyKernelBench, BENCH/BASELINE.md r5) by 21-37% in BOTH
-    * regimes — fresh-B (no sort on recompute) and memo-hit (the merge's
-    * 50/50 x<y branch mispredicts per element; the probe's near-dup hit
-    * branch is predictable and the table is L2-resident at typical doc
-    * sizes). */
+    * VerifyKernelSpec's oracle. Identical results (same inter/union
+    * integers → same doubles; SimHash votes are order-insensitive). The
+    * probe kernel won the same-sitting 8/32-thread A/B (BENCH/BASELINE.md
+    * r5) by 21-37% in BOTH regimes — fresh-B (no sort on recompute) and
+    * memo-hit (the merge's 50/50 x<y branch mispredicts per element; the
+    * probe's near-dup hit branch is predictable and the table is
+    * L2-resident at typical doc sizes). */
   private[graft] def computeWith(s: Scratch, a: UTF8String, b: UTF8String,
                                  k: Int, seed: Long, probe: Boolean): (Double, Int) = {
     if (!s.a.hit(a, k, seed)) s.a.recompute(a, k, seed)

@@ -1,6 +1,8 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions.col
 
 /** The production transcript-table layout: bucketed by conv_id.
@@ -97,6 +99,19 @@ object BucketedCorpus {
     bucketIds.nonEmpty && bucketIds.distinct.length == bucketIds.length
   }
 
+  /** Every node of `df`'s executed plan. AdaptiveSparkPlanExec has no
+    * children, so a bare collect stops at it; this recurses into its input
+    * plan instead. Used by the bucket-alignment checks of readDocs and
+    * DedupPipeline.buildDocsSorted. */
+  private[pipeline] def planNodes(df: DataFrame): Seq[SparkPlan] = {
+    def walk(p: SparkPlan): Seq[SparkPlan] =
+      p.collect {
+        case a: AdaptiveSparkPlanExec => walk(a.inputPlan)
+        case q => Seq(q)
+      }.flatten
+    walk(df.queryExecution.executedPlan)
+  }
+
   /** Reconstructed docs(conv_id, doc, n_turns, doc_len) off `dir`, by the
     * cheapest correct path the layout supports:
     *  - bucketed, one sorted file per bucket → streaming one-pass merge
@@ -126,9 +141,10 @@ object BucketedCorpus {
       // maxPartitionBytes boundaries. A conversation straddling a
       // row-group boundary would then emit two partial docs, each still
       // internally sorted, so buildDocsSorted's in-task monotonicity
-      // assert CANNOT catch it (measured: tools/BucketScanProbe — the
-      // projection plans bucketedScan=false and splits; invisible at test
-      // scale only because small files hold one row group). Disable the
+      // assert CANNOT catch it (DocsSortedSpec "multi-row-group bucket
+      // files split under a bare projection; readDocs keeps them whole"
+      // pins it: the projection plans bucketedScan=false and splits once
+      // bucket files hold several row groups). Disable the
       // rule for the planning window (buildDocsSorted resolves its RDD
       // eagerly) and verify on the executed plan; if the scan still is
       // not bucket-aligned, fall back to the always-correct groupBy.
@@ -136,26 +152,19 @@ object BucketedCorpus {
       // a concurrent query planned in this session inside the window would
       // see the rule disabled (and the finally-restore could clobber a
       // concurrent change). Single-threaded planning per session is the
-      // documented assumption here, as for q28's state sizing.
+      // documented assumption here.
       val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
       val prior = spark.conf.getOption(key)
       spark.conf.set(key, "false")
       try {
         val projected = filtered(read(spark, dir))
           .select(col("conv_id"), col("turn_idx"), col("ts"), col("text"))
-        // recurse into adaptive wrappers (AdaptiveSparkPlanExec has no
-        // children, so a bare collect can miss the scan) and require at
-        // least one VISIBLE bucketed scan: an empty collect was vacuously
-        // "aligned" (ADVICE r5), silently taking the streaming path
-        // without the verification this branch promises
-        def scans(p: org.apache.spark.sql.execution.SparkPlan): Seq[Boolean] =
-          p.collect {
-            case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-              scans(a.inputPlan)
-            case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-              Seq(s.bucketedScan)
-          }.flatten
-        val found = scans(projected.queryExecution.executedPlan)
+        // require at least one VISIBLE bucketed scan: an empty collect was
+        // vacuously "aligned" (ADVICE r5), silently taking the streaming
+        // path without the verification this branch promises
+        val found = planNodes(projected).collect {
+          case s: FileSourceScanExec => s.bucketedScan
+        }
         val aligned = found.nonEmpty && found.forall(identity)
         if (aligned) graft.pipeline.DedupPipeline.buildDocsSorted(projected)
         else graft.pipeline.DedupPipeline.buildDocs(filtered(readAuto(spark, dir)))

@@ -35,6 +35,9 @@ import graft.core._
   */
 object DedupPipeline {
 
+  /** connectedComponents' path, probe and round decisions, at INFO. */
+  private val ccLog = org.slf4j.LoggerFactory.getLogger("graft.pipeline.DedupPipeline")
+
   /** Intermediates persisted by pipeline stages (verifyPairs' spread pair
     * stream, the winnow bucket/vocabulary tables, run()'s docs/sigs),
     * tracked per session so long-lived callers can release them: Spark
@@ -69,10 +72,20 @@ object DedupPipeline {
     }
   }
 
-  /** P2: transcripts → docs(conv_id, doc, n_turns, doc_len).
-    * Stable turn ordering: array_sort over struct(turn_idx, ts, text) sorts
-    * lexicographically by field order — deterministic tie-break per
-    * input_hint ("per-turn text equality under stable turn ordering").
+  /** One conversation's doc, as an aggregate over its turn rows: the
+    * turns' text joined by "\n" in stable turn order. array_sort over
+    * struct(turn_idx, ts, text) sorts lexicographically by field order —
+    * deterministic tie-break per input_hint ("per-turn text equality under
+    * stable turn ordering"). buildDocs and StreamingDedup.sessionDocs both
+    * assemble docs with it; q28 checks that they agree. */
+  private[graft] def stableDoc: Column =
+    concat_ws("\n",
+      transform(
+        array_sort(collect_list(struct(col("turn_idx"), col("ts"), col("text")))),
+        s => s.getField("text")))
+
+  /** P2: transcripts → docs(conv_id, doc, n_turns, doc_len), turns in
+    * `stableDoc` order.
     *
     * Layout note for the 10^12-turn table: store it BUCKETED by conv_id
     * (bucketBy + sortBy at write time) and this stage's groupBy runs
@@ -84,12 +97,7 @@ object DedupPipeline {
     transcripts
       .select(col("conv_id"), col("turn_idx"), col("ts"), col("text"))
       .groupBy(col("conv_id"))
-      .agg(
-        concat_ws("\n",
-          transform(
-            array_sort(collect_list(struct(col("turn_idx"), col("ts"), col("text")))),
-            s => s.getField("text"))).as("doc"),
-        count(lit(1)).cast("int").as("n_turns"))
+      .agg(stableDoc.as("doc"), count(lit(1)).cast("int").as("n_turns"))
       .withColumn("doc_len", length(col("doc")).cast("long"))
 
   private val docsSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -139,27 +147,19 @@ object DedupPipeline {
     // by the specs), so only the direct-scan shape is rejected. Production
     // callers go through BucketedCorpus.readDocs, which pins
     // bucketedScan=true before calling here.
-    // AQE hides the tree behind AdaptiveSparkPlanExec (no children), so
-    // collect/exists must recurse into its inputPlan — otherwise an
-    // unaligned split scan under an adaptive wrapper passed the guard
-    // unverified, and the mere PRESENCE of the wrapper counted as
-    // "repartitioned" (ADVICE r5: only a real ShuffleExchange
+    // BucketedCorpus.planNodes looks through AQE's AdaptiveSparkPlanExec:
+    // otherwise an unaligned split scan under an adaptive wrapper passed
+    // the guard unverified, and the mere PRESENCE of the wrapper counted
+    // as "repartitioned" (ADVICE r5: only a real ShuffleExchange
     // re-establishes partitioning).
-    def deepCollect[A](p: org.apache.spark.sql.execution.SparkPlan)(
-        f: PartialFunction[org.apache.spark.sql.execution.SparkPlan, A]): Seq[A] =
-      p.collect {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          deepCollect(a.inputPlan)(f)
-        case q if f.isDefinedAt(q) => Seq(f(q))
-      }.flatten
-    val plan = projected.queryExecution.executedPlan
-    val unalignedScans = deepCollect(plan) {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec if !s.bucketedScan => s
+    val nodes = BucketedCorpus.planNodes(projected)
+    val unalignedScans = nodes.exists {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => !s.bucketedScan
+      case _ => false
     }
-    val repartitioned = deepCollect(plan) {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-    }.nonEmpty
-    require(unalignedScans.isEmpty || repartitioned,
+    val repartitioned =
+      nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec])
+    require(!unalignedScans || repartitioned,
       "buildDocsSorted: input is a direct file scan without bucket-aligned " +
         "partitions (bucketedScan=false) — file splitting would silently " +
         "break conversations across tasks; use BucketedCorpus.readDocs, or " +
@@ -923,30 +923,19 @@ object DedupPipeline {
     // materialize the edge set ONCE: the size probe and whichever CC path
     // follows both consume it (without this, the count action would
     // recompute the entire upstream verify subtree)
-    val ccProf = sys.env.contains("SPARK_GRAFT_CC_PROFILE")
-    def prof[A](label: String)(f: => A): A = {
-      if (!ccProf) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[cc] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-    }
     val edges1 = edges0.select(col("a").as("u"), col("b").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edgeCount = prof("edge count")(edges1.count())
+    val edgeCount = edges1.count()
     if (edgeCount <= driverMaxEdges) {
+      ccLog.info(s"cc: $edgeCount edges, driver union-find")
       import spark.implicits._
       val uf = new UnionFind[String]()
-      prof("collect+union") {
-        // coalesce before collect: narrow over the cached partitions, so
-        // the collect job launches ~32 tasks instead of one per shuffle
-        // partition (256 near-empty result fetches were measurable fixed
-        // cost on a stage that is serial everywhere else)
-        edges1.coalesce(32).collect().foreach { r =>
-          uf.union(r.getString(0), r.getString(1))
-        }
+      // coalesce before collect: narrow over the cached partitions, so
+      // the collect job launches ~32 tasks instead of one per shuffle
+      // partition (256 near-empty result fetches were measurable fixed
+      // cost on a stage that is serial everywhere else)
+      edges1.coalesce(32).collect().foreach { r =>
+        uf.union(r.getString(0), r.getString(1))
       }
       edges1.unpersist(false)
       // no .sorted: the join is order-insensitive and sorting ~1M driver
@@ -958,11 +947,10 @@ object DedupPipeline {
       // only: the left-join's coalesce already maps absent nodes to
       // themselves, so root/singleton identity entries (~40% of the map
       // at 357k edges) were dead broadcast weight.
-      val asg = prof("assignments toDF")(
-        spark.sparkContext
-          .parallelize(scala.collection.immutable.ArraySeq.unsafeWrapArray(
-            uf.nonIdentityAssignments()), 32)
-          .toDF("conv_id", "root"))
+      val asg = spark.sparkContext
+        .parallelize(scala.collection.immutable.ArraySeq.unsafeWrapArray(
+          uf.nonIdentityAssignments()), 32)
+        .toDF("conv_id", "root")
       // broadcast the assignment map when it is certainly small (≤ 500k
       // edges ⇒ ≤ 1M entries, tens of MB) — skips shuffling allNodes;
       // near the 2M-edge cap the map can reach hundreds of MB, so there
@@ -1053,7 +1041,8 @@ object DedupPipeline {
     // cost only round-1 window width, never correctness), and each round
     // below runs ONE job instead of two (fingerprint folded into the
     // checkpoint-materializing job).
-    val doContract = localContraction.getOrElse(prof("contraction probe") {
+    ccLog.info(s"cc: $edgeCount edges, star loop")
+    val doContract = localContraction.getOrElse {
       // Locality probe: in-task union-find over two partitions of the
       // materialized edge set. yield = starEdges/inEdges = 1 (to the
       // probe's precision) means local stitching finds NOTHING — every
@@ -1083,11 +1072,11 @@ object DedupPipeline {
           probeParts)
         val n = counts.map(_._1).sum
         val stars = counts.map(_._2).sum
-        if (ccProf) println(f"[cc] probe: edges=$n stars=$stars yield=${
+        ccLog.info(f"cc: contraction probe edges=$n stars=$stars yield=${
           if (n == 0) 1.0 else stars.toDouble / n}%.3f")
         n > 0 && stars.toDouble / n <= 0.98
       }
-    })
+    }
     var edges =
       if (doContract) {
         val c = localContract(edges1).localCheckpoint(true)
@@ -1125,7 +1114,7 @@ object DedupPipeline {
       if (iter == 0) edges1.unpersist(false)
       iter += 1
     }
-    if (ccProf) println(s"[cc] global rounds: $iter")
+    ccLog.info(s"cc: $iter global rounds")
 
     // After convergence every edge is (member, root) with root = component min.
     val roots = edges.groupBy(col("u")).agg(min(col("v")).as("root"))

@@ -3,12 +3,12 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.core.DedupConfig
+import graft.pipeline.DedupPipeline
 
 /** Structured Streaming front end for the dedup engine: conversations
   * arrive turn-by-turn (out of order within a watermark), are assembled
-  * into documents when their event-time session closes, and leave as
-  * signature rows ready for the batch banding/verification stages — the
+  * into documents when their event-time session closes, and go on
+  * through the batch stages (DedupPipeline.signatures onward) — the
   * streaming analogue of the reference's one-pass update model (each
   * micro-batch task consumes its partition as the "stream",
   * SURVEY §1.2).
@@ -17,30 +17,16 @@ object StreamingDedup {
 
   /** Session-window document assembly (append mode): a conversation's doc
     * is emitted once the watermark passes `gap` beyond its last turn.
-    * Stable ordering inside the aggregate — same contract as the batch
+    * Turns are joined in DedupPipeline.stableDoc order, as in the batch
     * buildDocs. */
   def sessionDocs(turns: DataFrame, watermark: String = "10 minutes",
                   gap: String = "30 minutes"): DataFrame =
     turns
       .withWatermark("ts", watermark)
       .groupBy(session_window(col("ts"), gap), col("conv_id"))
-      .agg(
-        concat_ws("\n",
-          transform(
-            array_sort(collect_list(struct(col("turn_idx"), col("ts"), col("text")))),
-            s => s.getField("text"))).as("doc"),
-        count(lit(1)).cast("int").as("n_turns"))
+      .agg(DedupPipeline.stableDoc.as("doc"), count(lit(1)).cast("int").as("n_turns"))
       .select(col("conv_id"), col("doc"), col("n_turns"),
         length(col("doc")).cast("long").as("doc_len"))
-
-  /** Docs → signature rows (same expression as batch; stateless map). */
-  def signatureStream(docs: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
-    docs.withColumn("sig",
-        graft.functions.text_signature(col("doc"), cfg.shingleK, cfg.numHashes, cfg.seed))
-      .select(col("conv_id"), col("doc_len"),
-        col("sig.shingles").as("shingles"),
-        col("sig.minhash").as("minhash"),
-        col("sig.simhash").as("simhash"))
 
   /** Tumbling-window sketch metrics over an event stream: per (window,
     * event_type) approximate distinct users (HLL) and value quantile

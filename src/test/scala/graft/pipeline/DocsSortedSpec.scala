@@ -114,6 +114,41 @@ class DocsSortedSpec extends AnyFunSuite {
     assertIdentical(streamed, DedupPipeline.buildDocs(tdf))
   }
 
+  test("multi-row-group bucket files split under a bare projection; readDocs keeps them whole") {
+    // a child session, so the tiny split and row-group sizes stay out of the
+    // shared test session; parquet.block.size reaches the writer because
+    // session confs are copied into the write's Hadoop conf, and gives each
+    // bucket file several row groups
+    val s = spark.newSession()
+    s.conf.set("spark.sql.files.maxPartitionBytes", (64 * 1024).toString)
+    s.conf.set("spark.sql.files.openCostInBytes", "0")
+    s.conf.set("parquet.block.size", (16 * 1024).toString)
+    val buckets = 8
+    val tdf = Transcripts.generateDf(s, 2000, 42L)
+    val dir = java.nio.file.Files.createTempDirectory("graft-docs-rowgroups").toString
+    BucketedCorpus.write(tdf, dir, buckets)
+    assert(BucketedCorpus.singleFilePerBucket(dir))
+
+    // the bare projection: Spark drops the bucketed scan and splits the
+    // files between row groups, so some conversation is cut in two
+    val projection = BucketedCorpus.read(s, dir)
+      .select(col("conv_id"), col("turn_idx"), col("ts"), col("text"))
+    assert(projection.rdd.getNumPartitions > buckets)
+    val straddling = projection.rdd
+      .mapPartitions(_.map(_.getString(0)).toSet.iterator)
+      .map(c => (c, 1)).reduceByKey(_ + _).filter(_._2 > 1).count()
+    assert(straddling > 0, "no conversation spans two read partitions")
+    val e = intercept[IllegalArgumentException](DedupPipeline.buildDocsSorted(projection))
+    assert(e.getMessage.contains("bucket-aligned"))
+
+    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    val before = s.conf.getOption(key)
+    val streamed = BucketedCorpus.readDocs(s, dir)
+    assert(s.conf.getOption(key) === before)
+    assert(!streamed.queryExecution.executedPlan.toString.contains("Aggregate"))
+    assertIdentical(streamed, DedupPipeline.buildDocs(tdf))
+  }
+
   test("unsorted partition fails loudly instead of concatenating out of order") {
     import spark.implicits._
     val bad = Seq(

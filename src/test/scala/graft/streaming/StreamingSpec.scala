@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{DedupConfig, MinHasher, Shingles}
-import graft.pipeline.SparkTestSession
+import graft.pipeline.{DedupPipeline, SparkTestSession}
 import java.nio.file.Files
 import java.sql.Timestamp
 
@@ -31,7 +31,7 @@ class StreamingSpec extends AnyFunSuite {
       .schema("conv_id STRING, turn_idx INT, text STRING, ts TIMESTAMP")
       .parquet(dir)
     val cfg = DedupConfig()
-    val q = StreamingDedup.signatureStream(
+    val q = DedupPipeline.signatures(
         StreamingDedup.sessionDocs(in, watermark = "5 minutes", gap = "10 minutes"), cfg)
       .writeStream.format("memory").queryName("sigs")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
@@ -43,7 +43,7 @@ class StreamingSpec extends AnyFunSuite {
     // batch 2: a far-future sentinel advances the watermark past both sessions
     Seq(("sentinel", 0, "x", ts(1000))).toDF("conv_id", "turn_idx", "text", "ts")
       .coalesce(1).write.mode("append").parquet(dir)
-    val q2 = StreamingDedup.signatureStream(
+    val q2 = DedupPipeline.signatures(
         StreamingDedup.sessionDocs(in, watermark = "5 minutes", gap = "10 minutes"), cfg)
       .writeStream.format("memory").queryName("sigs2")
       .option("checkpointLocation", ckpt)
