@@ -1,9 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import graft.core.DedupConfig
-import graft.pipeline.{CatalogTableIO, CheckpointedDedup, DedupPipeline, ParquetTableIO, Transcripts}
+import graft.pipeline.{BucketedCorpus, CatalogTableIO, CheckpointedDedup, ParquetTableIO, Transcripts}
 
 /** spark-submit entry point: run the checkpointed dedup pipeline.
   *
@@ -43,7 +42,7 @@ object Main {
         val n = input.stripPrefix("synth:").toInt
         Transcripts.asDataFrame(spark, Transcripts.generate(n),
           spark.sparkContext.defaultParallelism * 2)
-      } else graft.pipeline.BucketedCorpus.readAuto(spark, input)
+      } else BucketedCorpus.readAuto(spark, input)
 
     // --catalog db / catalog.db routes every stage table through the
     // session's (e.g. Iceberg) catalog; default is parquet under --workdir
@@ -52,12 +51,10 @@ object Main {
       case None => new ParquetTableIO(workdir)
     }
     val pipeline = new CheckpointedDedup(io, DedupConfig(), runId)
-    // bucketed input dirs stream the docs stage off the bucket sort
-    // (identical output, no hash aggregation — DocsSortedSpec)
+    // readDocs streams bucketed dirs' docs off the bucket sort (identical
+    // output, DocsSortedSpec) and falls back to buildDocs for other layouts
     val docsBuilder =
-      if (!input.startsWith("synth:") && graft.pipeline.BucketedCorpus.isBucketed(input))
-        Some(() => graft.pipeline.BucketedCorpus.readDocs(spark, input))
-      else None
+      if (input.startsWith("synth:")) None else Some(() => BucketedCorpus.readDocs(spark, input))
     val assignments = pipeline.run(transcripts, docsBuilder)
 
     val nClusters = assignments.select("cluster_id").distinct().count()

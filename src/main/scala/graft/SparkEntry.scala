@@ -745,8 +745,8 @@ object SparkEntry {
       val resumeZero = again.computedStages.isEmpty
       val metricsStages = io.read(s, "q30/metrics")
         .select(col("stage")).distinct().count()
-      // all 6 pipeline stages must have lineage rows (P12) and tables (P11)
-      val ok = resumeZero && metricsStages == 6 && io.exists(s, "q30/docs")
+      // all 5 pipeline stages must have lineage rows (P12) and tables (P11)
+      val ok = resumeZero && metricsStages == 5 && io.exists(s, "q30/docs")
       io.read(s, "q30/cluster_assignments")
         .select(col("conv_id"), col("cluster_id"), lit(ok).as("catalog_ok"))
         .orderBy(col("conv_id"))

@@ -20,8 +20,8 @@ final case class DedupConfig(
     tauJaccard: Double = 0.8,
     /** LCS verification gate (north_star "suffix-array LCS checks"):
       * pairs must share a common substring of ≥ min(tauLcs, min doc len)
-      * chars — applied in DedupPipeline.verifyPairs after the Jaccard
-      * gate; kills high-set-overlap/no-long-run adversarial pairs. */
+      * chars — applied after the Jaccard gate in DedupPipeline.verifyGate
+      * (both verify preambles share it); kills adversarial no-long-run pairs. */
     tauLcs: Int = 64,
     /** SimHash agreement criterion, RECORDED as verifyPairs.simhash_ok
       * (not gated — near-threshold Jaccard pairs legitimately exceed it). */

@@ -12,6 +12,12 @@ import graft.sketch.HllSketch
 /** Checkpointed, resumable pipeline runner (SURVEY §2b P10–P12; north rule:
   * "resumable from checkpoint with per-partition lineage + metrics").
   *
+  * Five stages, those of `DedupPipeline.runWithDocs`: docs → bands →
+  * cand_pairs → verified_pairs → cluster_assignments. `bands` holds the
+  * signature kernel's compact product (32 band keys per doc, not 128
+  * minhash values), so a crash after it never reruns the costliest stage.
+  * An older run's `signatures` table and lineage rows are never read.
+  *
   * Every stage materializes its output table plus per-partition lineage
   * rows in a `metrics` table:
   *   (run_id, stage, partition_id, rows_in, rows_out, checksum, hll_sketch, ts)
@@ -68,19 +74,11 @@ final class CheckpointedDedup(
       rowsIn = transcripts.count()) { () =>
       docsBuilder.map(_.apply()).getOrElse(DedupPipeline.buildDocs(transcripts))
     }
-    val sigs = stage(spark, "signatures", keyCols = Seq("conv_id"),
-      rowsIn = rowsOut("docs")) { () =>
-      // checkpoint only what downstream stages consume: bands need the
-      // minhash, CC needs conv_id, simhash is a cheap per-doc metric. The
-      // shingle array (~8x the text bytes) is recomputed pair-locally by
-      // verifyPairs and must NOT be materialized — at 100 TB the shingle
-      // blow-up would dominate the checkpoint footprint.
-      DedupPipeline.signatures(docs, cfg)
-        .select(col("conv_id"), col("doc_len"), col("minhash"), col("simhash"))
-    }
     val bands = stage(spark, "bands", keyCols = Seq("conv_id", "band_key"),
-      rowsIn = rowsOut("signatures")) { () =>
-      DedupPipeline.bands(sigs, cfg)
+      rowsIn = rowsOut("docs")) { () =>
+      // text_signature fuses into the band explode, as in runWithDocs: the
+      // shingle array (~8x the text bytes) is never materialized
+      DedupPipeline.bands(DedupPipeline.signatures(docs, cfg), cfg)
     }
     val cand = stage(spark, "cand_pairs", keyCols = Seq("a", "b"),
       rowsIn = rowsOut("bands")) { () =>
@@ -92,7 +90,7 @@ final class CheckpointedDedup(
     }
     val assignments = stage(spark, "cluster_assignments", keyCols = Seq("conv_id", "cluster_id"),
       rowsIn = rowsOut("verified_pairs")) { () =>
-      DedupPipeline.connectedComponents(verified, sigs.select(col("conv_id")))
+      DedupPipeline.connectedComponents(verified, docs.select(col("conv_id")))
     }
     assignments
   }

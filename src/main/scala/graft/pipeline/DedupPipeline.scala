@@ -781,21 +781,7 @@ object DedupPipeline {
                            subBucketSize: Int,
                            stopFpFreq: Int,
                            tier2PairRecall: Boolean): DataFrame = {
-    // bucket sizes FIRST, member arrays only for buckets the tiers will
-    // read (m ∈ [2, stopFpFreq]): stop-fingerprint buckets — template
-    // fingerprints shared by up to the whole corpus — previously paid a
-    // full sort_array(collect_list) before being dropped (VERDICT r4 #4).
-    // One Exchange total: the count comes from a window over the
-    // band_key-partitioned stream and the groupBy below reuses that
-    // partitioning (band_key ⊂ grouping keys → no second shuffle).
-    val fps = docs.select(col("conv_id"),
-      explode(graft.functions.winnow_fingerprints(col("doc"), k, w)).as("band_key"))
-    val buckets = trackPersist(fps
-      .withColumn("m", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("band_key"))))
-      .where(col("m").between(2, stopFpFreq))
-      .groupBy(col("band_key"), col("m"))
-      .agg(sort_array(collect_list(col("conv_id"))).as("ms")))
+    val buckets = trackPersist(winnowBuckets(docs, k, w, stopFpFreq))
     // kept vocabulary sizes per doc (the prefilter denominators), split by
     // tier: the tier-1 ratio is an EXACT containment measure (both its
     // numerator and denominator count only ≤ allPairsCap fingerprints) —
@@ -859,15 +845,24 @@ object DedupPipeline {
       .select(col("a"), col("b"))
   }
 
-  /** Fingerprint buckets with ≥ 2 members as (band_key, ms sorted members,
-    * m size) — the shared substrate of the winnow tiers. */
-  private[graft] def winnowBuckets(docs: DataFrame, k: Int, w: Int): DataFrame =
+  /** Fingerprint buckets with 2 to stopFpFreq members as (band_key, m
+    * size, ms sorted members) — the shared substrate of the winnow tiers.
+    * Bucket sizes FIRST, member arrays only for buckets the tiers will
+    * read: a stop-fingerprint bucket — a template fingerprint shared by up
+    * to the whole corpus — would otherwise pay a full
+    * sort_array(collect_list) only to be dropped (VERDICT r4 #4). One
+    * Exchange total: the count comes from a window over the
+    * band_key-partitioned stream and the groupBy reuses that partitioning
+    * (band_key ⊂ grouping keys → no second shuffle). */
+  private[graft] def winnowBuckets(docs: DataFrame, k: Int, w: Int,
+                                   stopFpFreq: Int): DataFrame =
     docs.select(col("conv_id"),
         explode(graft.functions.winnow_fingerprints(col("doc"), k, w)).as("band_key"))
-      .groupBy(col("band_key"))
+      .withColumn("m", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("band_key"))))
+      .where(col("m").between(2, stopFpFreq))
+      .groupBy(col("band_key"), col("m"))
       .agg(sort_array(collect_list(col("conv_id"))).as("ms"))
-      .withColumn("m", size(col("ms")))
-      .where(col("m") >= 2)
 
   /** Stop-fingerprint buckets the winnow path excluded (bucket > stopFpFreq)
     * — surface these as a metric (no silent caps). */

@@ -330,22 +330,28 @@ object QuickSelect {
     var lo = 0
     var hi = a.length - 1
     while (lo < hi) {
-      val pivot = a(lo + (hi - lo) / 2)
-      // Dutch-national-flag: [lo,lt) < pivot, [lt,i) == pivot, (gt,hi] > pivot
-      var lt = lo
-      var gt = hi
-      var i = lo
-      while (i <= gt) {
-        val v = a(i)
-        if (v < pivot) { swap(a, i, lt); lt += 1; i += 1 }
-        else if (v > pivot) { swap(a, i, gt); gt -= 1 }
-        else i += 1
-      }
+      val (lt, gt) = partition(a, lo, hi)
       if (k < lt) hi = lt - 1
       else if (k > gt) lo = gt + 1
-      else return pivot
+      else return a(k)
     }
     a(k)
+  }
+
+  /** One Dutch-national-flag pass over a(lo..hi) around the midpoint value;
+    * returns (lt, gt): [lo,lt) < pivot, [lt,gt] == pivot, (gt,hi] > pivot. */
+  private[sketch] def partition(a: Array[Long], lo: Int, hi: Int): (Int, Int) = {
+    val pivot = a(lo + (hi - lo) / 2)
+    var lt = lo
+    var gt = hi
+    var i = lo
+    while (i <= gt) {
+      val v = a(i)
+      if (v < pivot) { swap(a, i, lt); lt += 1; i += 1 }
+      else if (v > pivot) { swap(a, i, gt); gt -= 1 }
+      else i += 1
+    }
+    (lt, gt)
   }
 
   @inline private def swap(a: Array[Long], i: Int, j: Int): Unit = {

@@ -119,16 +119,42 @@ class CheckpointLineageSpec extends AnyFunSuite {
     val io = new ParquetTableIO(root)
     new CheckpointedDedup(io, cfg, "run-R").run(splitTdf)
     // a crash just after 'bands': later tables and their lineage are gone
-    val kept = io.read(spark, "run-R/metrics").where(col("stage").isin(Stages.take(3): _*))
+    val kept = io.read(spark, "run-R/metrics").where(col("stage").isin(Stages.take(2): _*))
     val rows = kept.collect()
     io.write(spark.createDataFrame(java.util.Arrays.asList(rows: _*), kept.schema), "run-R/metrics")
-    for (s <- Stages.drop(3)) deleteDir(new java.io.File(s"$root/run-R/$s"))
+    for (s <- Stages.drop(2)) deleteDir(new java.io.File(s"$root/run-R/$s"))
 
     val resumed = new CheckpointedDedup(io, cfg, "run-R")
     resumed.run(splitTdf)
-    assert(resumed.computedStages === Stages.drop(3))
+    assert(resumed.computedStages === Stages.drop(2))
     assertLineageMatchesReadBack(io, "run-R")
     assertRowsInChain(io, "run-R")
+  }
+
+  test("a fresh run writes the five stage tables: bands off the docs, every doc assigned") {
+    val root = Files.createTempDirectory("lineage").toString
+    val io = new ParquetTableIO(root)
+    val p = new CheckpointedDedup(io, cfg, "run-T")
+    p.run(tdf)
+    assert(p.computedStages === Stages)
+    assert(!io.exists(spark, "run-T/signatures"), "the signatures stage is gone")
+
+    // bands: the public two-step path is the oracle, compared as multisets
+    val convIds = turns.map(_.conv_id).distinct.sorted
+    def bandRows(df: DataFrame) = df.select("conv_id", "band_key").collect()
+      .map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
+    val docs = DedupPipeline.buildDocs(tdf)
+    val oracle = bandRows(DedupPipeline.bands(DedupPipeline.signatures(docs, cfg), cfg))
+    assert(oracle.length === convIds.length * cfg.bands)
+    assert(bandRows(io.read(spark, "run-T/bands")) === oracle)
+
+    // one assignment per doc, including docs no candidate pair touches
+    val assigned = io.read(spark, "run-T/cluster_assignments")
+      .select("conv_id").collect().map(_.getString(0)).sorted.toSeq
+    assert(assigned === convIds)
+    val paired = io.read(spark, "run-T/cand_pairs").collect()
+      .flatMap(r => Seq(r.getString(0), r.getString(1))).toSet
+    assert(convIds.exists(c => !paired.contains(c)), "corpus has no singleton doc")
   }
 
   test("job budget: a no-op resume submits one job, a table read none") {
@@ -157,12 +183,12 @@ class CheckpointLineageSpec extends AnyFunSuite {
 }
 
 object CheckpointLineageSpec {
-  val Stages: List[String] = List("docs", "signatures", "bands", "cand_pairs",
+  val Stages: List[String] = List("docs", "bands", "cand_pairs",
     "verified_pairs", "cluster_assignments")
 
   /** The lineage key columns CheckpointedDedup uses per stage. */
   val StageKeys: Seq[(String, Seq[String])] = Stages.zip(Seq(
-    Seq("conv_id"), Seq("conv_id"), Seq("conv_id", "band_key"), Seq("a", "b"),
+    Seq("conv_id"), Seq("conv_id", "band_key"), Seq("a", "b"),
     Seq("a", "b"), Seq("conv_id", "cluster_id")))
 
   /** The read-back lineage the in-write lineage replaced, kept as its

@@ -20,11 +20,11 @@ class ResumeSpec extends AnyFunSuite {
     val p = new CheckpointedDedup(new ParquetTableIO(root), cfg, "run-A")
     val asg = asgMap(p.run(tdf))
     assert(asg.nonEmpty)
-    assert(p.computedStages === List("docs", "signatures", "bands",
+    assert(p.computedStages === List("docs", "bands",
       "cand_pairs", "verified_pairs", "cluster_assignments"))
     val m = p.metrics(spark)
     val stages = m.select("stage").distinct().collect().map(_.getString(0)).toSet
-    assert(stages === Set("docs", "signatures", "bands", "cand_pairs",
+    assert(stages === Set("docs", "bands", "cand_pairs",
       "verified_pairs", "cluster_assignments"))
     // lineage integrity: docs rows_out sums to the number of conversations
     val docsRows = m.where(col("stage") === "docs")
@@ -65,6 +65,31 @@ class ResumeSpec extends AnyFunSuite {
     assert(resumed.computedStages === List("cand_pairs", "verified_pairs",
       "cluster_assignments"), s"got ${resumed.computedStages}")
     assert(resumedAsg === refAsg, "resumed assignments differ from uninterrupted run")
+  }
+
+  test("a run directory the six-stage runner left resumes as a full no-op") {
+    val root = Files.createTempDirectory("ckpt").toString
+    val io = new ParquetTableIO(root)
+    val a1 = asgMap(new CheckpointedDedup(io, cfg, "run-F").run(tdf))
+    // what the former runner also left: a signatures table and its lineage
+    io.write(DedupPipeline.signatures(io.read(spark, "run-F/docs"), cfg)
+      .select("conv_id", "doc_len", "minhash", "simhash"), "run-F/signatures")
+    val m0 = io.read(spark, "run-F/metrics")
+    val sigLineage = m0.where(col("stage") === "docs").limit(1)
+      .withColumn("stage", lit("signatures")).collect()
+    io.append(spark.createDataFrame(java.util.Arrays.asList(sigLineage: _*), m0.schema),
+      "run-F/metrics")
+    def metricRows = io.read(spark, "run-F/metrics")
+      .withColumn("hll_sketch", hex(col("hll_sketch"))).collect().map(_.toString).sorted.toSeq
+    val before = metricRows
+    assert(before.count(_.contains(",signatures,")) === 1)
+
+    val p2 = new CheckpointedDedup(io, cfg, "run-F")
+    val a2 = asgMap(p2.run(tdf))
+    assert(p2.computedStages === Nil)
+    assert(a2 === a1)
+    assert(metricRows === before, "stale signatures lineage is ignored, not dropped")
+    assert(io.exists(spark, "run-F/signatures"))
   }
 
   test("second run with same run_id is a full no-op") {

@@ -15,6 +15,10 @@ class WinnowScaleSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val cfg = DedupConfig()
 
+  /** A stop cap above every family size here: the tier split is isolated
+    * from the stop-fingerprint cut. */
+  val NoStopCap = 100000
+
   /** Family of m docs sharing one long template (same winnow fingerprints
     * at frequency ~m) with a short unique tail per doc. */
   private def templateFamily(m: Int) = {
@@ -29,8 +33,7 @@ class WinnowScaleSpec extends AnyFunSuite {
 
   test("tier-2: pair-stream instances grow linearly in family size") {
     def instances(m: Int, tier2PairRecall: Boolean): Long = {
-      val buckets = DedupPipeline.winnowBuckets(templateFamily(m), 8, 16)
-        .where(col("m") <= 100000) // no stop cap: isolate the tier split
+      val buckets = DedupPipeline.winnowBuckets(templateFamily(m), 8, 16, NoStopCap)
       DedupPipeline.winnowPairStream(buckets, allPairsCap = 256,
         subBucketSize = 64, tier2PairRecall).count()
     }
@@ -48,7 +51,7 @@ class WinnowScaleSpec extends AnyFunSuite {
 
   test("tier-2 candidate stream stays CONNECTED (chain+star + minima links)") {
     val fam = templateFamily(500) // > allPairsCap -> pure tier-2
-    val buckets = DedupPipeline.winnowBuckets(fam, 8, 16)
+    val buckets = DedupPipeline.winnowBuckets(fam, 8, 16, NoStopCap)
     val stream = DedupPipeline.winnowPairStream(buckets, allPairsCap = 256,
       subBucketSize = 64).select(col("a"), col("b")).distinct()
     // the candidate graph must span all 500 docs as one component — the
