@@ -235,8 +235,8 @@ object SparkEntry {
       val cfg = DedupConfig()
       val docs = docsView(s, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val sigs = DedupPipeline.signatures(docs, cfg)
-      val cand = DedupPipeline.candidatePairs(DedupPipeline.bands(sigs, cfg), cfg)
+      val cand = DedupPipeline.candidatePairs(
+        DedupPipeline.bands(DedupPipeline.minhashes(docs, cfg), cfg), cfg)
       val verified = DedupPipeline.verifyPairs(cand, docs, cfg)
       // cluster closure makes the pair listing STRUCTURALLY complete
       // (direct chain+star pairs cover a 4+-member bucket only
@@ -251,8 +251,8 @@ object SparkEntry {
       val cfg = DedupConfig()
       val docs = docsView(s, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val sigs = DedupPipeline.signatures(docs, cfg)
-      val cand = DedupPipeline.candidatePairs(DedupPipeline.bands(sigs, cfg), cfg)
+      val cand = DedupPipeline.candidatePairs(
+        DedupPipeline.bands(DedupPipeline.minhashes(docs, cfg), cfg), cfg)
       val verified = DedupPipeline.verifyPairs(cand, docs, cfg)
       DedupPipeline.connectedComponents(verified, docs.select(col("conv_id")))
         .orderBy(col("conv_id"))
@@ -328,8 +328,8 @@ object SparkEntry {
     "q18_docs_simhash_neardup" -> ((s, dir) => {
       val cfg = DedupConfig()
       val docs = docsView(s, dir)
-      // simhash-only signature pass (r6): the minhash this query never
-      // reads was ~95% of the kernel; values bit-identical (SignatureSpec)
+      // simhash-only signature pass: skips the minhash loop this query
+      // never reads; values bit-identical (FunctionsSpec)
       val sigs = DedupPipeline.simhashSignatures(docs, cfg)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val banded = DedupPipeline.simhashNearDupPairs(sigs, maxDist = 3, cfg)
@@ -775,9 +775,7 @@ object SparkEntry {
       // bucket-size check below consume it — unpersisted, the signature
       // kernel (the dominant cost) ran twice
       val docs = docsView(s, dir)
-      val bands = DedupPipeline.bands(
-        DedupPipeline.signatures(docs, cfg)
-          .select(col("conv_id"), col("minhash")), cfg)
+      val bands = DedupPipeline.bands(DedupPipeline.minhashes(docs, cfg), cfg)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val realAdv = SkewTools.recommendSalt(bands, cfg)
       val realHot = realAdv.hotKeys.map(_._1).toSet

@@ -33,22 +33,27 @@ final class MinHasher(val numHashes: Int, val seed: Long) extends Serializable {
     * valid total order on each permutation's image. Empty set → all
     * EmptySig (no h_i(x) min realistically reaches it, so empty docs
     * only band-match empty docs). */
-  def signature(shingles: Array[Long]): Array[Long] = {
+  def signature(shingles: Array[Long]): Array[Long] = signature(shingles, shingles.length)
+
+  /** Signature of the first n entries of `hashes`. They may repeat: a
+    * minimum over a multiset is the minimum over its set, so the window
+    * hashes of a doc give its shingle set's signature unsorted and
+    * undeduplicated. */
+  def signature(hashes: Array[Long], n: Int): Array[Long] = {
     val sig = new Array[Long](numHashes)
-    if (shingles.length == 0) {
+    if (n == 0) {
       java.util.Arrays.fill(sig, EmptySig)
       return sig
     }
-    val n = shingles.length
     var i = 0
     while (i < numHashes) {
       // per-permutation inner loop keeps the running min in a register;
-      // the shingle array is L1-resident for typical docs
+      // the hash buffer is L1-resident for typical docs
       val a = as(i); val b = bs(i)
       var m = Long.MaxValue
       var j = 0
       while (j < n) {
-        val h = a * shingles(j) + b
+        val h = a * hashes(j) + b
         if (h < m) m = h
         j += 1
       }

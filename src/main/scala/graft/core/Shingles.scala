@@ -14,19 +14,33 @@ object Shingles {
 
   /** Distinct sorted shingle hashes of `len` bytes at (base, offset). */
   def shingles(base: AnyRef, offset: Long, len: Int, k: Int, seed: Long): Array[Long] = {
+    val out = new Array[Long](windowCount(len, k))
+    windowsInto(base, offset, len, k, seed, out)
+    sortedDistinct(out)
+  }
+
+  /** Number of window hashes `windowsInto` writes for `len` bytes. */
+  def windowCount(len: Int, k: Int): Int =
+    if (len == 0) 0 else math.max(1, len - k + 1)
+
+  /** Every k-byte window's hash written into `buf` (caller guarantees
+    * capacity ≥ windowCount(len, k)), in text order, repeats kept; returns
+    * the count. A doc shorter than one shingle hashes whole as a single
+    * window. */
+  def windowsInto(base: AnyRef, offset: Long, len: Int, k: Int, seed: Long,
+                  buf: Array[Long]): Int = {
     if (len < k) {
-      if (len == 0) return Array.emptyLongArray
-      // shorter than one shingle: hash the whole thing as a single shingle
-      return Array(Murmur3x128.hash64(base, offset, len, seed))
+      if (len == 0) return 0
+      buf(0) = Murmur3x128.hash64(base, offset, len, seed)
+      return 1
     }
     val n = len - k + 1
-    val out = new Array[Long](n)
     var i = 0
     while (i < n) {
-      out(i) = Murmur3x128.hash64(base, offset + i, k, seed)
+      buf(i) = Murmur3x128.hash64(base, offset + i, k, seed)
       i += 1
     }
-    sortedDistinct(out)
+    n
   }
 
   def shinglesOf(text: String, k: Int, seed: Long): Array[Long] = {
@@ -55,21 +69,11 @@ object Shingles {
     * cores. */
   def shinglesInto(base: AnyRef, offset: Long, len: Int, k: Int, seed: Long,
                    buf: Array[Long]): Int = {
-    if (len < k) {
-      if (len == 0) return 0
-      buf(0) = Murmur3x128.hash64(base, offset, len, seed)
-      return 1
-    }
-    val n = len - k + 1
-    var i = 0
-    while (i < n) {
-      buf(i) = Murmur3x128.hash64(base, offset + i, k, seed)
-      i += 1
-    }
+    val n = windowsInto(base, offset, len, k, seed, buf)
     if (n <= 1) return n
     Arrays.sort(buf, 0, n)
     var w = 1
-    i = 1
+    var i = 1
     while (i < n) {
       if (buf(i) != buf(w - 1)) { buf(w) = buf(i); w += 1 }
       i += 1

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -92,7 +93,7 @@ object PairVerify {
     * docs beyond RetainCap entries (≈ 4 MB of Long per side) use a
     * transient allocation instead so one multi-MB outlier cannot pin
     * tens of MB per executor thread for the application lifetime. */
-  private final val RetainCap = 1 << 19 // 512k shingles ≈ 4 MB per buffer
+  private[functions] final val RetainCap = 1 << 19 // 512k shingles ≈ 4 MB per buffer
 
   /** One side's reusable state: the shingle buffer plus a LAST-SEEN memo.
     * The verify stream arrives from a sort-merge join, so consecutive rows
@@ -163,9 +164,14 @@ object PairVerify {
     }
   }
 
+  /** Both sides' state plus the last pair's result. Catalyst pushes the
+    * verify gate's `jaccard >= τ` into the join condition, so a passing
+    * pair's pair_verify runs twice in a row: in the join condition and in
+    * the projection after it. `last` serves the second call. */
   private[graft] final class Scratch(probe: Boolean) {
     val a = new Side(probe)
     val b = new Side(probe)
+    var last: InternalRow = null // (jaccard, simhash_dist) of the memoized docs
   }
   private val scratch: ThreadLocal[Scratch] =
     ThreadLocal.withInitial(() => new Scratch(true))
@@ -179,21 +185,26 @@ object PairVerify {
     * r5) by 21-37% in BOTH regimes — fresh-B (no sort on recompute) and
     * memo-hit (the merge's 50/50 x<y branch mispredicts per element; the
     * probe's near-dup hit branch is predictable and the table is
-    * L2-resident at typical doc sizes). */
+    * L2-resident at typical doc sizes). When both sides hit their memo the
+    * docs are byte-equal to the previous call's, and its row is returned
+    * as is. */
   private[graft] def computeWith(s: Scratch, a: UTF8String, b: UTF8String,
-                                 k: Int, seed: Long, probe: Boolean): (Double, Int) = {
-    if (!s.a.hit(a, k, seed)) s.a.recompute(a, k, seed)
-    if (!s.b.hit(b, k, seed)) s.b.recompute(b, k, seed)
+                                 k: Int, seed: Long, probe: Boolean): InternalRow = {
+    val hitA = s.a.hit(a, k, seed)
+    val hitB = s.b.hit(b, k, seed)
+    if (hitA && hitB && s.last != null) return s.last
+    s.last = null
+    if (!hitA) s.a.recompute(a, k, seed)
+    if (!hitB) s.b.recompute(b, k, seed)
     val j =
       if (probe) graft.core.LongHashSet.jaccardProbe(s.a.set, s.b.set)
       else graft.core.Shingles.jaccardSorted(s.a.res, s.a.n, s.b.res, s.b.n)
-    (j, graft.core.SimHash64.hammingDist(s.a.fp, s.b.fp))
+    s.last = InternalRow(j, graft.core.SimHash64.hammingDist(s.a.fp, s.b.fp))
+    s.last
   }
 
-  def compute(a: UTF8String, b: UTF8String, k: Int, seed: Long): org.apache.spark.sql.catalyst.InternalRow = {
-    val (j, dist) = computeWith(scratch.get(), a, b, k, seed, probe = true)
-    org.apache.spark.sql.catalyst.InternalRow(j, dist)
-  }
+  def compute(a: UTF8String, b: UTF8String, k: Int, seed: Long): InternalRow =
+    computeWith(scratch.get(), a, b, k, seed, probe = true)
 }
 
 /** Longest-common-substring length via suffix automaton (linear time). */

@@ -16,6 +16,11 @@ package object functions {
   def text_signature(text: Column, shingleK: Int, numHashes: Int, seed: Long): Column =
     c(TextSignatureExpr(e(text), shingleK, numHashes, seed))
 
+  /** MinHash signature only — bit-identical to text_signature(...).minhash
+    * without the shingle sort, SimHash or shingle array. */
+  def text_minhash(text: Column, shingleK: Int, numHashes: Int, seed: Long): Column =
+    c(TextMinHashExpr(e(text), shingleK, numHashes, seed))
+
   /** SimHash fingerprint only — bit-identical to text_signature(...).simhash
     * without computing the minhash signature. */
   def simhash64(text: Column, shingleK: Int, seed: Long): Column =

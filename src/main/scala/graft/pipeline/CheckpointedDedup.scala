@@ -76,9 +76,8 @@ final class CheckpointedDedup(
     }
     val bands = stage(spark, "bands", keyCols = Seq("conv_id", "band_key"),
       rowsIn = rowsOut("docs")) { () =>
-      // text_signature fuses into the band explode, as in runWithDocs: the
-      // shingle array (~8x the text bytes) is never materialized
-      DedupPipeline.bands(DedupPipeline.signatures(docs, cfg), cfg)
+      // text_minhash fuses into the band explode, as in runWithDocs
+      DedupPipeline.bands(DedupPipeline.minhashes(docs, cfg), cfg)
     }
     val cand = stage(spark, "cand_pairs", keyCols = Seq("a", "b"),
       rowsIn = rowsOut("bands")) { () =>

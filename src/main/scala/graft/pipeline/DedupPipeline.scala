@@ -349,8 +349,10 @@ object DedupPipeline {
 
   /** P4-only projection: (conv_id, simhash) for consumers that read ONLY
     * the simhash — same shingle pass and fingerprint as `signatures` (the
-    * values are bit-identical, SignatureSpec) without the 64-affine-hash
-    * minhash loop, which is ~95% of the signature kernel's multiply-adds. */
+    * values are bit-identical, FunctionsSpec) without the minhash loop.
+    * Measured single-threaded on 1.9 KB docs, the struct kernel's parts
+    * cost about 80 ns/B for shingle hashing and sort, 60–90 for the
+    * minhash loop, and 4 for the SimHash. */
   def simhashSignatures(docs: DataFrame, cfg: DedupConfig): DataFrame =
     docs.select(col("conv_id"),
       graft.functions.simhash64(col("doc"), cfg.shingleK, cfg.seed).as("simhash"))
@@ -369,6 +371,13 @@ object DedupPipeline {
         col("sig._2").as("minhash"),
         col("sig._3").as("simhash"))
   }
+
+  /** P3, band input: docs → (conv_id, minhash), the only signature field
+    * banding reads (text_minhash: no shingle sort, SimHash or shingle
+    * array; bit-identical to `signatures`' minhash column). */
+  def minhashes(docs: DataFrame, cfg: DedupConfig): DataFrame =
+    docs.select(col("conv_id"),
+      graft.functions.text_minhash(col("doc"), cfg.shingleK, cfg.numHashes, cfg.seed).as("minhash"))
 
   /** P5: signatures → bands(conv_id, band_key).
     * band_key folds the band index in, so one global shuffle key space
@@ -529,16 +538,14 @@ object DedupPipeline {
     // persisted because BOTH the candidate-id semi-join below and the
     // verification join consume it — without the cache the whole upstream
     // candidate subtree (banding windows / winnow tiers) computes twice.
-    // No explicit partition count on the spread: with one, AQE must leave
-    // the exchange alone, so a few-thousand-pair stream (sf0.1 queries,
-    // resume re-verification) pays 4 stages x 256 near-empty task launches;
-    // without one, AQE's parallelism-first coalescing keeps ~total-cores
-    // partitions for heavy streams (it ignores the 64 MB advisory target
-    // and respects only the 1 MB minimum) and folds tiny streams to a
-    // handful of tasks. Hash-distributing on `a` still spreads hot heads
-    // across whatever count AQE picks.
+    // The spread keeps spark.sql.shuffle.partitions partitions: it is
+    // persisted, and the cached plan has no AQEShuffleRead, so AQE cannot
+    // coalesce it (perfbench `mixed`: 32 cached partitions for ~1k rows).
+    // Hash-distributing on `a` spreads hot heads across them.
     val spread = trackPersist(candPairs.repartition(col("a")))
 
+    // two scans, not one explode(array(a, b)): the explode form put
+    // perfbench's G1 collections on a full heap (ROADMAP Direction 8)
     val candIds = spread.select(col("a").as("conv_id"))
       .unionByName(spread.select(col("b").as("conv_id")))
       .distinct()
@@ -725,8 +732,8 @@ object DedupPipeline {
     *    probability ~exp(-B/S)), cluster connectivity is structural via
     *    the minima chains;
     *  - bucket > stopFpFreq: stop-fingerprints (boilerplate; the standard
-    *    winnowing/MOSS frequency cap) — no near-dup signal, dropped, and
-    *    countable via winnowStopFingerprints (no silent caps).
+    *    winnowing/MOSS frequency cap) — no near-dup signal, dropped; their
+    *    count is the `m > stopFpFreq` complement of winnowBuckets' filter.
     * The prefilter keeps pairs whose (estimated) shared-fingerprint count
     * is ≥ minFpOverlap of the smaller doc's kept vocabulary: true near-dup
     * pairs at tau-level similarity have near-total containment (winnow
@@ -863,17 +870,6 @@ object DedupPipeline {
       .where(col("m").between(2, stopFpFreq))
       .groupBy(col("band_key"), col("m"))
       .agg(sort_array(collect_list(col("conv_id"))).as("ms"))
-
-  /** Stop-fingerprint buckets the winnow path excluded (bucket > stopFpFreq)
-    * — surface these as a metric (no silent caps). */
-  def winnowStopFingerprints(docs: DataFrame, k: Int, w: Int,
-                             stopFpFreq: Int = 4096): DataFrame =
-    // counts only — no member arrays for buckets that exist to be counted
-    docs.select(col("conv_id"),
-        explode(graft.functions.winnow_fingerprints(col("doc"), k, w)).as("band_key"))
-      .groupBy(col("band_key"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .where(col("bucket_n") > stopFpFreq)
 
   private def simhashBands(signatures: DataFrame): DataFrame = {
     val bandKeys = array((0 until 4).map { b =>
@@ -1233,11 +1229,10 @@ object DedupPipeline {
     // per-row array decode on re-read that is the pipeline's
     // worst-scaling stage (BandProbe: the cached-minhash scan+explode
     // runs 51 core-s at 8 threads but 190 at 32 — eff 0.27, pure memory
-    // stall). Unpersisted, text_signature fuses straight into the band
+    // stall). Unpersisted, text_minhash fuses straight into the band
     // explode + exchange in one codegen pass over the docs cache.
-    val sigs0 = docs.withColumn("sig",
-        graft.functions.text_signature(col("doc"), cfg.shingleK, cfg.numHashes, cfg.seed))
-      .select(col("id"), col("sig.minhash").as("minhash"))
+    val sigs0 = docs.select(col("id"),
+      graft.functions.text_minhash(col("doc"), cfg.shingleK, cfg.numHashes, cfg.seed).as("minhash"))
     val sigs = if (cfg.bandSalt > 1) trackPersist(sigs0) else sigs0
     val assigned = connectedComponents(
       verifyPairsById(candidatePairsById(bandsById(sigs, cfg), cfg), docs, cfg),
@@ -1255,8 +1250,7 @@ object DedupPipeline {
     val u = docs.agg(count(lit(1)), count_distinct(col("id"))).head()
     if (u.getLong(0) == u.getLong(1)) assigned
     else {
-      val sigsStr = trackPersist(signatures(docs, cfg)
-        .select(col("conv_id"), col("minhash")))
+      val sigsStr = trackPersist(minhashes(docs, cfg))
       connectedComponents(
         verifyPairs(candidatePairs(bands(sigsStr, cfg), cfg), docs, cfg),
         docs.select(col("conv_id")))

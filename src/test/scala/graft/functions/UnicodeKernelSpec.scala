@@ -28,7 +28,7 @@ class UnicodeKernelSpec extends AnyFunSuite {
     val ua = UTF8String.fromString(a); val ub = UTF8String.fromString(b)
     val m = PairVerify.computeWith(new PairVerify.Scratch(false), ua, ub, K, Seed, probe = false)
     val p = PairVerify.computeWith(new PairVerify.Scratch(true), ua, ub, K, Seed, probe = true)
-    (m, p)
+    (VerifyKernelSpec.tuple(m), VerifyKernelSpec.tuple(p))
   }
 
   test("kernels agree with each other and the set oracle on multi-byte unicode") {

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +15,7 @@ class VerifyKernelSpec extends AnyFunSuite {
     val ua = UTF8String.fromString(a); val ub = UTF8String.fromString(b)
     val m = PairVerify.computeWith(new PairVerify.Scratch(false), ua, ub, k, seed, probe = false)
     val p = PairVerify.computeWith(new PairVerify.Scratch(true), ua, ub, k, seed, probe = true)
-    (m, p)
+    (VerifyKernelSpec.tuple(m), VerifyKernelSpec.tuple(p))
   }
 
   test("kernels agree on random near-dup and unrelated docs") {
@@ -56,8 +57,8 @@ class VerifyKernelSpec extends AnyFunSuite {
     (0 until 50).foreach { i =>
       val b = UTF8String.fromString(
         "the quick brown fox jumps over the lazy dog " * 20 + ("x" * rnd.nextInt(10)) + i)
-      val m = PairVerify.computeWith(sm, a, b, 8, 9001L, probe = false)
-      val p = PairVerify.computeWith(sp, a, b, 8, 9001L, probe = true)
+      val m = VerifyKernelSpec.tuple(PairVerify.computeWith(sm, a, b, 8, 9001L, probe = false))
+      val p = VerifyKernelSpec.tuple(PairVerify.computeWith(sp, a, b, 8, 9001L, probe = true))
       assert(m === p)
     }
   }
@@ -73,6 +74,40 @@ class VerifyKernelSpec extends AnyFunSuite {
     assert(m === p)
     val (m2, p2) = both(big, big)
     assert(m2 === p2 && m2._1 === 1.0)
+  }
+
+  test("a repeated pair returns the last row with no second Jaccard probe") {
+    val s = new PairVerify.Scratch(true)
+    def u(t: String) = UTF8String.fromString(t)
+    val base = "the quick brown fox jumps over the lazy dog " * 20
+    val a = u(base); val b = u(base + "tail"); val c = u(base + "other tail")
+    val first = PairVerify.computeWith(s, a, b, 8, 9001L, probe = true)
+    // equal bytes in fresh objects: both memos hit, so the row is reused
+    // as is; every computed row is a new object, so `eq` means no probe ran
+    assert(PairVerify.computeWith(s, u(base), u(base + "tail"), 8, 9001L, probe = true) eq first)
+    val ac = PairVerify.computeWith(s, a, c, 8, 9001L, probe = true)
+    assert(!(ac eq first))
+    assert(VerifyKernelSpec.tuple(ac) ===
+      VerifyKernelSpec.tuple(PairVerify.computeWith(new PairVerify.Scratch(true), a, c, 8, 9001L, probe = true)))
+    val again = PairVerify.computeWith(s, a, b, 8, 9001L, probe = true)
+    assert(!(again eq first) && VerifyKernelSpec.tuple(again) === VerifyKernelSpec.tuple(first))
+    // a different (k, seed) misses the memo
+    val k4 = PairVerify.computeWith(s, a, b, 4, 9001L, probe = true)
+    assert(!(k4 eq again))
+    assert(VerifyKernelSpec.tuple(k4) ===
+      VerifyKernelSpec.tuple(PairVerify.computeWith(new PairVerify.Scratch(true), a, b, 4, 9001L, probe = true)))
+  }
+
+  test("a side past RetainCap is never memoized, so its pair is recomputed") {
+    val rnd = new java.util.Random(9)
+    val sb = new StringBuilder
+    (0 until PairVerify.RetainCap + 1000).foreach(_ => sb.append((32 + rnd.nextInt(95)).toChar))
+    val big = UTF8String.fromString(sb.toString)
+    val small = UTF8String.fromString(sb.substring(0, 5000))
+    val s = new PairVerify.Scratch(true)
+    val r1 = PairVerify.computeWith(s, big, small, 8, 9001L, probe = true)
+    val r2 = PairVerify.computeWith(s, big, small, 8, 9001L, probe = true)
+    assert(!(r2 eq r1) && VerifyKernelSpec.tuple(r2) === VerifyKernelSpec.tuple(r1))
   }
 
   test("LongHashSet: add/contains/dedup, zero element, reuse via reset") {
@@ -99,4 +134,9 @@ class VerifyKernelSpec extends AnyFunSuite {
       assert(LongHashSet.jaccardProbe(ha, hb) === Shingles.jaccardSorted(sa, sb))
     }
   }
+}
+
+object VerifyKernelSpec {
+  /** A pair_verify row as (jaccard, simhash_dist). */
+  def tuple(r: InternalRow): (Double, Int) = (r.getDouble(0), r.getInt(1))
 }

@@ -1,6 +1,14 @@
 package graft.pipeline
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftTestBridge
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.DedupConfig
 
@@ -68,6 +76,49 @@ class PlanContractSpec extends AnyFunSuite {
     // text_signature projection must sit under one, not in a fallback
     val sigLine = p.linesIterator.find(_.contains("text_signature")).getOrElse("")
     assert(sigLine.contains("*("), s"signature projection not codegen'd:\n$p")
+  }
+
+  /** The executed plans of every Dataset action `f` runs. */
+  private def executedPlans(f: => Any): Seq[String] = {
+    val sc = spark.sparkContext
+    GraftTestBridge.drainListeners(sc)
+    val plans = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString())
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      GraftTestBridge.drainListeners(sc)
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  test("banding runs text_minhash, never text_signature: checkpointed bands write and runWithDocs") {
+    val tdf = Transcripts.asDataFrame(spark, Transcripts.generate(60), 4)
+    val root = java.nio.file.Files.createTempDirectory("plancontract").toFile
+    try {
+      val ckpt = executedPlans {
+        new CheckpointedDedup(new ParquetTableIO(root.toString), DedupConfig(), "run-P").run(tdf)
+      }
+      val bandsWrite = ckpt.filter(_.linesIterator.exists(l =>
+        l.contains("InsertIntoHadoopFsRelationCommand") && l.contains("/run-P/bands,")))
+      assert(bandsWrite.size === 1, ckpt.map(_.take(300)).mkString("\n---\n"))
+      assert(bandsWrite.head.contains("text_minhash("), bandsWrite.head)
+      assert(!ckpt.exists(_.contains("text_signature(")), "a checkpointed stage ran text_signature")
+    } finally CheckpointLineageSpec.deleteDir(root)
+
+    var asg: DataFrame = null
+    val inmem = executedPlans {
+      asg = DedupPipeline.runWithDocs(DedupPipeline.buildDocs(tdf), DedupConfig())
+      asg.count()
+    }
+    val all = inmem :+ plan(asg)
+    assert(all.exists(_.contains("text_minhash(")), all.mkString("\n---\n").take(4000))
+    assert(!all.exists(_.contains("text_signature(")), "runWithDocs ran text_signature")
+    DedupPipeline.unpersistIntermediates(spark)
   }
 
   test("no cartesian product anywhere in the end-to-end dedup plan") {
