@@ -4,7 +4,7 @@ import scala.collection.mutable
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.DedupConfig
 import graft.sketch.HllSketch
@@ -12,11 +12,15 @@ import graft.sketch.HllSketch
 /** Checkpointed, resumable pipeline runner (SURVEY §2b P10–P12; north rule:
   * "resumable from checkpoint with per-partition lineage + metrics").
   *
-  * Five stages, those of `DedupPipeline.runWithDocs`: docs → bands →
-  * cand_pairs → verified_pairs → cluster_assignments. `bands` holds the
-  * signature kernel's compact product (32 band keys per doc, not 128
-  * minhash values), so a crash after it never reruns the costliest stage.
-  * An older run's `signatures` table and lineage rows are never read.
+  * It applies `DedupPipeline.stages`, the composition `runWithDocs` runs in
+  * memory, and commits each stage as a table: docs (with their `id`) →
+  * bands (id, band_key) → cand_pairs (id pairs) → verified_pairs →
+  * cluster_assignments. `bands` holds the signature kernel's compact
+  * product (32 band keys per doc, not 128 minhash values), so a crash
+  * after it never reruns the costliest stage. The ids are fixed by the
+  * docs table; a run directory whose docs table has no `id` (written
+  * before ids existed) fails on resume and needs a new run id. An older
+  * run's `signatures` table and lineage rows are never read.
   *
   * Every stage materializes its output table plus per-partition lineage
   * rows in a `metrics` table:
@@ -41,8 +45,9 @@ import graft.sketch.HllSketch
   * Job budget: a computed stage costs its own write plus the metrics
   * append; a skipped stage costs no job. A run reads the metrics table
   * once, as (stage, rows_out) rows: that decides which stages are
-  * complete and chains rows_in(stage N) = Σrows_out(stage N-1). Only the
-  * docs stage counts its input.
+  * complete and chains rows_in(stage N) = Σrows_out(stage N-1). The docs
+  * stage's rows_in is the turns it grouped, Σn_turns, observed in its
+  * own write.
   */
 final class CheckpointedDedup(
     io: TableIO,
@@ -69,29 +74,14 @@ final class CheckpointedDedup(
     computedStages = Nil
     rowsOut.clear()
     rowsOut ++= lineageTotals(spark)
-
-    val docs = stage(spark, "docs", keyCols = Seq("conv_id"),
-      rowsIn = transcripts.count()) { () =>
-      docsBuilder.map(_.apply()).getOrElse(DedupPipeline.buildDocs(transcripts))
-    }
-    val bands = stage(spark, "bands", keyCols = Seq("conv_id", "band_key"),
-      rowsIn = rowsOut("docs")) { () =>
-      // text_minhash fuses into the band explode, as in runWithDocs
-      DedupPipeline.bands(DedupPipeline.minhashes(docs, cfg), cfg)
-    }
-    val cand = stage(spark, "cand_pairs", keyCols = Seq("a", "b"),
-      rowsIn = rowsOut("bands")) { () =>
-      DedupPipeline.candidatePairs(bands, cfg)
-    }
-    val verified = stage(spark, "verified_pairs", keyCols = Seq("a", "b"),
-      rowsIn = rowsOut("cand_pairs")) { () =>
-      DedupPipeline.verifyPairs(cand, docs, cfg)
-    }
-    val assignments = stage(spark, "cluster_assignments", keyCols = Seq("conv_id", "cluster_id"),
-      rowsIn = rowsOut("verified_pairs")) { () =>
-      DedupPipeline.connectedComponents(verified, docs.select(col("conv_id")))
-    }
-    assignments
+    var previous: Option[String] = None
+    DedupPipeline.stages(
+      () => docsBuilder.map(_.apply()).getOrElse(DedupPipeline.buildDocs(transcripts)), cfg,
+      (name, keyCols) => body => {
+        val out = stage(spark, name, keyCols, previous)(body)
+        previous = Some(name)
+        out
+      })
   }
 
   /** Read the metrics table (for tests / the resume planner). */
@@ -112,19 +102,27 @@ final class CheckpointedDedup(
     io.write(spark.createDataFrame(java.util.Arrays.asList(kept: _*), m.schema), metricsName)
   }
 
+  /** Reads `name`'s table if it is complete, else computes, writes and
+    * records it. rows_in is Σrows_out of the `previous` stage; the first
+    * stage, docs, observes Σn_turns instead. */
   private def stage(spark: SparkSession, name: String, keyCols: Seq[String],
-                    rowsIn: => Long)(compute: () => DataFrame): DataFrame = {
+                    previous: Option[String])(compute: () => DataFrame): DataFrame = {
     val table = s"$runId/$name"
     if (rowsOut.contains(name) && io.exists(spark, table)) io.read(spark, table)
     else {
-      val (out, observation) = observeLineage(compute(), keyCols)
+      val turns = if (previous.isEmpty) Some(col("n_turns")) else None
+      val (out, observation) = observeLineage(compute(), keyCols, turns)
       io.write(out, table)
       // stage output is on disk: release any intermediates the pipeline
       // persisted while computing it (verifyPairs' spread, winnow tables)
       DedupPipeline.unpersistIntermediates(spark)
       computedStages = computedStages :+ name
-      val observed = lineageOf(observation)
-      val parts = if (observed.isEmpty) Seq(EmptyLineage) else observed
+      val observed = Await.result(observation.future, 10.minutes)
+      val rowsIn = previous.fold(observed.getLong(1))(rowsOut)
+      val parts = observed.getSeq[Row](0) match {
+        case Seq() => Seq(EmptyLineage)
+        case rows => rows
+      }
       // the table vanished while its lineage stayed: replace, not add to, it
       if (rowsOut.contains(name)) dropLineage(spark, name)
       rowsOut(name) = parts.map(_.getLong(1)).sum
@@ -145,23 +143,20 @@ object CheckpointedDedup {
     Row(0, 0L, 0L, new HllSketch(HllSketch.DefaultLgK).serialize())
 
   /** `df` observed by a `PartitionLineageAgg` over `keyCols` (checksum
-    * over all of them, HLL over the first), plus the Observation that
-    * completes when the returned DataFrame has been written. */
-  private def observeLineage(df: DataFrame, keyCols: Seq[String]): (DataFrame, Observation) = {
+    * over all of them, HLL over the first) and, when given, the sum of
+    * `inputRows`, plus the Observation that completes when the returned
+    * DataFrame has been written. Spark delivers the observed row through
+    * its listener bus shortly after the write returns; the caller's bound
+    * on the wait only turns a TableIO that never executed the DataFrame it
+    * was given into an error instead of a hang. */
+  private def observeLineage(df: DataFrame, keyCols: Seq[String],
+                             inputRows: Option[Column]): (DataFrame, Observation) = {
     val agg = PartitionLineageAgg(
       GraftBridge.expression(xxhash64(keyCols.map(col): _*)),
       GraftBridge.expression(col(keyCols.head)))
+    val lineage = GraftBridge.column(agg.toAggregateExpression()).as("lineage")
     val observation = Observation()
-    (df.observe(observation, GraftBridge.column(agg.toAggregateExpression()).as("lineage")),
-      observation)
-  }
-
-  /** The per-partition lineage rows (partition_id, rows_out, checksum,
-    * hll_sketch) an `observeLineage` observation delivered. Spark delivers
-    * them through its listener bus shortly after the write returns; the
-    * bound only turns a TableIO that never executed the DataFrame it was
-    * given into an error instead of a hang. */
-  private def lineageOf(observation: Observation): Seq[Row] = {
-    Await.result(observation.future, 10.minutes).getSeq[Row](0)
+    val sums = inputRows.map(c => coalesce(sum(c), lit(0L)).as("rows_in")).toSeq
+    (df.observe(observation, lineage, sums: _*), observation)
   }
 }

@@ -12,8 +12,13 @@ import graft.core._
   *  - P2 doc reconstruction: ONE shuffle on conv_id; stable (turn_idx, ts)
   *    ordering done with array_sort inside the aggregate, not a window
   *    (windows would shuffle + sort the full turn stream twice).
-  *  - P3/P4 signatures: map-side only, no shuffle. One pass computes
-  *    shingles + MinHash + SimHash per doc.
+  *  - Keys: `withIds` gives each doc an id ordered as (xxhash64(conv_id),
+  *    conv_id), so every stage between docs and CC joins and sorts on one
+  *    8-byte key that cannot collide. `stages` is the one composition both
+  *    runners apply.
+  *  - P3/P4 signatures: map-side only, no shuffle. Banding reads
+  *    text_minhash, fused into the band explode; verification recomputes
+  *    shingle sets and the SimHash pair-locally (pair_verify).
   *  - P5 banding: map-side explode; band keys are codegen'd built-ins
   *    (xxhash64 over signature slices).
   *  - P6 candidates: groupBy-free "chain + star" within each band bucket
@@ -39,7 +44,8 @@ object DedupPipeline {
   private val ccLog = org.slf4j.LoggerFactory.getLogger("graft.pipeline.DedupPipeline")
 
   /** Intermediates persisted by pipeline stages (verifyPairs' spread pair
-    * stream, the winnow bucket/vocabulary tables, run()'s docs/sigs),
+    * stream, the winnow docs/bucket/vocabulary tables, runWithDocs' docs
+    * and salted bands),
     * tracked per session so long-lived callers can release them: Spark
     * never auto-unpersists, and repeated library calls in one session
     * would otherwise accumulate cached blocks (ADVICE r3). Unpersisting
@@ -376,8 +382,10 @@ object DedupPipeline {
     * banding reads (text_minhash: no shingle sort, SimHash or shingle
     * array; bit-identical to `signatures`' minhash column). */
   def minhashes(docs: DataFrame, cfg: DedupConfig): DataFrame =
-    docs.select(col("conv_id"),
-      graft.functions.text_minhash(col("doc"), cfg.shingleK, cfg.numHashes, cfg.seed).as("minhash"))
+    docs.select(col("conv_id"), minhash(cfg))
+
+  private def minhash(cfg: DedupConfig): Column =
+    graft.functions.text_minhash(col("doc"), cfg.shingleK, cfg.numHashes, cfg.seed).as("minhash")
 
   /** P5: signatures → bands(conv_id, band_key).
     * band_key folds the band index in, so one global shuffle key space
@@ -427,10 +435,10 @@ object DedupPipeline {
 
   /** The chain+star candidate body both key types share. Bucket members
     * are ordered by (keyHash, key), or by key alone when `keyHash` is None
-    * — the id key IS xxhash64(conv_id), so while ids are unique both keys
-    * see the same total order. The salt is pmod(keyHash, S) (the id
-    * itself for the id key); each sub-bucket enters the across pass
-    * through its min(key). Returns (a, b) keys, a < b. */
+    * — ids from `withIds` are ordered as (xxhash64(conv_id), conv_id) is,
+    * so both keys see the same total order. The salt is pmod(keyHash, S)
+    * (the id itself for the id key); each sub-bucket enters the across
+    * pass through its min(key). Returns (a, b) keys, a < b. */
   private def chainStarPairs(bands: DataFrame, key: String, keyHash: Option[Column],
                              cfg: DedupConfig): DataFrame = {
     val k = col(key)
@@ -748,39 +756,26 @@ object DedupPipeline {
                            subBucketSize: Int = 64,
                            stopFpFreq: Int = 4096,
                            tier2PairRecall: Boolean = false): DataFrame = {
-    // id-keyed internals (same rationale as the minhash path): the tier-1
-    // pair stream is quadratic in template-family size — 6.5M weighted
-    // instances from 5k docs at sf0.1 — and every explode/shuffle/groupBy
-    // row carried two conv_id strings. Re-keying the SAME generic body by
-    // xxhash64(conv_id) makes those rows three fixed longs; the survivor
-    // set (3-4 orders of magnitude smaller) maps back through a join and
-    // re-orients lexicographically. Tier-1 all-pairs evidence and cluster
-    // connectivity are key-insensitive and unchanged; the tier-2 sub-bucket
-    // split hashes the key VALUE (pmod(xxhash64(key, band), S)), so the
-    // tier-2 probabilistic pair sample differs between the long-keyed and
-    // string-fallback paths (ADVICE r4): the two compare on recall, not
-    // on candidate identity.
-    // Guarded by the same uniqueness check + string fallback as run().
-    val u = docs.agg(count(lit(1)), count_distinct(xxhash64(col("conv_id")))).head()
-    if (u.getLong(0) == u.getLong(1)) {
-      val idDocs = docs.select(xxhash64(col("conv_id")).as("conv_id"), col("doc"))
-      val idPairs = winnowCandidatePairsKeyed(idDocs, k, w, cfg, minFpOverlap,
-        allPairsCap, subBucketSize, stopFpFreq, tier2PairRecall)
-      val idMap = docs.select(xxhash64(col("conv_id")).as("k"), col("conv_id"))
-      idPairs
-        .join(idMap.select(col("k").as("a"), col("conv_id").as("ca")), Seq("a"))
-        .join(idMap.select(col("k").as("b"), col("conv_id").as("cb")), Seq("b"))
-        .select(least(col("ca"), col("cb")).as("a"),
-          greatest(col("ca"), col("cb")).as("b"))
-    } else {
-      winnowCandidatePairsKeyed(docs, k, w, cfg, minFpOverlap,
-        allPairsCap, subBucketSize, stopFpFreq, tier2PairRecall)
-    }
+    // keyed by withIds' ids, as the minhash path is: the tier-1 pair stream
+    // is quadratic in template-family size — 6.5M weighted instances from
+    // 5k docs at sf0.1 — and keyed by conv_id every explode/shuffle/groupBy
+    // row carried two strings; keyed by id those rows are three fixed
+    // longs. The survivor set (3-4 orders of magnitude smaller) maps back
+    // through the same persisted docs and re-orients lexicographically.
+    // The tier-2 sub-bucket split hashes the key value
+    // (pmod(xxhash64(key, band), S)), so that tier's probabilistic pair
+    // sample depends on the ids (ADVICE r4); tier-1 evidence and cluster
+    // connectivity do not.
+    val idDocs = trackPersist(withIds(docs.select(col("conv_id"), col("doc"))))
+    winnowCandidatePairsKeyed(idDocs.select(col("id").as("conv_id"), col("doc")), k, w, cfg,
+        minFpOverlap, allPairsCap, subBucketSize, stopFpFreq, tier2PairRecall)
+      .join(idDocs.select(col("id").as("a"), col("conv_id").as("ca")), Seq("a"))
+      .join(idDocs.select(col("id").as("b"), col("conv_id").as("cb")), Seq("b"))
+      .select(least(col("ca"), col("cb")).as("a"), greatest(col("ca"), col("cb")).as("b"))
   }
 
-  /** The winnow candidate body, generic over the `conv_id` column type
-    * (string corpus keys or 64-bit ids — every operation on the key is
-    * type-agnostic: sort_array, xxhash64 salting, least/greatest). */
+  /** The winnow candidate body over docs whose `conv_id` column holds
+    * withIds' ids. Returns (a, b) ids, a < b. */
   private def winnowCandidatePairsKeyed(docs: DataFrame, k: Int, w: Int,
                            cfg: DedupConfig,
                            minFpOverlap: Double,
@@ -1136,42 +1131,46 @@ object DedupPipeline {
     (c, x)
   }
 
-  // ---- id-keyed internal path --------------------------------------------
-  //
-  // runWithDocs (and with it run, q12, streaming and the benches) keys docs
-  // by id = xxhash64(conv_id) between the scan and the final output;
-  // CheckpointedDedup (graft.Main), q09–q11 and SkewTools keep the conv_id
-  // string. Each stage has ONE body both keys call — bandsOf,
-  // chainStarPairs, verifyGate — so the key choice changes the key column
-  // and the bucket order, not the stage. Motivation for the id key is byte
-  // traffic through the shuffle/sort stages: at high core counts the
-  // shared memory bus is the scarce resource (BENCH/BASELINE.md MemBw:
-  // per-thread DRAM bandwidth at 32 threads is ~7x lower than at 8), so a
-  // fixed 8-byte sort/join key in place of a variable-length UTF8 string
-  // (+16 bytes/row in UnsafeRow terms, plus pointer-chasing comparisons)
-  // directly lifts the wide-cluster legs. The banding window orders
-  // string members by (xxhash64(conv_id), conv_id) — the id key just
-  // stops carrying the string alongside its own hash. conv_id strings
-  // re-enter through the verification join (they ride with the doc text,
-  // which dominates that join's bytes anyway), so no extra mapping join
-  // exists. The two verify join preambles stay separate on purpose: the
-  // string one lets AQE pick the spread width (small query and resume
-  // streams), the id one fixes it (the 1M in-memory waves).
-  //
-  // Correctness: ids are verified globally unique with one cheap
-  // aggregation over the persisted docs (count vs count_distinct; at 10^6
-  // docs the collision probability is ~3e-8, at 10^9 ~3e-2 — the check is
-  // NOT optional); on a collision runWithDocs falls back to the string
-  // key, whose candidate order (xxhash64(conv_id), conv_id) the id order
-  // equals while ids are unique, so both keys give the identical edge set
-  // (KeyEquivalenceSpec).
+  /** docs plus `id`, ordered as (xxhash64(conv_id), conv_id) is. The top
+    * 20 bits of the hash, in signed order, pick one of 2^20 contiguous
+    * hash ranges (id bits 43-62); the doc's position inside its range
+    * under that order fills bits 16-42; bits 0-15 repeat the hash's low
+    * bits.
+    *  - Distinct while no range holds 2^27 docs (a range is 2^-20 of the
+    *    hash space), a null conv_id included: no uniqueness audit, no
+    *    fallback key.
+    *  - Id order is the order candidatePairs sorts string bucket members
+    *    by, so chain+star emits the same candidates on either key
+    *    (KeyEquivalenceSpec).
+    *  - A function of the doc set alone, not of its partitioning: a
+    *    recomputation gives the same ids.
+    *  - The low bits vary. Spark's fast aggregate hash map folds a long
+    *    key to (v ^ v >>> 32); with constant low bits most keys share a
+    *    few buckets, and the id-keyed distincts held four more 16 MB
+    *    memory pages at a time (perfbench `mixed` on 4 cores:
+    *    heap_peak_mb +28%).
+    *  - The cost is one window shuffle and sort of the docs, and no sample
+    *    job: a range-partitioned sort runs its child once more for the
+    *    bounds.
+    * Callers keep the result (the checkpointed docs table, runWithDocs'
+    * persisted docs), so the shuffle runs once. */
+  private[graft] def withIds(docs: DataFrame): DataFrame = {
+    val h = xxhash64(col("conv_id"))
+    val range = shiftrightunsigned(h.bitwiseXOR(lit(Long.MinValue)), 64 - IdRangeBits)
+    val pos = row_number().over(Window.partitionBy(range).orderBy(h, col("conv_id"))) - 1
+    docs.withColumn("id", shiftleft(range, 63 - IdRangeBits) +
+      shiftleft(pos.cast("long"), IdLowBits) + h.bitwiseAND(lit((1L << IdLowBits) - 1)))
+  }
+
+  private val IdRangeBits = 20
+  private val IdLowBits = 16
 
   /** P5, id form: bands(id, band_key). Same band keys as `bands`. */
   private[graft] def bandsById(sigs: DataFrame, cfg: DedupConfig): DataFrame =
     bandsOf(sigs, "id", cfg)
 
   /** P6, id form: chain+star per band bucket ordered by id — the same
-    * total order as the string key (id IS xxhash64(conv_id)), minus the
+    * total order as the string key when ids come from `withIds`, minus the
     * string payload in the window sort. Returns (a, b) ids, a < b. */
   private[graft] def candidatePairsById(bands: DataFrame, cfg: DedupConfig): DataFrame =
     chainStarPairs(bands, "id", None, cfg)
@@ -1213,47 +1212,42 @@ object DedupPipeline {
 
   /** Full pipeline over pre-reconstructed docs (conv_id, doc, n_turns,
     * doc_len) — the entry for layouts with their own reconstruction path
-    * (BucketedCorpus.readDocs streams docs off the bucket sort). */
-  def runWithDocs(docs0: DataFrame,
-                  cfg: DedupConfig = DedupConfig()): DataFrame = {
-    // docs/sigs feed multiple downstream joins — persist so the signature
-    // computation runs once, not once per consumer (the checkpointed
-    // runner materializes to parquet instead)
-    val docs = trackPersist(docs0
-      .withColumn("id", xxhash64(col("conv_id"))))
-    // banding needs only the minhash; dropping the shingle arrays (~16x
-    // the minhash size) from the persisted footprint keeps the cache hot.
-    // Persist ONLY when the salted path consumes bands twice (within +
-    // across-minima): at bandSalt=1 (default) sigs has exactly one
-    // consumer, and caching it costs a ~1 GB columnar write PLUS a
-    // per-row array decode on re-read that is the pipeline's
-    // worst-scaling stage (BandProbe: the cached-minhash scan+explode
-    // runs 51 core-s at 8 threads but 190 at 32 — eff 0.27, pure memory
-    // stall). Unpersisted, text_minhash fuses straight into the band
-    // explode + exchange in one codegen pass over the docs cache.
-    val sigs0 = docs.select(col("id"),
-      graft.functions.text_minhash(col("doc"), cfg.shingleK, cfg.numHashes, cfg.seed).as("minhash"))
-    val sigs = if (cfg.bandSalt > 1) trackPersist(sigs0) else sigs0
-    val assigned = connectedComponents(
-      verifyPairsById(candidatePairsById(bandsById(sigs, cfg), cfg), docs, cfg),
-      docs.select(col("conv_id")))
-    // xxhash64-injectivity audit, POST-HOC off the docs cache (one row
-    // per conversation). connectedComponents materializes the edge set
-    // internally, so by this point docs is cached and the agg is a
-    // ~0.1 s cache read. The former EAGER probe (rawIds.distinct + agg
-    // before the main DAG) was a whole extra column-pruned corpus scan
-    // plus a distinct shuffle — at 10^12 turns a full extra pass over
-    // the conv_id column, and a width-invariant ~1-3 s on every bench
-    // leg (ProbeCost: 3.2/2.9 s cold at 8/32 cores). Optimism is safe:
-    // on the ~2^-45 collision (probability ~n²/2^65) the id-keyed work is
-    // discarded unseen and the string key recomputes identical semantics.
-    val u = docs.agg(count(lit(1)), count_distinct(col("id"))).head()
-    if (u.getLong(0) == u.getLong(1)) assigned
-    else {
-      val sigsStr = trackPersist(minhashes(docs, cfg))
-      connectedComponents(
-        verifyPairs(candidatePairs(bands(sigsStr, cfg), cfg), docs, cfg),
-        docs.select(col("conv_id")))
-    }
+    * (BucketedCorpus.readDocs streams docs off the bucket sort). `stages`
+    * in memory: only what two consumers read is persisted. */
+  def runWithDocs(docs: DataFrame,
+                  cfg: DedupConfig = DedupConfig()): DataFrame =
+    stages(() => docs, cfg, (name, _) => body => name match {
+      // docs feed banding, verify and CC's node list, and hold the ids
+      case "docs" => trackPersist(body())
+      // salted banding reads bands twice (within + across minima). At
+      // bandSalt 1 they have one consumer: caching them would cost a
+      // columnar write plus a per-row decode on re-read, while unpersisted
+      // text_minhash fuses into the band explode + exchange in one codegen
+      // pass over the docs cache.
+      case "bands" if cfg.bandSalt > 1 => trackPersist(body())
+      case _ => body()
+    })
+
+  /** How a runner materializes one stage: given the stage's table name and
+    * its lineage key columns, it turns the stage's body into the frame
+    * later stages read. */
+  private[pipeline] type Commit = (String, Seq[String]) => (() => DataFrame) => DataFrame
+
+  /** The dedup stages, in order, each handed to `commit`: docs (with
+    * `withIds`) → bands → cand_pairs → verified_pairs →
+    * cluster_assignments. bands and cand_pairs are keyed by id; conv_id
+    * strings re-enter through verify's doc join. runWithDocs and
+    * CheckpointedDedup.run are the two commits. */
+  private[pipeline] def stages(docs: () => DataFrame, cfg: DedupConfig,
+                               commit: Commit): DataFrame = {
+    val docsWithId = commit("docs", Seq("conv_id"))(() => withIds(docs()))
+    val bands = commit("bands", Seq("id", "band_key"))(() =>
+      bandsById(docsWithId.select(col("id"), minhash(cfg)), cfg))
+    val cand = commit("cand_pairs", Seq("a", "b"))(() => candidatePairsById(bands, cfg))
+    val verified = commit("verified_pairs", Seq("a", "b"))(() =>
+      verifyPairsById(cand, docsWithId, cfg))
+    commit("cluster_assignments", Seq("conv_id", "cluster_id"))(() =>
+      connectedComponents(verified, docsWithId.select(col("conv_id"))))
   }
 }
+

@@ -32,10 +32,11 @@ object PlanDump {
     def pseudo(q: String): Option[org.apache.spark.sql.DataFrame] = q match {
       case "pipeline_candidates" =>
         val cfg = graft.core.DedupConfig()
-        val sigs = spark.read.parquet(s"$dir/documents.parquet")
-          .select(xxhash64(col("doc_id").cast("string")).as("id"),
-            graft.functions.text_signature(col("text"), cfg.shingleK,
-              cfg.numHashes, cfg.seed).getField("minhash").as("minhash"))
+        val docs = graft.pipeline.DedupPipeline.withIds(
+          spark.read.parquet(s"$dir/documents.parquet")
+            .select(col("doc_id").cast("string").as("conv_id"), col("text").as("doc")))
+        val sigs = docs.select(col("id"), graft.functions.text_minhash(col("doc"),
+          cfg.shingleK, cfg.numHashes, cfg.seed).as("minhash"))
         Some(graft.pipeline.DedupPipeline.candidatePairsById(
           graft.pipeline.DedupPipeline.bandsById(sigs, cfg), cfg))
       case "pipeline_docs" =>

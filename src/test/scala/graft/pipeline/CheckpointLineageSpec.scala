@@ -139,22 +139,60 @@ class CheckpointLineageSpec extends AnyFunSuite {
     assert(p.computedStages === Stages)
     assert(!io.exists(spark, "run-T/signatures"), "the signatures stage is gone")
 
-    // bands: the public two-step path is the oracle, compared as multisets
+    // bands and cand_pairs are keyed by the docs table's ids
+    val convOf = io.read(spark, "run-T/docs").select("id", "conv_id").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
     val convIds = turns.map(_.conv_id).distinct.sorted
-    def bandRows(df: DataFrame) = df.select("conv_id", "band_key").collect()
-      .map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
+    assert(convOf.size === convIds.length, "ids are distinct")
+
+    // bands: the public two-step path is the oracle, compared as multisets
+    val bandRows = io.read(spark, "run-T/bands").select("id", "band_key").collect()
+      .map(r => (convOf(r.getLong(0)), r.getLong(1))).sorted.toSeq
     val docs = DedupPipeline.buildDocs(tdf)
-    val oracle = bandRows(DedupPipeline.bands(DedupPipeline.signatures(docs, cfg), cfg))
+    val oracle = DedupPipeline.bands(DedupPipeline.signatures(docs, cfg), cfg)
+      .select("conv_id", "band_key").collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
     assert(oracle.length === convIds.length * cfg.bands)
-    assert(bandRows(io.read(spark, "run-T/bands")) === oracle)
+    assert(bandRows === oracle)
+
+    // cand_pairs: the string-keyed candidatePairs is the oracle
+    val cand = io.read(spark, "run-T/cand_pairs").collect()
+      .map(r => (convOf(r.getLong(0)), convOf(r.getLong(1))))
+      .map { case (a, b) => if (a < b) (a, b) else (b, a) }
+    assert(cand.distinct.length === cand.length)
+    val candOracle = DedupPipeline.candidatePairs(DedupPipeline.bands(
+      DedupPipeline.minhashes(docs, cfg), cfg), cfg).collect().map(r => (r.getString(0), r.getString(1)))
+    assert(cand.toSet === candOracle.toSet)
 
     // one assignment per doc, including docs no candidate pair touches
     val assigned = io.read(spark, "run-T/cluster_assignments")
       .select("conv_id").collect().map(_.getString(0)).sorted.toSeq
     assert(assigned === convIds)
-    val paired = io.read(spark, "run-T/cand_pairs").collect()
-      .flatMap(r => Seq(r.getString(0), r.getString(1))).toSet
+    val paired = cand.flatMap { case (a, b) => Seq(a, b) }.toSet
     assert(convIds.exists(c => !paired.contains(c)), "corpus has no singleton doc")
+  }
+
+  test("docs rows_in is the transcript row count, null conv_id and null text rows included") {
+    val t0 = new java.sql.Timestamp(0L)
+    val odd = Seq(
+      Transcripts.Turn(null, 0, "user", "a turn of a conversation without an id", null, t0),
+      Transcripts.Turn(null, 1, "assistant", null, null, t0),
+      Transcripts.Turn("conv-odd", 0, "user", null, null, t0),
+      Transcripts.Turn("conv-odd", 1, "user", null, null, t0))
+    val df = Transcripts.asDataFrame(spark, turns ++ odd, 6)
+    val io = new ParquetTableIO(Files.createTempDirectory("lineage").toString)
+    new CheckpointedDedup(io, cfg, "run-N").run(df)
+    val docsIn = io.read(spark, "run-N/metrics").where(col("stage") === "docs")
+      .select("rows_in").distinct().collect().map(_.getLong(0)).toSeq
+    assert(docsIn === Seq(df.count()))
+    assert(df.count() === turns.size + 4L)
+  }
+
+  test("job budget: a fresh run counts its input turns inside the docs write") {
+    tdf.count()
+    val io = new ParquetTableIO(Files.createTempDirectory("lineage").toString)
+    // 29 jobs on this corpus; a separate count of the transcripts for the
+    // docs stage's rows_in made it 30
+    assert(jobsOf { new CheckpointedDedup(io, cfg, "run-K").run(tdf) } === 29)
   }
 
   test("job budget: a no-op resume submits one job, a table read none") {
@@ -188,7 +226,7 @@ object CheckpointLineageSpec {
 
   /** The lineage key columns CheckpointedDedup uses per stage. */
   val StageKeys: Seq[(String, Seq[String])] = Stages.zip(Seq(
-    Seq("conv_id"), Seq("conv_id", "band_key"), Seq("a", "b"),
+    Seq("conv_id"), Seq("id", "band_key"), Seq("a", "b"),
     Seq("a", "b"), Seq("conv_id", "cluster_id")))
 
   /** The read-back lineage the in-write lineage replaced, kept as its

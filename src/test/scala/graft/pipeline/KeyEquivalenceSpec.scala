@@ -5,17 +5,16 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.DedupConfig
 
-/** The premise behind runWithDocs' collision fallback: while every
-  * id = xxhash64(conv_id) is unique, the id-keyed stages give the same
-  * candidates, components and verified pairs as the conv_id-keyed ones. */
+/** The id-keyed stages give the same candidates, components and verified
+  * pairs as the conv_id-keyed ones, because `withIds` ranks docs in the
+  * order the string key sorts bucket members by. */
 class KeyEquivalenceSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
   val cfg = DedupConfig()
   lazy val docs = DedupPipeline.buildDocs(
     Transcripts.asDataFrame(spark, Transcripts.generate(200), 8)).cache()
-
-  private def withId(df: DataFrame): DataFrame = df.withColumn("id", xxhash64(col("conv_id")))
+  lazy val docsWithId = DedupPipeline.withIds(docs).cache()
 
   /** 800 rows colliding into ~120 buckets. */
   private lazy val randomBands: DataFrame = {
@@ -28,30 +27,66 @@ class KeyEquivalenceSpec extends AnyFunSuite {
   private lazy val corpusBands: DataFrame =
     DedupPipeline.bands(DedupPipeline.signatures(docs, cfg), cfg)
 
-  /** Both band streams: conv_id-keyed and id-keyed. The corpus id bands
-    * come from bandsById over id-keyed signatures, as runWithDocs makes them. */
-  private def bandStreams: Seq[(String, DataFrame, DataFrame)] = Seq(
-    ("random", randomBands, withId(randomBands).select("id", "band_key")),
-    ("corpus", corpusBands, DedupPipeline.bandsById(
-      withId(DedupPipeline.signatures(docs, cfg)).select("id", "minhash"), cfg)))
+  /** (conv_id, id) of the production ids, computed once. */
+  private def idsOf(convIds: DataFrame): DataFrame =
+    DedupPipeline.withIds(convIds.distinct()).select("conv_id", "id").cache()
+
+  /** Both band streams: conv_id-keyed, id-keyed, and the ids that map one
+    * to the other. The corpus id bands come from bandsById over the docs'
+    * ids, as the pipeline makes them. */
+  private lazy val bandStreams: Seq[(String, DataFrame, DataFrame, DataFrame)] = {
+    val randomIds = idsOf(randomBands.select("conv_id"))
+    Seq(
+      ("random", randomBands,
+        randomBands.join(randomIds, "conv_id").select("id", "band_key"), randomIds),
+      ("corpus", corpusBands, DedupPipeline.bandsById(docsWithId.select(col("id"),
+          graft.functions.text_minhash(col("doc"), cfg.shingleK, cfg.numHashes, cfg.seed)
+            .as("minhash")), cfg),
+        docsWithId.select("conv_id", "id")))
+  }
 
   /** id pairs mapped back to conv_id pairs, oriented a < b. */
-  private def toConvIds(idPairs: DataFrame, bands: DataFrame): DataFrame = {
-    val ids = withId(bands.select("conv_id").distinct())
-    assert(ids.select("id").distinct().count() === ids.count(), "ids are unique")
+  private def toConvIds(idPairs: DataFrame, ids: DataFrame): DataFrame =
     idPairs
       .join(ids.select(col("id").as("a"), col("conv_id").as("ca")), Seq("a"))
       .join(ids.select(col("id").as("b"), col("conv_id").as("cb")), Seq("b"))
       .select(least(col("ca"), col("cb")).as("a"), greatest(col("ca"), col("cb")).as("b"))
-  }
 
   private def pairSet(df: DataFrame): Set[(String, String)] =
     df.select("a", "b").collect().map(r => (r.getString(0), r.getString(1))).toSet
 
+  test("withIds: distinct ids in (xxhash64(conv_id), conv_id) order, a null conv_id included") {
+    import spark.implicits._
+    // 100k docs: thousands of the 2^20 hash ranges hold two docs or more
+    val convIds = ((1 to 100000).map(i => Option(f"c$i%06d")) :+ None).toDF("conv_id")
+    def ids(docs: DataFrame) = DedupPipeline.withIds(docs)
+      .select(col("id"), xxhash64(col("conv_id")).as("h"), col("conv_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2))))
+    val rows = ids(convIds.repartition(6))
+    assert(rows.length === 100001)
+    assert(rows.map(_._1).distinct.length === rows.length, "ids are distinct")
+    assert(rows.groupBy(_._1 >>> 43).exists(_._2.length > 1), "no range holds two docs")
+    assert(rows.forall { case (id, h, _) => (id & 0xffff) == (h & 0xffff) },
+      "the low id bits are not the hash's")
+    // Spark's ascending order: nulls first
+    val byKey = rows.sortWith { case ((_, ha, ca), (_, hb, cb)) =>
+      if (ha != hb) ha < hb
+      else (ca, cb) match {
+        case (None, Some(_)) => true
+        case (Some(x), Some(y)) => x < y
+        case _ => false
+      }
+    }
+    assert(rows.sortBy(_._1).toSeq === byKey.toSeq, "id order is not the string key's order")
+    assert(rows.exists(_._3.isEmpty))
+    // the ids are a function of the doc set, not of its partitioning
+    assert(ids(convIds.repartition(1)).toSet === rows.toSet)
+  }
+
   test("candidatePairsById mapped back to conv_id equals candidatePairs at bandSalt 1") {
-    for ((name, bands, idBands) <- bandStreams) {
+    for ((name, bands, idBands, ids) <- bandStreams) {
       val byString = pairSet(DedupPipeline.candidatePairs(bands, cfg))
-      val byId = pairSet(toConvIds(DedupPipeline.candidatePairsById(idBands, cfg), bands))
+      val byId = pairSet(toConvIds(DedupPipeline.candidatePairsById(idBands, cfg), ids))
       assert(byString.nonEmpty, name)
       assert(byId === byString, name)
     }
@@ -59,13 +94,13 @@ class KeyEquivalenceSpec extends AnyFunSuite {
 
   test("at bandSalt 4 both keys give the same components") {
     val salted = cfg.copy(bandSalt = 4)
-    for ((name, bands, idBands) <- bandStreams) {
+    for ((name, bands, idBands, ids) <- bandStreams) {
       val nodes = bands.select("conv_id").distinct()
       def components(edges: DataFrame): Map[String, String] =
         DedupPipeline.connectedComponents(edges, nodes).collect()
           .map(r => r.getString(0) -> r.getString(1)).toMap
       val byString = components(DedupPipeline.candidatePairs(bands, salted))
-      val byId = components(toConvIds(DedupPipeline.candidatePairsById(idBands, salted), bands))
+      val byId = components(toConvIds(DedupPipeline.candidatePairsById(idBands, salted), ids))
       assert(byString.values.toSet.size < byString.size, s"$name: no edges")
       assert(byId === byString, name)
     }
@@ -78,11 +113,14 @@ class KeyEquivalenceSpec extends AnyFunSuite {
     val byString = rows(DedupPipeline.verifyPairs(cand, docs, cfg))
     // id pairs oriented by id, as candidatePairsById emits them: id order
     // is not conv_id order, so verifyPairsById must re-orient
-    val ha = xxhash64(col("a"))
-    val hb = xxhash64(col("b"))
-    val idCand = cand.select(least(ha, hb).as("a"), greatest(ha, hb).as("b"))
-    assert(idCand.where(col("a") =!= ha).count() > 0, "some pairs flip order")
-    val byId = rows(DedupPipeline.verifyPairsById(idCand, withId(docs), cfg))
+    val ids = docsWithId.select("conv_id", "id")
+    val withIds = cand
+      .join(ids.select(col("conv_id").as("a"), col("id").as("ia")), Seq("a"))
+      .join(ids.select(col("conv_id").as("b"), col("id").as("ib")), Seq("b"))
+    assert(withIds.where(col("ia") > col("ib")).count() > 0, "some pairs flip order")
+    val idCand = withIds.select(least(col("ia"), col("ib")).as("a"),
+      greatest(col("ia"), col("ib")).as("b"))
+    val byId = rows(DedupPipeline.verifyPairsById(idCand, docsWithId, cfg))
     assert(byString.nonEmpty)
     assert(byId === byString)
   }

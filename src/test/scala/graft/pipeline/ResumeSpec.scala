@@ -92,6 +92,31 @@ class ResumeSpec extends AnyFunSuite {
     assert(io.exists(spark, "run-F/signatures"))
   }
 
+  test("a run directory written before doc ids fails loudly on resume") {
+    val root = Files.createTempDirectory("ckpt").toString
+    val io = new ParquetTableIO(root)
+    new CheckpointedDedup(io, cfg, "run-O").run(tdf)
+    // what the string-keyed runner left after a crash just after 'bands':
+    // docs without ids, bands keyed by conv_id, nothing later
+    def rewrite(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+      val rows = df.collect()
+      io.write(spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema), name)
+    }
+    val docs = io.read(spark, "run-O/docs")
+    rewrite(io.read(spark, "run-O/bands").join(docs.select("id", "conv_id"), "id")
+      .select("conv_id", "band_key"), "run-O/bands")
+    rewrite(docs.drop("id"), "run-O/docs")
+    rewrite(io.read(spark, "run-O/metrics").where(col("stage").isin("docs", "bands")),
+      "run-O/metrics")
+    for (s <- Seq("cand_pairs", "verified_pairs", "cluster_assignments"))
+      CheckpointLineageSpec.deleteDir(new java.io.File(s"$root/run-O/$s"))
+
+    val resumed = new CheckpointedDedup(io, cfg, "run-O")
+    val e = intercept[org.apache.spark.sql.AnalysisException](resumed.run(tdf))
+    assert(e.getMessage.contains("`id`"), e.getMessage)
+    assert(!io.exists(spark, "run-O/cand_pairs"), "a stage was written from mixed keys")
+  }
+
   test("second run with same run_id is a full no-op") {
     val root = Files.createTempDirectory("ckpt").toString
     val io = new ParquetTableIO(root)
