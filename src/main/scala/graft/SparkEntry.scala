@@ -779,10 +779,11 @@ object SparkEntry {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val realAdv = SkewTools.recommendSalt(bands, cfg)
       val realHot = realAdv.hotKeys.map(_._1).toSet
+      // band_key is a long; the advisor's items are its decimal string
       val missedHot = bands.groupBy(col("band_key"))
         .agg(count(lit(1)).as("n"))
         .where(col("n") > cfg.maxBucketSize)
-        .collect().map(_.getString(0)).count(k => !realHot.contains(k))
+        .collect().map(_.getLong(0).toString).count(k => !realHot.contains(k))
       docs.agg(count(lit(1)).as("n_docs"))
         .select(col("n_docs"),
           lit(plantedFound).as("planted_hot_found"),

@@ -114,7 +114,7 @@ final class CheckpointedDedup(
       val (out, observation) = observeLineage(compute(), keyCols, turns)
       io.write(out, table)
       // stage output is on disk: release any intermediates the pipeline
-      // persisted while computing it (verifyPairs' spread, winnow tables)
+      // persisted while computing it (verify's candidate-doc subset)
       DedupPipeline.unpersistIntermediates(spark)
       computedStages = computedStages :+ name
       val observed = Await.result(observation.future, 10.minutes)

@@ -32,8 +32,8 @@ import graft.core._
   *  - P7 verification: pairs carry raw text (not 8x-bigger shingle
   *    arrays); a fused expression computes exact Jaccard + SimHash
   *    distance pair-locally, Jaccard gates FIRST, suffix-automaton LCS
-  *    runs only on survivors. Pair streams explicitly spread so AQE's
-  *    size-based coalescing can't serialize the CPU-heavy phase.
+  *    runs only on survivors. The id path joins the candidate pairs as
+  *    committed; the join's own partitioning places the kernel.
   *  - P8 clustering: alternating large-star/small-star contraction
   *    (O(log n) rounds), window-min based — no collect_list, no RDDs;
   *    lineage cut per round with localCheckpoint.
@@ -44,8 +44,8 @@ object DedupPipeline {
   private val ccLog = org.slf4j.LoggerFactory.getLogger("graft.pipeline.DedupPipeline")
 
   /** Intermediates persisted by pipeline stages (verifyPairs' spread pair
-    * stream, the winnow docs/bucket/vocabulary tables, runWithDocs' docs
-    * and salted bands),
+    * stream, verify's candidate-doc subset, the winnow docs/bucket/vocabulary
+    * tables, runWithDocs' docs, salted bands and candidate pairs),
     * tracked per session so long-lived callers can release them: Spark
     * never auto-unpersists, and repeated library calls in one session
     * would otherwise accumulate cached blocks (ADVICE r3). Unpersisting
@@ -530,9 +530,11 @@ object DedupPipeline {
     *    thresholds, so gating on it would cut recall below the oracle bar.
     *
     * Shuffle discipline at scale:
-    *  1. candidate pairs (tiny rows) are explicitly SPREAD across the full
-    *     shuffle-partition count — AQE's size-based coalescing would fold
-    *     the CPU-heavy verification onto 1-2 tasks otherwise;
+    *  1. the candidate pairs are joined as they come, so the join places
+    *     pair_verify: under broadcast on the candidate-doc side (one task
+    *     per doc partition), under sort-merge in the b-side join's shuffle
+    *     partitions, sized by the doc text it moves, not by the pairs
+    *     (KeyEquivalenceSpec checks the sort-merge form gives equal rows);
     *  2. docs are semi-joined down to ids that appear in a pair before
     *     joining (candidates are a small fraction of the corpus);
     *  3. the join carries RAW TEXT, not precomputed shingle arrays (the
@@ -544,12 +546,13 @@ object DedupPipeline {
   def verifyPairs(candPairs: DataFrame, docs: DataFrame,
                   cfg: DedupConfig): DataFrame = {
     // persisted because BOTH the candidate-id semi-join below and the
-    // verification join consume it — without the cache the whole upstream
-    // candidate subtree (banding windows / winnow tiers) computes twice.
-    // The spread keeps spark.sql.shuffle.partitions partitions: it is
-    // persisted, and the cached plan has no AQEShuffleRead, so AQE cannot
-    // coalesce it (perfbench `mixed`: 32 cached partitions for ~1k rows).
-    // Hash-distributing on `a` spreads hot heads across them.
+    // verification join consume it, and the callers (q09–q11,
+    // completeNearDupPairs, Bench) pass lazy candidate plans: without the
+    // cache the whole upstream subtree (banding windows / winnow tiers)
+    // computes twice. The id path leaves this to its stage commit. The
+    // spread keeps spark.sql.shuffle.partitions partitions (a persisted plan
+    // has no AQEShuffleRead to coalesce it); hashing on `a` spreads hot
+    // heads across them.
     val spread = trackPersist(candPairs.repartition(col("a")))
 
     // two scans, not one explode(array(a, b)): the explode form put
@@ -1178,29 +1181,21 @@ object DedupPipeline {
   /** P7, id form: candidate (a, b) id pairs verified against docs carrying
     * (id, conv_id, doc). Output schema and orientation (a < b
     * lexicographically by conv_id) match `verifyPairs` exactly — the
-    * strings re-enter via the doc join, not a separate mapping. */
+    * strings re-enter via the doc join, not a separate mapping. Scans
+    * `candPairs` three times, unspread and uncached: callers pass
+    * candidates cheap to rescan, a table read or a persisted frame. */
   private[graft] def verifyPairsById(candPairs: DataFrame, docsWithId: DataFrame,
                                         cfg: DedupConfig): DataFrame = {
-    val parts = candPairs.sparkSession.sessionState.conf.numShufflePartitions
-    val spread = trackPersist(candPairs.repartition(parts, col("a")))
-    val candIds = spread.select(col("a").as("id"))
-      .unionByName(spread.select(col("b").as("id")))
+    val candIds = candPairs.select(col("a").as("id"))
+      .unionByName(candPairs.select(col("b").as("id")))
       .distinct()
-    // d (the candidate-doc subset) is consumed by BOTH side joins below.
-    // Unpersisted, each join re-scans the FULL docs cache through its own
-    // semi-join build — at 32 threads that cached-text decode inflates
-    // ~5x in core-seconds (the same memory-stall pathology BandProbe found
-    // on the cached-minhash scan). Persisting d scans docs ONCE and feeds
-    // both joins from the (smaller, candidates-only) cache: VerifyProbe
-    // interleaved warm legs at 32 cores 8.9–13.6 s vs 12.6–24.1 s inline —
-    // wins every pair (1.35–2.7x) AND removes the bandwidth-weather
-    // variance of the double full-cache scan; ~wash at 8 cores (the scan
-    // isn't stalled there), so the gain lands on 8→32 efficiency. At 10^12
-    // turns candidates are a tiny fraction of the corpus, so the extra
-    // cache is small while the avoided second full-corpus pass dominates.
+    // d, the candidate-doc subset, feeds BOTH side joins. Unpersisted,
+    // each join re-scans the full docs cache through its own semi-join;
+    // persisted, docs are scanned once (VerifyProbe, warm legs at 32
+    // cores: 8.9–13.6 s against 12.6–24.1 s; about even at 8 cores).
     val d = trackPersist(docsWithId.select(col("id"), col("conv_id"), col("doc"))
       .join(candIds, Seq("id"), "left_semi"))
-    verifyGate(spread
+    verifyGate(candPairs
       .join(d.select(col("id").as("a"), col("conv_id").as("ca"), col("doc").as("doc_a")), Seq("a"))
       .join(d.select(col("id").as("b"), col("conv_id").as("cb"), col("doc").as("doc_b")), Seq("b")),
       least(col("ca"), col("cb")).as("a"), greatest(col("ca"), col("cb")).as("b"), cfg)
@@ -1219,6 +1214,8 @@ object DedupPipeline {
     stages(() => docs, cfg, (name, _) => body => name match {
       // docs feed banding, verify and CC's node list, and hold the ids
       case "docs" => trackPersist(body())
+      // a lazy window plan that verify scans three times
+      case "cand_pairs" => trackPersist(body())
       // salted banding reads bands twice (within + across minima). At
       // bandSalt 1 they have one consumer: caching them would cost a
       // columnar write plus a per-row decode on re-read, while unpersisted

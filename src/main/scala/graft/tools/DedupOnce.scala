@@ -39,8 +39,7 @@ object DedupOnce {
       // 81.0s vs 72.6s for the identical 300k-conv run); 16MB restores scan
       // parallelism at both widths. Production multi-TB tables have
       // thousands of files and keep the default.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT", "16m"))
+      .config("spark.sql.files.maxPartitionBytes", "16m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     // A/B lever passthrough: SPARK_GRAFT_EXTRA_CONFS="k=v;k2=v2" applies
@@ -72,17 +71,13 @@ object DedupOnce {
           // work onto it — with 1-core executors a hot cached partition
           // otherwise queues the whole wave. On a real cluster this knob is
           // tuned to the network; here 0 IS the faithful setting.
-          .config("spark.locality.wait",
-            sys.env.getOrElse("SPARK_GRAFT_LOCALITY_WAIT", "0"))
+          .config("spark.locality.wait", "0")
           // each executor JVM must size GC/JIT/ForkJoin pools like a real
           // C-core container (cgroup limit → availableProcessors = C); by
           // default every executor sees all 32 host CPUs and N executors
           // spawn N×32-wide GC/compiler thread pools on one box — the same
           // distortion the in-process legs fix with -XX:ActiveProcessorCount.
-          // SPARK_GRAFT_EXEC_EXTRA_OPTS appends probe flags (GC choice etc.)
-          .config("spark.executor.extraJavaOptions",
-            (s"-XX:ActiveProcessorCount=$c " +
-              sys.env.getOrElse("SPARK_GRAFT_EXEC_EXTRA_OPTS", "")).trim)
+          .config("spark.executor.extraJavaOptions", s"-XX:ActiveProcessorCount=$c")
       case cores =>
         builder.master(s"local[${cores.toInt}]")
     }).getOrCreate()

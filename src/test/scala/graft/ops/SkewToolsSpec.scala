@@ -67,4 +67,28 @@ class SkewToolsSpec extends AnyFunSuite {
       .select("cluster_id").distinct().count()
     assert(cc === 1L)
   }
+
+  test("q31: the real-corpus check reads over-threshold band buckets and misses none") {
+    val cfg = DedupConfig()
+    val dir = java.nio.file.Files.createTempDirectory("q31").toFile
+    try {
+      // 2,001 identical docs: every one of their band buckets holds 2,001
+      // members, one above maxBucketSize
+      val n = cfg.maxBucketSize + 1L
+      spark.range(n).select(col("id").as("doc_id"),
+          lit("the same boilerplate text in every document of this corpus").as("text"))
+        .write.parquet(s"$dir/documents.parquet")
+      val docs = spark.read.parquet(s"$dir/documents.parquet")
+        .select(col("doc_id").cast("string").as("conv_id"), col("text").as("doc"))
+      val over = graft.pipeline.DedupPipeline.bands(
+          graft.pipeline.DedupPipeline.minhashes(docs, cfg), cfg)
+        .groupBy(col("band_key")).count().where(col("count") > cfg.maxBucketSize).count()
+      assert(over > 0, "no band bucket above maxBucketSize: the check would pass vacuously")
+
+      val r = graft.SparkEntry.queries("q31_salt_advisor")(spark, dir.toString).collect()
+      assert(r.length === 1)
+      assert(r.head.getAs[Long]("n_docs") === n)
+      assert(r.head.getAs[Boolean]("real_nfn_ok"), "a hot band bucket is missing from the advice")
+    } finally graft.pipeline.CheckpointLineageSpec.deleteDir(dir)
+  }
 }

@@ -190,9 +190,32 @@ class CheckpointLineageSpec extends AnyFunSuite {
   test("job budget: a fresh run counts its input turns inside the docs write") {
     tdf.count()
     val io = new ParquetTableIO(Files.createTempDirectory("lineage").toString)
-    // 29 jobs on this corpus; a separate count of the transcripts for the
-    // docs stage's rows_in made it 30
-    assert(jobsOf { new CheckpointedDedup(io, cfg, "run-K").run(tdf) } === 29)
+    // 25 jobs on this corpus; a separate count of the transcripts for the
+    // docs stage's rows_in made it 30, a persisted re-spread of the
+    // cand_pairs table in verify 29
+    assert(jobsOf { new CheckpointedDedup(io, cfg, "run-K").run(tdf) } === 25)
+  }
+
+  test("job budget: a resume after cand_pairs verifies the committed pairs as read") {
+    val root = Files.createTempDirectory("lineage").toString
+    val io = new ParquetTableIO(root)
+    val expected = new CheckpointedDedup(io, cfg, "run-R").run(tdf)
+      .collect().map(_.toString).sorted
+    // a crash just after cand_pairs committed: the later tables and their
+    // lineage rows are gone
+    val later = Seq("verified_pairs", "cluster_assignments")
+    val kept = io.read(spark, "run-R/metrics").where(!col("stage").isin(later: _*))
+    io.write(spark.createDataFrame(java.util.Arrays.asList(kept.collect(): _*), kept.schema),
+      "run-R/metrics")
+    later.foreach(s => deleteDir(new java.io.File(s"$root/run-R/$s")))
+
+    var resumed: DataFrame = null
+    val p = new CheckpointedDedup(io, cfg, "run-R")
+    // 16 jobs; re-spreading and caching the cand_pairs table in verify
+    // made it 20
+    assert(jobsOf { resumed = p.run(tdf) } === 16)
+    assert(p.computedStages === later)
+    assert(resumed.collect().map(_.toString).sorted === expected)
   }
 
   test("job budget: a no-op resume submits one job, a table read none") {

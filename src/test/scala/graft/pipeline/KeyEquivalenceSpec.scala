@@ -106,22 +106,46 @@ class KeyEquivalenceSpec extends AnyFunSuite {
     }
   }
 
-  test("verifyPairsById equals verifyPairs on the same candidates") {
+  private def verifiedRows(df: DataFrame) =
+    df.select("a", "b", "jaccard", "simhash_dist", "simhash_ok").collect().map(_.toSeq).toSet
+
+  /** The corpus' string candidates, and the same pairs as ids oriented by
+    * id, as candidatePairsById emits them: id order is not conv_id order,
+    * so verifyPairsById must re-orient. The id pairs are persisted, as
+    * verifyPairsById's callers pass them. */
+  private lazy val corpusCandidates: (DataFrame, DataFrame) = {
     val cand = DedupPipeline.candidatePairs(corpusBands, cfg)
-    def rows(df: DataFrame) = df.select("a", "b", "jaccard", "simhash_dist", "simhash_ok")
-      .collect().map(_.toSeq).toSet
-    val byString = rows(DedupPipeline.verifyPairs(cand, docs, cfg))
-    // id pairs oriented by id, as candidatePairsById emits them: id order
-    // is not conv_id order, so verifyPairsById must re-orient
     val ids = docsWithId.select("conv_id", "id")
     val withIds = cand
       .join(ids.select(col("conv_id").as("a"), col("id").as("ia")), Seq("a"))
       .join(ids.select(col("conv_id").as("b"), col("id").as("ib")), Seq("b"))
     assert(withIds.where(col("ia") > col("ib")).count() > 0, "some pairs flip order")
-    val idCand = withIds.select(least(col("ia"), col("ib")).as("a"),
-      greatest(col("ia"), col("ib")).as("b"))
-    val byId = rows(DedupPipeline.verifyPairsById(idCand, docsWithId, cfg))
+    (cand, withIds.select(least(col("ia"), col("ib")).as("a"),
+      greatest(col("ia"), col("ib")).as("b")).cache())
+  }
+
+  test("verifyPairsById equals verifyPairs on the same candidates") {
+    val (cand, idCand) = corpusCandidates
+    val byString = verifiedRows(DedupPipeline.verifyPairs(cand, docs, cfg))
+    val byId = verifiedRows(DedupPipeline.verifyPairsById(idCand, docsWithId, cfg))
     assert(byString.nonEmpty)
     assert(byId === byString)
+  }
+
+  test("verifyPairsById with broadcast joins off (sort-merge, as at scale) gives the same rows") {
+    val (cand, idCand) = corpusCandidates
+    val expected = verifiedRows(DedupPipeline.verifyPairsById(idCand, docsWithId, cfg))
+    val smj = spark.newSession()
+    smj.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    def in(df: DataFrame) = smj.createDataFrame(df.rdd, df.schema)
+    val verified = DedupPipeline.verifyPairsById(in(idCand).cache(), in(docsWithId), cfg)
+    assert(verified.columns.toSeq === Seq("a", "b", "jaccard", "simhash_dist", "simhash_ok"))
+    val rows = verified.collect().map(_.toSeq).toSet
+    // the final adaptive plan of the collect
+    val plan = verified.queryExecution.executedPlan.toString
+    assert(plan.contains("SortMergeJoin") && !plan.contains("BroadcastHashJoin"), plan)
+    assert(rows === expected)
+    assert(expected === verifiedRows(DedupPipeline.verifyPairs(cand, docs, cfg)))
+    DedupPipeline.unpersistIntermediates(smj)
   }
 }

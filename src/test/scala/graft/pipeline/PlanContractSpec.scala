@@ -6,7 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftTestBridge
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -79,13 +82,13 @@ class PlanContractSpec extends AnyFunSuite {
   }
 
   /** The executed plans of every Dataset action `f` runs. */
-  private def executedPlans(f: => Any): Seq[String] = {
+  private def executedPlans(f: => Any): Seq[SparkPlan] = {
     val sc = spark.sparkContext
     GraftTestBridge.drainListeners(sc)
-    val plans = new ConcurrentLinkedQueue[String]()
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString())
+        plans.add(qe.executedPlan)
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
@@ -96,6 +99,24 @@ class PlanContractSpec extends AnyFunSuite {
     plans.asScala.toSeq
   }
 
+  /** The checkpointed run's write of table `name`, among `plans`. */
+  private def stageWrite(plans: Seq[SparkPlan], runId: String, name: String): SparkPlan = {
+    val writes = plans.filter(_.toString.linesIterator.exists(l =>
+      l.contains("InsertIntoHadoopFsRelationCommand") && l.contains(s"/$runId/$name,")))
+    assert(writes.size === 1, plans.map(_.toString.take(300)).mkString("\n---\n"))
+    writes.head
+  }
+
+  /** Every node of `p`, through adaptive plans, query stages, reused
+    * exchanges and the plans of cached relations. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case r: ReusedExchangeExec => Seq(r.child)
+    case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+    case o => o.children ++ o.subqueries
+  }).flatMap(nodes)
+
   test("banding runs text_minhash, never text_signature: checkpointed bands write and runWithDocs") {
     val tdf = Transcripts.asDataFrame(spark, Transcripts.generate(60), 4)
     val root = java.nio.file.Files.createTempDirectory("plancontract").toFile
@@ -103,11 +124,10 @@ class PlanContractSpec extends AnyFunSuite {
       val ckpt = executedPlans {
         new CheckpointedDedup(new ParquetTableIO(root.toString), DedupConfig(), "run-P").run(tdf)
       }
-      val bandsWrite = ckpt.filter(_.linesIterator.exists(l =>
-        l.contains("InsertIntoHadoopFsRelationCommand") && l.contains("/run-P/bands,")))
-      assert(bandsWrite.size === 1, ckpt.map(_.take(300)).mkString("\n---\n"))
-      assert(bandsWrite.head.contains("text_minhash("), bandsWrite.head)
-      assert(!ckpt.exists(_.contains("text_signature(")), "a checkpointed stage ran text_signature")
+      val bandsWrite = stageWrite(ckpt, "run-P", "bands").toString
+      assert(bandsWrite.contains("text_minhash("), bandsWrite)
+      assert(!ckpt.exists(_.toString.contains("text_signature(")),
+        "a checkpointed stage ran text_signature")
     } finally CheckpointLineageSpec.deleteDir(root)
 
     var asg: DataFrame = null
@@ -115,9 +135,41 @@ class PlanContractSpec extends AnyFunSuite {
       asg = DedupPipeline.runWithDocs(DedupPipeline.buildDocs(tdf), DedupConfig())
       asg.count()
     }
-    val all = inmem :+ plan(asg)
+    val all = inmem.map(_.toString) :+ plan(asg)
     assert(all.exists(_.contains("text_minhash(")), all.mkString("\n---\n").take(4000))
     assert(!all.exists(_.contains("text_signature(")), "runWithDocs ran text_signature")
+    DedupPipeline.unpersistIntermediates(spark)
+  }
+
+  test("verify reads the committed cand_pairs as they are: no re-spread, no second cache") {
+    val tdf = Transcripts.asDataFrame(spark, Transcripts.generate(60), 4)
+    val root = java.nio.file.Files.createTempDirectory("plancontract").toFile
+    try {
+      val write = stageWrite(executedPlans {
+        new CheckpointedDedup(new ParquetTableIO(root.toString), DedupConfig(), "run-V").run(tdf)
+      }, "run-V", "verified_pairs")
+      def readsCandPairs(p: SparkPlan): Boolean = nodes(p).exists {
+        case s: FileSourceScanExec =>
+          s.relation.location.rootPaths.exists(_.toString.endsWith("/run-V/cand_pairs"))
+        case _ => false
+      }
+      assert(readsCandPairs(write), write.toString)
+      // the distinct over the candidate ids and the joins may shuffle the
+      // pairs for their own input; a repartition of them may not
+      val respread = nodes(write).collect {
+        case e: ShuffleExchangeExec if e.shuffleOrigin != ENSURE_REQUIREMENTS && readsCandPairs(e) => e
+      }
+      assert(respread.isEmpty, respread.mkString("\n---\n"))
+      // the candidate-doc subset stays cached; the pairs do not. A scan
+      // names the cached columns as its reader aliased them, so each cache
+      // is told apart by the plan it cached: text or none.
+      def cachesText(m: InMemoryTableScanExec) =
+        m.relation.cachedPlan.output.exists(_.name == "doc")
+      val caches = nodes(write).collect { case m: InMemoryTableScanExec => m }
+      val cachedPairs = caches.filter(m => !cachesText(m) && readsCandPairs(m.relation.cachedPlan))
+      assert(cachedPairs.isEmpty, cachedPairs.mkString("\n---\n"))
+      assert(caches.exists(cachesText), write.toString)
+    } finally CheckpointLineageSpec.deleteDir(root)
     DedupPipeline.unpersistIntermediates(spark)
   }
 
