@@ -195,17 +195,14 @@ object Bench {
         }
         val n = s.read.parquet(scatteredDir).count()
         if (!new java.io.File(s"$edgesDir/_SUCCESS").exists()) {
-          val docs = DedupPipeline.buildDocs(s.read.parquet(scatteredDir))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val sigs = DedupPipeline.signatures(docs, cfg)
-            .select(org.apache.spark.sql.functions.col("conv_id"),
-              org.apache.spark.sql.functions.col("minhash"))
-          DedupPipeline.verifyPairs(
-              DedupPipeline.candidatePairs(DedupPipeline.bands(sigs, cfg), cfg), docs, cfg)
-            .select(org.apache.spark.sql.functions.col("a"),
+          // the shipped stages; their CC runs here too, untimed
+          val run = DedupPipeline.stages(
+            () => DedupPipeline.buildDocs(s.read.parquet(scatteredDir)), cfg,
+            DedupPipeline.inMemory(cfg))
+          run.verified.select(org.apache.spark.sql.functions.col("a"),
               org.apache.spark.sql.functions.col("b"))
             .write.mode("overwrite").parquet(edgesDir)
-          docs.select(org.apache.spark.sql.functions.col("conv_id"))
+          run.docs.select(org.apache.spark.sql.functions.col("conv_id"))
             .write.mode("overwrite").parquet(nodesDir)
         }
         n
@@ -553,10 +550,7 @@ object Bench {
       try {
         val warm = Transcripts.generateDf(spark, 2000)
         DedupPipeline.run(warm, cfg).count()
-        val warmDocs = DedupPipeline.buildDocs(warm)
-        DedupPipeline.verifyPairs(
-          DedupPipeline.winnowCandidatePairs(warmDocs, k = 8, w = 16, cfg,
-            minFpOverlap = 0.6), warmDocs, cfg).count()
+        SparkEntry.winnowNearDup(DedupPipeline.buildDocs(warm), cfg).count()
       } catch { case _: Throwable => }
       DedupPipeline.unpersistIntermediates(spark)
       spark.catalog.clearCache()

@@ -43,6 +43,27 @@ object SparkEntry {
     DedupPipeline.run(Transcripts.asDataFrame(spark, turns, 8), DedupConfig())
   }
 
+  /** q09's dataflow: winnow candidates over the docs' ids, verified by
+    * the shipped verify body. Bench's warm-up runs it too.
+    *
+    * Tier caps are FIXED (r2's corpus-proportional n/20 cap was the
+    * 100x-scale hazard): template-family buckets (up to ~250 members at
+    * sf0.1, carrying true pairs) fall under the 256 all-pairs tier, so the
+    * exact-oracle match is structural; larger buckets take the linear
+    * salted tier. minFpOverlap 0.6: measured true pairs sit at containment
+    * ratio exactly 1.0 at sf0.01 AND sf0.1 (winnow fingerprints min-sample
+    * the duplicated runs), template cousins at <= 0.9 — 0.6 sits below the
+    * true-pair band with a wide margin and cuts pair_verify work ~5x vs
+    * the conservative 0.4 default. */
+  private[graft] def winnowNearDup(docs: DataFrame, cfg: DedupConfig): DataFrame = {
+    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val docsWithId = DedupPipeline.withIds(docs).persist(level)
+    // persisted: verifyPairsById scans its candidates three times
+    val cand = DedupPipeline.winnowCandidatePairs(docsWithId, k = 8, w = 16,
+      minFpOverlap = 0.6).persist(level)
+    DedupPipeline.verifyPairsById(cand, docsWithId, cfg)
+  }
+
   /** documents as (conv_id, doc, doc_len) — the near-dup pipeline's view. */
   private def docsView(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents")
@@ -211,21 +232,7 @@ object SparkEntry {
     // verify — checked against DuckDB's exact all-pairs ground truth, the
     // same oracle as q10 reached through an independent candidate modality
     "q09_docs_winnow_neardup" -> ((s, dir) => {
-      val cfg = DedupConfig()
-      val docs = docsView(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // Tier caps are FIXED (r2's corpus-proportional n/20 cap was the
-      // 100x-scale hazard): template-family buckets (up to ~250 members at
-      // sf0.1, carrying true pairs) fall under the 256 all-pairs tier, so
-      // the exact-oracle match is structural; larger buckets take the
-      // linear salted tier. minFpOverlap 0.6: measured true pairs sit at
-      // containment ratio exactly 1.0 at sf0.01 AND sf0.1 (winnow
-      // fingerprints min-sample the duplicated runs), template cousins at
-      // <= 0.9 — 0.6 sits below the true-pair band with a wide margin and
-      // cuts pair_verify work ~5x vs the conservative 0.4 default.
-      val cand = DedupPipeline.winnowCandidatePairs(docs, k = 8, w = 16,
-        cfg, minFpOverlap = 0.6)
-      DedupPipeline.verifyPairs(cand, docs, cfg)
+      winnowNearDup(docsView(s, dir), DedupConfig())
         .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard"))
         .orderBy(col("a"), col("b"))
     }),
@@ -233,28 +240,18 @@ object SparkEntry {
     // ---- dedup pipeline on the documents table ---------------------------
     "q10_docs_lsh_neardup_pairs" -> ((s, dir) => {
       val cfg = DedupConfig()
-      val docs = docsView(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cand = DedupPipeline.candidatePairs(
-        DedupPipeline.bands(DedupPipeline.minhashes(docs, cfg), cfg), cfg)
-      val verified = DedupPipeline.verifyPairs(cand, docs, cfg)
+      val run = DedupPipeline.stages(() => docsView(s, dir), cfg, DedupPipeline.inMemory(cfg))
       // cluster closure makes the pair listing STRUCTURALLY complete
       // (direct chain+star pairs cover a 4+-member bucket only
       // probabilistically — one sf0.1 pair fell through under a minhash
       // reseed; see completeNearDupPairs doc)
-      DedupPipeline.completeNearDupPairs(verified, docs, cfg)
+      DedupPipeline.completeNearDupPairs(run.assignments, run.docs, cfg)
         .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard"))
         .orderBy(col("a"), col("b"))
     }),
 
     "q11_docs_lsh_clusters" -> ((s, dir) => {
-      val cfg = DedupConfig()
-      val docs = docsView(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cand = DedupPipeline.candidatePairs(
-        DedupPipeline.bands(DedupPipeline.minhashes(docs, cfg), cfg), cfg)
-      val verified = DedupPipeline.verifyPairs(cand, docs, cfg)
-      DedupPipeline.connectedComponents(verified, docs.select(col("conv_id")))
+      DedupPipeline.runWithDocs(docsView(s, dir), DedupConfig())
         .orderBy(col("conv_id"))
     }),
 
@@ -933,7 +930,7 @@ object SparkEntry {
     *
     * DOCUMENTED DIVERGENCE (ADVICE r2): the pipeline's verification
     * applies gates the SQL oracle does not model —
-    *  - the length-adaptive LCS gate (verifyPairs drops high-Jaccard /
+    *  - the length-adaptive LCS gate (verifyPairsById drops high-Jaccard /
     *    low-LCS pairs like VerifyGatesSpec's block-shuffled construction),
     *  - q09's fingerprint-overlap prefilter (tier-1 containment >= 0.6).
     * The oracle is pure 8-gram Jaccard >= 0.8. The compare is exact on the

@@ -21,9 +21,9 @@ final case class DedupConfig(
     /** LCS verification gate (north_star "suffix-array LCS checks"):
       * pairs must share a common substring of ≥ min(tauLcs, min doc len)
       * chars — applied after the Jaccard gate in DedupPipeline.verifyGate
-      * (both verify preambles share it); kills adversarial no-long-run pairs. */
+      * (verifyPairsById and its test oracle share it); kills adversarial no-long-run pairs. */
     tauLcs: Int = 64,
-    /** SimHash agreement criterion, RECORDED as verifyPairs.simhash_ok
+    /** SimHash agreement criterion, RECORDED as verifyPairsById.simhash_ok
       * (not gated — near-threshold Jaccard pairs legitimately exceed it). */
     simhashMaxDist: Int = 8,
     seed: Long = Murmur3x128.DefaultSeed,

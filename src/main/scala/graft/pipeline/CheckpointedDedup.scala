@@ -81,7 +81,7 @@ final class CheckpointedDedup(
         val out = stage(spark, name, keyCols, previous)(body)
         previous = Some(name)
         out
-      })
+      }).assignments
   }
 
   /** Read the metrics table (for tests / the resume planner). */

@@ -29,10 +29,11 @@ import graft.core._
   *    boilerplate buckets (the skew driver) stay LINEAR. This is the
   *    structural skew guard; AQE skew-join splitting covers the residual
   *    joins (P9).
-  *  - P7 verification: pairs carry raw text (not 8x-bigger shingle
+  *  - P7 verification: one body, `verifyPairsById`, for the shipped run
+  *    and the oracle queries. Pairs carry raw text (not 8x-bigger shingle
   *    arrays); a fused expression computes exact Jaccard + SimHash
   *    distance pair-locally, Jaccard gates FIRST, suffix-automaton LCS
-  *    runs only on survivors. The id path joins the candidate pairs as
+  *    runs only on survivors. The candidate pairs are joined as
   *    committed; the join's own partitioning places the kernel.
   *  - P8 clustering: alternating large-star/small-star contraction
   *    (O(log n) rounds), window-min based — no collect_list, no RDDs;
@@ -43,9 +44,10 @@ object DedupPipeline {
   /** connectedComponents' path, probe and round decisions, at INFO. */
   private val ccLog = org.slf4j.LoggerFactory.getLogger("graft.pipeline.DedupPipeline")
 
-  /** Intermediates persisted by pipeline stages (verifyPairs' spread pair
-    * stream, verify's candidate-doc subset, the winnow docs/bucket/vocabulary
-    * tables, runWithDocs' docs, salted bands and candidate pairs),
+  /** Intermediates persisted by pipeline stages (verify's candidate-doc
+    * subset, the closure's intra-cluster pairs, the winnow
+    * bucket/vocabulary tables, runWithDocs' docs, salted bands and
+    * candidate pairs),
     * tracked per session so long-lived callers can release them: Spark
     * never auto-unpersists, and repeated library calls in one session
     * would otherwise accumulate cached blocks (ADVICE r3). Unpersisting
@@ -363,21 +365,6 @@ object DedupPipeline {
     docs.select(col("conv_id"),
       graft.functions.simhash64(col("doc"), cfg.shingleK, cfg.seed).as("simhash"))
 
-  /** Slice-1 UDF variant, kept for benchmarking expression-vs-UDF. */
-  def signaturesUdf(docs: DataFrame, cfg: DedupConfig): DataFrame = {
-    val k = cfg.shingleK; val n = cfg.numHashes; val seed = cfg.seed
-    val sigUdf = udf { (text: String) =>
-      val sh = Shingles.shinglesOf(if (text == null) "" else text, k, seed)
-      val mh = graft.functions.TextSignatureExpr.hasher(n, seed)
-      (sh, mh.signature(sh), SimHash64.fingerprint(sh))
-    }
-    docs.withColumn("sig", sigUdf(col("doc")))
-      .select(col("conv_id"), col("doc"), col("doc_len"),
-        col("sig._1").as("shingles"),
-        col("sig._2").as("minhash"),
-        col("sig._3").as("simhash"))
-  }
-
   /** P3, band input: docs → (conv_id, minhash), the only signature field
     * banding reads (text_minhash: no shingle sort, SimHash or shingle
     * array; bit-identical to `signatures`' minhash column). */
@@ -464,15 +451,15 @@ object DedupPipeline {
       // (bucket_first, key) when it adds information beyond the chain
       // (null `when` arms drop out in the filter below).
       //
-      // The repartition is EXPLICIT for the same reason as verifyPairs
-      // step 1: left to AQE, the window's exchange coalesces to ~cores
-      // (35 partitions at 32 cores, 14 at 8 on the 1M band stream) and
-      // this stage's uniform sort-heavy tasks then run in two waves with
-      // a mostly-idle second wave — measured 7.6 s of the 14.7 s stage
-      // wall at 32 cores (id key: 34 tasks, median 1.88 s, ~1.8 s of idle
-      // width). An explicit partition count is honored by AQE, keeps
-      // tasks ~1/8 the size (cache-friendlier sorts), and satisfies the
-      // window's required distribution so no second exchange appears.
+      // The repartition is EXPLICIT: left to AQE, the window's exchange
+      // coalesces to ~cores (35 partitions at 32 cores, 14 at 8 on the
+      // 1M band stream) and this stage's uniform sort-heavy tasks then
+      // run in two waves with a mostly-idle second wave — measured 7.6 s
+      // of the 14.7 s stage wall at 32 cores (id key: 34 tasks, median
+      // 1.88 s, ~1.8 s of idle width). An explicit partition count is
+      // honored by AQE, keeps tasks ~1/8 the size (cache-friendlier
+      // sorts), and satisfies the window's required distribution so no
+      // second exchange appears.
       val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
       val spread = df.repartition(nParts, pcols: _*)
       keyHash.fold(spread)(h => spread.withColumn("h", h))
@@ -506,120 +493,31 @@ object DedupPipeline {
     }
   }
 
-  /** P7: verify candidate pairs with exact Jaccard (the oracle-parity
-    * gate) then the LCS check on survivors (north_star: "exact Jaccard
-    * plus suffix-array longest-common-substring checks" — applied in
-    * decision form, see Lcs.hasCommonRun; Lcs.lcsLength keeps the exact
-    * automaton). Returns verified_pairs(a, b, jaccard, simhash_dist,
-    * simhash_ok).
-    *
-    * Gate semantics:
-    *  - Jaccard ≥ cfg.tauJaccard gates FIRST (identical criterion to the
-    *    recall oracle — OracleDedup — so pipeline recall is measured
-    *    against exactly this bar).
-    *  - The LCS gate is length-adaptive: lcs_len ≥ min(cfg.tauLcs,
-    *    min(|doc_a|, |doc_b|) / 2). A genuine near-dup at J ≥ 0.8 keeps a
-    *    common run ≥ roughly L/(e+1) with e edits, and J ≥ 0.8 bounds e to
-    *    ~(L-k)/(4k·...) — in practice runs ≫ tauLcs for long docs, while
-    *    docs shorter than 2·tauLcs only need half their length (so a
-    *    near-edge edit on a short doc never drops a legit dup). A
-    *    block-shuffled adversarial pair (high set overlap, no long common
-    *    run) on long docs fails the 64-char bar.
-    *  - cfg.simhashMaxDist is RECORDED (simhash_ok column), not gated:
-    *    at J near tau the Hamming distance legitimately exceeds small
-    *    thresholds, so gating on it would cut recall below the oracle bar.
-    *
-    * Shuffle discipline at scale:
-    *  1. the candidate pairs are joined as they come, so the join places
-    *     pair_verify: under broadcast on the candidate-doc side (one task
-    *     per doc partition), under sort-merge in the b-side join's shuffle
-    *     partitions, sized by the doc text it moves, not by the pairs
-    *     (KeyEquivalenceSpec checks the sort-merge form gives equal rows);
-    *  2. docs are semi-joined down to ids that appear in a pair before
-    *     joining (candidates are a small fraction of the corpus);
-    *  3. the join carries RAW TEXT, not precomputed shingle arrays (the
-    *     shingle set is ~8x the text size); pair_verify recomputes both
-    *     shingle sets pair-locally in one fused expression (Jaccard +
-    *     SimHash distance), and the O(n) rolling-hash LCS decision runs
-    *     only on Jaccard-gate survivors.
-    */
-  def verifyPairs(candPairs: DataFrame, docs: DataFrame,
-                  cfg: DedupConfig): DataFrame = {
-    // persisted because BOTH the candidate-id semi-join below and the
-    // verification join consume it, and the callers (q09–q11,
-    // completeNearDupPairs, Bench) pass lazy candidate plans: without the
-    // cache the whole upstream subtree (banding windows / winnow tiers)
-    // computes twice. The id path leaves this to its stage commit. The
-    // spread keeps spark.sql.shuffle.partitions partitions (a persisted plan
-    // has no AQEShuffleRead to coalesce it); hashing on `a` spreads hot
-    // heads across them.
-    val spread = trackPersist(candPairs.repartition(col("a")))
-
-    // two scans, not one explode(array(a, b)): the explode form put
-    // perfbench's G1 collections on a full heap (ROADMAP Direction 8)
-    val candIds = spread.select(col("a").as("conv_id"))
-      .unionByName(spread.select(col("b").as("conv_id")))
-      .distinct()
-    // persisted for the same reason as the id path (verifyPairsById): both
-    // side joins consume d, and recomputing it re-scans the full docs
-    // cache twice (VerifyProbe A/B — see verifyPairsById).
-    val d = trackPersist(docs.select(col("conv_id"), col("doc"))
-      .join(candIds, Seq("conv_id"), "left_semi"))
-
-    verifyGate(spread
-      .join(d.select(col("conv_id").as("a"), col("doc").as("doc_a")), Seq("a"))
-      .join(d.select(col("conv_id").as("b"), col("doc").as("doc_b")), Seq("b")),
-      col("a"), col("b"), cfg)
-  }
-
-  /** The verify gate both key types share — the recall contract — over
-    * joined candidate rows carrying `doc_a` and `doc_b`: pair_verify,
-    * Jaccard ≥ cfg.tauJaccard, then the length-adaptive LCS check.
-    * Returns verified_pairs(a, b, jaccard, simhash_dist, simhash_ok), where
-    * `a` and `b` are the caller's output columns, named a and b: the
-    * string caller's candidates are already oriented a < b and pass
-    * through, the id caller orients the conv_ids it joined with
-    * least/greatest (id order is not conv_id order). */
-  private def verifyGate(joined: DataFrame, a: Column, b: Column,
-                         cfg: DedupConfig): DataFrame =
-    joined
-      .withColumn("pv",
-        graft.functions.pair_verify(col("doc_a"), col("doc_b"), cfg.shingleK, cfg.seed))
-      .withColumn("jaccard", col("pv.jaccard"))
-      .where(col("jaccard") >= lit(cfg.tauJaccard)) // the oracle-parity gate
-      // north-star LCS check, length-adaptive: common run ≥ min(tauLcs,
-      // minLen/2) must exist. Decision form (Lcs.hasCommonRun) — the exact
-      // automaton cost ~7ms/pair and its allocation churn made verify the
-      // worst-scaling stage at 32 cores (GC contention).
-      .where(graft.functions.lcs_at_least(col("doc_a"), col("doc_b"),
-        least(lit(cfg.tauLcs),
-          (least(length(col("doc_a")), length(col("doc_b"))) / 2).cast("int"))))
-      .select(a, b, col("jaccard"),
-        col("pv.simhash_dist").as("simhash_dist"),
-        (col("pv.simhash_dist") <= lit(cfg.simhashMaxDist)).as("simhash_ok"))
-
-  /** Complete near-dup PAIR listing: verified edges → connected
-    * components → exhaustive intra-cluster verification. Chain+star keeps
-    * candidate generation linear per bucket, so a true pair inside a
-    * 4+-member bucket may never be DIRECTLY tested (coverage of direct
-    * pairs is probabilistic — candidatePairs doc); cluster connectivity,
-    * however, is near-certain (a J ≥ τ pair shares ~13 of 32 band buckets
-    * in expectation, each bucket a chain of verified family edges). This
-    * operator turns that into a STRUCTURAL pair-level contract: group the
-    * cluster members and re-verify all intra-cluster pairs with the exact
-    * Jaccard + LCS gates. The output is inherently quadratic in family
-    * size — that is the ask ("list every near-dup pair"); dedup itself
-    * consumes clusters (run/CheckpointedDedup), not this listing. */
-  def completeNearDupPairs(verified: DataFrame, docs: DataFrame,
+  /** Complete near-dup PAIR listing: cluster assignments → exhaustive
+    * intra-cluster verification. Chain+star keeps candidate generation
+    * linear per bucket, so a true pair inside a 4+-member bucket may never
+    * be DIRECTLY tested (coverage of direct pairs is probabilistic —
+    * candidatePairs doc); cluster connectivity, however, is near-certain
+    * (a J ≥ τ pair shares ~13 of 32 band buckets in expectation, each
+    * bucket a chain of verified family edges). This operator turns that
+    * into a STRUCTURAL pair-level contract: group the members of each
+    * cluster of `assignments` (conv_id, cluster_id) by their ids in
+    * `docsWithId` and re-verify all intra-cluster pairs with the exact
+    * Jaccard + LCS gates (verifyPairsById). The output is inherently
+    * quadratic in family size — that is the ask ("list every near-dup
+    * pair"); dedup itself consumes clusters (run/CheckpointedDedup), not
+    * this listing. */
+  def completeNearDupPairs(assignments: DataFrame, docsWithId: DataFrame,
                            cfg: DedupConfig): DataFrame = {
-    val asg = connectedComponents(verified.select(col("a"), col("b")),
-      docs.select(col("conv_id")))
-    val intra = asg.groupBy(col("cluster_id"))
-      .agg(sort_array(collect_list(col("conv_id"))).as("ms"))
+    // persisted: verifyPairsById scans its candidates three times
+    val intra = trackPersist(assignments
+      .join(docsWithId.select(col("conv_id"), col("id")), Seq("conv_id"))
+      .groupBy(col("cluster_id"))
+      .agg(sort_array(collect_list(col("id"))).as("ms"))
       .where(size(col("ms")) >= 2)
       .select(explode(arrayCombos(col("ms"))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
-    verifyPairs(intra, docs, cfg)
+      .select(col("p.a").as("a"), col("p.b").as("b")))
+    verifyPairsById(intra, docsWithId, cfg)
   }
 
   /** SimHash near-dup pairs via pigeonhole banding: split the 64-bit
@@ -751,42 +649,24 @@ object DedupPipeline {
     * fingerprints min-sample the shared shingle runs; measured: every true
     * pair at sf0.01/sf0.1 sits at ratio 1.0, template cousins below 0.9),
     * so they reach pair_verify while hot-family buckets stop costing
-    * O(family²) verifications. */
-  def winnowCandidatePairs(docs: DataFrame, k: Int, w: Int,
-                           cfg: DedupConfig,
+    * O(family²) verifications.
+    *
+    * Over docs carrying withIds' `id` and `doc`; returns (a, b) ids,
+    * a < b. Keyed by id, as the minhash path is: the tier-1 pair stream is
+    * quadratic in template-family size — 6.5M weighted instances from 5k
+    * docs at sf0.1 — and keyed by conv_id every explode/shuffle/groupBy row
+    * carried two strings; keyed by id those rows are three fixed longs.
+    * The tier-2 sub-bucket split hashes the key value
+    * (pmod(xxhash64(key, band), S)), so that tier's probabilistic pair
+    * sample depends on the ids (ADVICE r4); tier-1 evidence and cluster
+    * connectivity do not. */
+  def winnowCandidatePairs(docsWithId: DataFrame, k: Int, w: Int,
                            minFpOverlap: Double = 0.4,
                            allPairsCap: Int = 256,
                            subBucketSize: Int = 64,
                            stopFpFreq: Int = 4096,
                            tier2PairRecall: Boolean = false): DataFrame = {
-    // keyed by withIds' ids, as the minhash path is: the tier-1 pair stream
-    // is quadratic in template-family size — 6.5M weighted instances from
-    // 5k docs at sf0.1 — and keyed by conv_id every explode/shuffle/groupBy
-    // row carried two strings; keyed by id those rows are three fixed
-    // longs. The survivor set (3-4 orders of magnitude smaller) maps back
-    // through the same persisted docs and re-orients lexicographically.
-    // The tier-2 sub-bucket split hashes the key value
-    // (pmod(xxhash64(key, band), S)), so that tier's probabilistic pair
-    // sample depends on the ids (ADVICE r4); tier-1 evidence and cluster
-    // connectivity do not.
-    val idDocs = trackPersist(withIds(docs.select(col("conv_id"), col("doc"))))
-    winnowCandidatePairsKeyed(idDocs.select(col("id").as("conv_id"), col("doc")), k, w, cfg,
-        minFpOverlap, allPairsCap, subBucketSize, stopFpFreq, tier2PairRecall)
-      .join(idDocs.select(col("id").as("a"), col("conv_id").as("ca")), Seq("a"))
-      .join(idDocs.select(col("id").as("b"), col("conv_id").as("cb")), Seq("b"))
-      .select(least(col("ca"), col("cb")).as("a"), greatest(col("ca"), col("cb")).as("b"))
-  }
-
-  /** The winnow candidate body over docs whose `conv_id` column holds
-    * withIds' ids. Returns (a, b) ids, a < b. */
-  private def winnowCandidatePairsKeyed(docs: DataFrame, k: Int, w: Int,
-                           cfg: DedupConfig,
-                           minFpOverlap: Double,
-                           allPairsCap: Int,
-                           subBucketSize: Int,
-                           stopFpFreq: Int,
-                           tier2PairRecall: Boolean): DataFrame = {
-    val buckets = trackPersist(winnowBuckets(docs, k, w, stopFpFreq))
+    val buckets = trackPersist(winnowBuckets(docsWithId, k, w, stopFpFreq))
     // kept vocabulary sizes per doc (the prefilter denominators), split by
     // tier: the tier-1 ratio is an EXACT containment measure (both its
     // numerator and denominator count only ≤ allPairsCap fingerprints) —
@@ -795,8 +675,8 @@ object DedupPipeline {
     // buckets only: a templated doc's raw fingerprint count is dominated
     // by stop-fingerprints, which would deflate the ratio for exactly the
     // pairs the tiers exist to preserve.
-    val nFp = trackPersist(buckets.select(explode(col("ms")).as("conv_id"), col("m"))
-      .groupBy(col("conv_id"))
+    val nFp = trackPersist(buckets.select(explode(col("ms")).as("id"), col("m"))
+      .groupBy(col("id"))
       .agg(sum(when(col("m") <= allPairsCap, 1L).otherwise(0L)).as("nf1"),
         count(lit(1)).as("nfall")))
     // exact early drop: any pair passing the tier-1 branch needs
@@ -831,9 +711,9 @@ object DedupPipeline {
         col("max_wt") >= WinnowLinkWeight)
       // no broadcast hint: nFp is per-doc (10^9 rows at corpus scale) —
       // AQE broadcasts it when the actual size is small
-      .join(nFp.select(col("conv_id").as("a"), col("nf1").as("nf1a"),
+      .join(nFp.select(col("id").as("a"), col("nf1").as("nf1a"),
         col("nfall").as("nfalla")), Seq("a"))
-      .join(nFp.select(col("conv_id").as("b"), col("nf1").as("nf1b"),
+      .join(nFp.select(col("id").as("b"), col("nf1").as("nf1b"),
         col("nfall").as("nfallb")), Seq("b"))
       .where(
         // exact tier-1 containment (the oracle-bearing branch; zero
@@ -851,7 +731,8 @@ object DedupPipeline {
   }
 
   /** Fingerprint buckets with 2 to stopFpFreq members as (band_key, m
-    * size, ms sorted members) — the shared substrate of the winnow tiers.
+    * size, ms sorted member `id`s) — the shared substrate of the winnow
+    * tiers.
     * Bucket sizes FIRST, member arrays only for buckets the tiers will
     * read: a stop-fingerprint bucket — a template fingerprint shared by up
     * to the whole corpus — would otherwise pay a full
@@ -861,13 +742,13 @@ object DedupPipeline {
     * (band_key ⊂ grouping keys → no second shuffle). */
   private[graft] def winnowBuckets(docs: DataFrame, k: Int, w: Int,
                                    stopFpFreq: Int): DataFrame =
-    docs.select(col("conv_id"),
+    docs.select(col("id"),
         explode(graft.functions.winnow_fingerprints(col("doc"), k, w)).as("band_key"))
       .withColumn("m", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("band_key"))))
       .where(col("m").between(2, stopFpFreq))
       .groupBy(col("band_key"), col("m"))
-      .agg(sort_array(collect_list(col("conv_id"))).as("ms"))
+      .agg(sort_array(collect_list(col("id"))).as("ms"))
 
   private def simhashBands(signatures: DataFrame): DataFrame = {
     val bandKeys = array((0 until 4).map { b =>
@@ -1178,11 +1059,47 @@ object DedupPipeline {
   private[graft] def candidatePairsById(bands: DataFrame, cfg: DedupConfig): DataFrame =
     chainStarPairs(bands, "id", None, cfg)
 
-  /** P7, id form: candidate (a, b) id pairs verified against docs carrying
-    * (id, conv_id, doc). Output schema and orientation (a < b
-    * lexicographically by conv_id) match `verifyPairs` exactly — the
-    * strings re-enter via the doc join, not a separate mapping. Scans
-    * `candPairs` three times, unspread and uncached: callers pass
+  /** P7: candidate (a, b) id pairs verified against docs carrying
+    * (id, conv_id, doc) with exact Jaccard (the oracle-parity gate) then
+    * the LCS check on survivors (north_star: "exact Jaccard plus
+    * suffix-array longest-common-substring checks" — applied in decision
+    * form, see Lcs.hasCommonRun; Lcs.lcsLength keeps the exact automaton).
+    * Returns verified_pairs(a, b, jaccard, simhash_dist, simhash_ok) with
+    * a < b lexicographically by conv_id: the strings re-enter via the doc
+    * join, not a separate mapping. Docs with a null conv_id take part in
+    * no pair (they keep their own null cluster).
+    *
+    * Gate semantics:
+    *  - Jaccard ≥ cfg.tauJaccard gates FIRST (identical criterion to the
+    *    recall oracle — OracleDedup — so pipeline recall is measured
+    *    against exactly this bar).
+    *  - The LCS gate is length-adaptive: lcs_len ≥ min(cfg.tauLcs,
+    *    min(|doc_a|, |doc_b|) / 2). A genuine near-dup at J ≥ 0.8 keeps a
+    *    common run ≥ roughly L/(e+1) with e edits, and J ≥ 0.8 bounds e to
+    *    ~(L-k)/(4k·...) — in practice runs ≫ tauLcs for long docs, while
+    *    docs shorter than 2·tauLcs only need half their length (so a
+    *    near-edge edit on a short doc never drops a legit dup). A
+    *    block-shuffled adversarial pair (high set overlap, no long common
+    *    run) on long docs fails the 64-char bar.
+    *  - cfg.simhashMaxDist is RECORDED (simhash_ok column), not gated:
+    *    at J near tau the Hamming distance legitimately exceeds small
+    *    thresholds, so gating on it would cut recall below the oracle bar.
+    *
+    * Shuffle discipline at scale:
+    *  1. the candidate pairs are joined as they come, so the join places
+    *     pair_verify: under broadcast on the candidate-doc side (one task
+    *     per doc partition), under sort-merge in the b-side join's shuffle
+    *     partitions, sized by the doc text it moves, not by the pairs
+    *     (KeyEquivalenceSpec checks the sort-merge form gives equal rows);
+    *  2. docs are semi-joined down to ids that appear in a pair before
+    *     joining (candidates are a small fraction of the corpus);
+    *  3. the join carries RAW TEXT, not precomputed shingle arrays (the
+    *     shingle set is ~8x the text size); pair_verify recomputes both
+    *     shingle sets pair-locally in one fused expression (Jaccard +
+    *     SimHash distance), and the O(n) rolling-hash LCS decision runs
+    *     only on Jaccard-gate survivors.
+    *
+    * Scans `candPairs` three times, unspread and uncached: callers pass
     * candidates cheap to rescan, a table read or a persisted frame. */
   private[graft] def verifyPairsById(candPairs: DataFrame, docsWithId: DataFrame,
                                         cfg: DedupConfig): DataFrame = {
@@ -1193,13 +1110,40 @@ object DedupPipeline {
     // each join re-scans the full docs cache through its own semi-join;
     // persisted, docs are scanned once (VerifyProbe, warm legs at 32
     // cores: 8.9–13.6 s against 12.6–24.1 s; about even at 8 cores).
-    val d = trackPersist(docsWithId.select(col("id"), col("conv_id"), col("doc"))
+    // Null conv_ids stay out: least/greatest skip nulls, so a pair with
+    // one would come out as the self pair (x, x).
+    val d = trackPersist(docsWithId.where(col("conv_id").isNotNull)
+      .select(col("id"), col("conv_id"), col("doc"))
       .join(candIds, Seq("id"), "left_semi"))
     verifyGate(candPairs
       .join(d.select(col("id").as("a"), col("conv_id").as("ca"), col("doc").as("doc_a")), Seq("a"))
       .join(d.select(col("id").as("b"), col("conv_id").as("cb"), col("doc").as("doc_b")), Seq("b")),
-      least(col("ca"), col("cb")).as("a"), greatest(col("ca"), col("cb")).as("b"), cfg)
+      cfg)
   }
+
+  /** The verify gate — the recall contract — over joined candidate rows
+    * carrying the pair's conv_ids `ca`, `cb` and texts `doc_a`, `doc_b`:
+    * pair_verify, Jaccard ≥ cfg.tauJaccard, then the length-adaptive LCS
+    * check. Returns verified_pairs(a, b, jaccard, simhash_dist,
+    * simhash_ok), the conv_ids oriented with least/greatest (id order is
+    * not conv_id order). */
+  private[pipeline] def verifyGate(joined: DataFrame, cfg: DedupConfig): DataFrame =
+    joined
+      .withColumn("pv",
+        graft.functions.pair_verify(col("doc_a"), col("doc_b"), cfg.shingleK, cfg.seed))
+      .withColumn("jaccard", col("pv.jaccard"))
+      .where(col("jaccard") >= lit(cfg.tauJaccard)) // the oracle-parity gate
+      // north-star LCS check, length-adaptive: common run ≥ min(tauLcs,
+      // minLen/2) must exist. Decision form (Lcs.hasCommonRun) — the exact
+      // automaton cost ~7ms/pair and its allocation churn made verify the
+      // worst-scaling stage at 32 cores (GC contention).
+      .where(graft.functions.lcs_at_least(col("doc_a"), col("doc_b"),
+        least(lit(cfg.tauLcs),
+          (least(length(col("doc_a")), length(col("doc_b"))) / 2).cast("int"))))
+      .select(least(col("ca"), col("cb")).as("a"), greatest(col("ca"), col("cb")).as("b"),
+        col("jaccard"),
+        col("pv.simhash_dist").as("simhash_dist"),
+        (col("pv.simhash_dist") <= lit(cfg.simhashMaxDist)).as("simhash_ok"))
 
   /** Full pipeline: transcripts → cluster_assignments(conv_id, cluster_id). */
   def run(transcripts: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
@@ -1208,43 +1152,52 @@ object DedupPipeline {
   /** Full pipeline over pre-reconstructed docs (conv_id, doc, n_turns,
     * doc_len) — the entry for layouts with their own reconstruction path
     * (BucketedCorpus.readDocs streams docs off the bucket sort). `stages`
-    * in memory: only what two consumers read is persisted. */
+    * under the `inMemory` commit. */
   def runWithDocs(docs: DataFrame,
                   cfg: DedupConfig = DedupConfig()): DataFrame =
-    stages(() => docs, cfg, (name, _) => body => name match {
-      // docs feed banding, verify and CC's node list, and hold the ids
-      case "docs" => trackPersist(body())
-      // a lazy window plan that verify scans three times
-      case "cand_pairs" => trackPersist(body())
-      // salted banding reads bands twice (within + across minima). At
-      // bandSalt 1 they have one consumer: caching them would cost a
-      // columnar write plus a per-row decode on re-read, while unpersisted
-      // text_minhash fuses into the band explode + exchange in one codegen
-      // pass over the docs cache.
-      case "bands" if cfg.bandSalt > 1 => trackPersist(body())
-      case _ => body()
-    })
+    stages(() => docs, cfg, inMemory(cfg)).assignments
+
+  /** runWithDocs' commit: stages in memory, where only what two consumers
+    * read is persisted. */
+  private[graft] def inMemory(cfg: DedupConfig): Commit = (name, _) => body => name match {
+    // docs feed banding, verify and CC's node list, and hold the ids
+    case "docs" => trackPersist(body())
+    // a lazy window plan that verify scans three times
+    case "cand_pairs" => trackPersist(body())
+    // salted banding reads bands twice (within + across minima). At
+    // bandSalt 1 they have one consumer: caching them would cost a
+    // columnar write plus a per-row decode on re-read, while unpersisted
+    // text_minhash fuses into the band explode + exchange in one codegen
+    // pass over the docs cache.
+    case "bands" if cfg.bandSalt > 1 => trackPersist(body())
+    case _ => body()
+  }
 
   /** How a runner materializes one stage: given the stage's table name and
     * its lineage key columns, it turns the stage's body into the frame
     * later stages read. */
-  private[pipeline] type Commit = (String, Seq[String]) => (() => DataFrame) => DataFrame
+  private[graft] type Commit = (String, Seq[String]) => (() => DataFrame) => DataFrame
+
+  /** The committed frames of `stages` that callers read: the docs with
+    * their ids, the verified pairs and the cluster assignments. */
+  private[graft] final case class Committed(docs: DataFrame, verified: DataFrame,
+                                            assignments: DataFrame)
 
   /** The dedup stages, in order, each handed to `commit`: docs (with
     * `withIds`) → bands → cand_pairs → verified_pairs →
     * cluster_assignments. bands and cand_pairs are keyed by id; conv_id
-    * strings re-enter through verify's doc join. runWithDocs and
+    * strings re-enter through verify's doc join. `inMemory` and
     * CheckpointedDedup.run are the two commits. */
-  private[pipeline] def stages(docs: () => DataFrame, cfg: DedupConfig,
-                               commit: Commit): DataFrame = {
+  private[graft] def stages(docs: () => DataFrame, cfg: DedupConfig,
+                            commit: Commit): Committed = {
     val docsWithId = commit("docs", Seq("conv_id"))(() => withIds(docs()))
     val bands = commit("bands", Seq("id", "band_key"))(() =>
       bandsById(docsWithId.select(col("id"), minhash(cfg)), cfg))
     val cand = commit("cand_pairs", Seq("a", "b"))(() => candidatePairsById(bands, cfg))
     val verified = commit("verified_pairs", Seq("a", "b"))(() =>
       verifyPairsById(cand, docsWithId, cfg))
-    commit("cluster_assignments", Seq("conv_id", "cluster_id"))(() =>
-      connectedComponents(verified, docsWithId.select(col("conv_id"))))
+    Committed(docsWithId, verified,
+      commit("cluster_assignments", Seq("conv_id", "cluster_id"))(() =>
+        connectedComponents(verified, docsWithId.select(col("conv_id")))))
   }
 }
-

@@ -42,13 +42,24 @@ class FunctionsSpec extends AnyFunSuite {
     assert(full === only)
   }
 
+  /** The signature triple as a Scala UDF over the core reference code. */
+  private def signaturesUdf(docs: org.apache.spark.sql.DataFrame) = {
+    val k = cfg.shingleK; val n = cfg.numHashes; val seed = cfg.seed
+    val sigUdf = udf { (text: String) =>
+      val sh = Shingles.shinglesOf(if (text == null) "" else text, k, seed)
+      (sh, TextSignatureExpr.hasher(n, seed).signature(sh), SimHash64.fingerprint(sh))
+    }
+    docs.withColumn("sig", sigUdf(col("doc")))
+      .select(col("conv_id"), col("sig._2").as("minhash"), col("sig._3").as("simhash"))
+  }
+
   test("expression path == UDF path on generated docs") {
     val turns = Transcripts.generate(50)
     val docs = DedupPipeline.buildDocs(Transcripts.asDataFrame(spark, turns, 4))
     val a = DedupPipeline.signatures(docs, cfg)
       .select("conv_id", "minhash", "simhash").collect()
       .map(r => r.getString(0) -> (r.getSeq[Long](1), r.getLong(2))).toMap
-    val b = DedupPipeline.signaturesUdf(docs, cfg)
+    val b = signaturesUdf(docs)
       .select("conv_id", "minhash", "simhash").collect()
       .map(r => r.getString(0) -> (r.getSeq[Long](1), r.getLong(2))).toMap
     assert(a === b)

@@ -210,12 +210,13 @@ class DedupPipelineSpec extends AnyFunSuite {
       ("d1", base + " one"), ("d2", base + " two"),
       ("d3", base + " three"), ("d4", base + " four"),
       ("d9", "totally unrelated tiny document about nothing at all"))
-    val docs = docsRows.toDF("conv_id", "doc")
-      .withColumn("doc_len", length(col("doc")).cast("long"))
-    // verified input carries only a CHAIN through the family — the
-    // closure must emit all 6 intra-cluster pairs, and nothing for d9
+    val docs = DedupPipeline.withIds(docsRows.toDF("conv_id", "doc")).cache()
+    // the clusters come from only a CHAIN of verified edges through the
+    // family — the closure must emit all 6 intra-cluster pairs, and
+    // nothing for d9
     val chainOnly = Seq(("d1", "d2"), ("d2", "d3"), ("d3", "d4")).toDF("a", "b")
-    val out = DedupPipeline.completeNearDupPairs(chainOnly, docs, cfg)
+    val clusters = DedupPipeline.connectedComponents(chainOnly, docs.select(col("conv_id")))
+    val out = DedupPipeline.completeNearDupPairs(clusters, docs, cfg)
       .select("a", "b").as[(String, String)].collect().toSet
     val expected = (for {
       x <- Seq("d1", "d2", "d3", "d4"); y <- Seq("d1", "d2", "d3", "d4")

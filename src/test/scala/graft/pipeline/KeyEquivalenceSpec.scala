@@ -7,8 +7,11 @@ import graft.core.DedupConfig
 
 /** The id-keyed stages give the same candidates, components and verified
   * pairs as the conv_id-keyed ones, because `withIds` ranks docs in the
-  * order the string key sorts bucket members by. */
+  * order the string key sorts bucket members by. The conv_id-keyed verify
+  * and cluster closure live here, as the oracles of the id bodies. */
 class KeyEquivalenceSpec extends AnyFunSuite {
+  import KeyEquivalenceSpec._
+
   lazy val spark: SparkSession = SparkTestSession.spark
 
   val cfg = DedupConfig()
@@ -126,7 +129,7 @@ class KeyEquivalenceSpec extends AnyFunSuite {
 
   test("verifyPairsById equals verifyPairs on the same candidates") {
     val (cand, idCand) = corpusCandidates
-    val byString = verifiedRows(DedupPipeline.verifyPairs(cand, docs, cfg))
+    val byString = verifiedRows(verifyPairs(cand, docs, cfg))
     val byId = verifiedRows(DedupPipeline.verifyPairsById(idCand, docsWithId, cfg))
     assert(byString.nonEmpty)
     assert(byId === byString)
@@ -145,7 +148,44 @@ class KeyEquivalenceSpec extends AnyFunSuite {
     val plan = verified.queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin") && !plan.contains("BroadcastHashJoin"), plan)
     assert(rows === expected)
-    assert(expected === verifiedRows(DedupPipeline.verifyPairs(cand, docs, cfg)))
+    assert(expected === verifiedRows(verifyPairs(cand, docs, cfg)))
     DedupPipeline.unpersistIntermediates(smj)
+  }
+
+  test("the id cluster closure equals the string closure") {
+    val byString = verifiedRows(completeNearDupPairs(
+      verifyPairs(DedupPipeline.candidatePairs(corpusBands, cfg), docs, cfg), docs, cfg))
+    val run = DedupPipeline.stages(() => docs, cfg, DedupPipeline.inMemory(cfg))
+    val byId = verifiedRows(DedupPipeline.completeNearDupPairs(run.assignments, run.docs, cfg))
+    assert(byString.nonEmpty)
+    assert(byId === byString)
+    DedupPipeline.unpersistIntermediates(spark)
+  }
+}
+
+object KeyEquivalenceSpec {
+  /** The conv_id-keyed verify: string candidates (a < b) joined to docs by
+    * conv_id, through the production gate. */
+  def verifyPairs(candPairs: DataFrame, docs: DataFrame, cfg: DedupConfig): DataFrame = {
+    val candIds = candPairs.select(col("a").as("conv_id"))
+      .unionByName(candPairs.select(col("b").as("conv_id")))
+      .distinct()
+    val d = docs.select(col("conv_id"), col("doc")).join(candIds, Seq("conv_id"), "left_semi")
+    DedupPipeline.verifyGate(candPairs
+      .join(d.select(col("conv_id").as("a"), col("doc").as("doc_a")), Seq("a"))
+      .join(d.select(col("conv_id").as("b"), col("doc").as("doc_b")), Seq("b"))
+      .withColumn("ca", col("a")).withColumn("cb", col("b")), cfg)
+  }
+
+  /** The conv_id-keyed cluster closure: components of the verified edges,
+    * then every intra-cluster pair verified by the string verify. */
+  def completeNearDupPairs(verified: DataFrame, docs: DataFrame,
+                           cfg: DedupConfig): DataFrame = {
+    import docs.sparkSession.implicits._
+    val clusters = DedupPipeline.connectedComponents(verified.select(col("a"), col("b")),
+        docs.select(col("conv_id")))
+      .collect().groupMap(_.getString(1))(_.getString(0)).values
+    val intra = clusters.toSeq.flatMap(_.toSeq.sorted.combinations(2).map(p => (p(0), p(1))))
+    verifyPairs(intra.toDF("a", "b"), docs, cfg)
   }
 }

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 
 /** Round-2 verification-gate semantics (VERDICT items 7/8 + ADVICE):
-  *  - the north-star LCS check is APPLIED in verifyPairs (length-adaptive),
+  *  - the north-star LCS check is APPLIED in verifyPairsById (length-adaptive),
   *  - simhashNearDupPairs emits a complete pair set for Hamming dist <= 3,
   *  - bounded buckets are surfaced, not silent.
   */
@@ -19,6 +19,15 @@ class VerifyGatesSpec extends AnyFunSuite {
     * (all boundary-spanning grams live inside S+P) -> Jaccard = 1.0, while
     * the longest common run is one block plus its S/P context (~52 chars),
     * far below tauLcs=64. High set overlap, no long common run. */
+  /** Two docs' one candidate pair verified by the production body:
+    * the docs take withIds' ids, as the pipeline gives them. */
+  private def verifyOne(a: (String, String), b: (String, String)) = {
+    import spark.implicits._
+    val docs = DedupPipeline.withIds(Seq(a, b).toDF("conv_id", "doc")).cache()
+    val ids = docs.select(col("id")).as[Long].collect()
+    DedupPipeline.verifyPairsById(Seq((ids.min, ids.max)).toDF("a", "b"), docs, cfg)
+  }
+
   private def blockShuffledPair(): (String, String) = {
     val p = "PPPPPPPP"; val s = "SSSSSSSS"
     val rnd = new scala.util.Random(7)
@@ -32,7 +41,6 @@ class VerifyGatesSpec extends AnyFunSuite {
   }
 
   test("LCS gate: high-Jaccard / low-LCS block-shuffled pair is dropped") {
-    import spark.implicits._
     val (da, db) = blockShuffledPair()
     // sanity of the adversarial construction
     val ja = Shingles.jaccardSorted(
@@ -41,22 +49,16 @@ class VerifyGatesSpec extends AnyFunSuite {
     assert(ja >= cfg.tauJaccard, s"construction broken: jaccard $ja below tau")
     assert(Lcs.lcsLength(da, db) < cfg.tauLcs, "construction broken: long common run")
 
-    val docs = Seq(("x1", da, da.length.toLong), ("x2", db, db.length.toLong))
-      .toDF("conv_id", "doc", "doc_len")
-    val cand = Seq(("x1", "x2")).toDF("a", "b")
-    assert(DedupPipeline.verifyPairs(cand, docs, cfg).count() === 0L,
+    assert(verifyOne("x1" -> da, "x2" -> db).count() === 0L,
       "block-shuffled pair must fail the LCS gate")
   }
 
   test("LCS gate: near-edge edit on a short doc still passes (length-adaptive)") {
-    import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog near the river bank!"
     val edited = "X" + base.drop(1) // 1-char edit at the very edge
-    val docs = Seq(("s1", base, base.length.toLong), ("s2", edited, edited.length.toLong))
-      .toDF("conv_id", "doc", "doc_len")
-    val cand = Seq(("s1", "s2")).toDF("a", "b")
-    val out = DedupPipeline.verifyPairs(cand, docs, cfg).collect()
+    val out = verifyOne("s1" -> base, "s2" -> edited).collect()
     assert(out.length === 1, "short-doc near-dup must survive the adaptive LCS gate")
+    assert(out.head.getAs[String]("a") === "s1" && out.head.getAs[String]("b") === "s2")
     assert(out.head.getAs[Boolean]("simhash_ok"))
   }
 
