@@ -266,6 +266,7 @@ object Bench {
             df.count()
             DedupPipeline.run(df.where(org.apache.spark.sql.functions.col("conv_id") <= "conv-000200"), cfg).count()
             val best = (1 to repeats).map { _ =>
+              DedupPipeline.unpersistIntermediates(s)
               s.sharedState.cacheManager.clearCache()
               // same pipeline shape as DedupOnce: layout-aware docs path
               timed { DedupPipeline.runWithDocs(

@@ -56,11 +56,12 @@ object SparkEntry {
     * true-pair band with a wide margin and cuts pair_verify work ~5x vs
     * the conservative 0.4 default. */
   private[graft] def winnowNearDup(docs: DataFrame, cfg: DedupConfig): DataFrame = {
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val docsWithId = DedupPipeline.withIds(docs).persist(level)
-    // persisted: verifyPairsById scans its candidates three times
-    val cand = DedupPipeline.winnowCandidatePairs(docsWithId, k = 8, w = 16,
-      minFpOverlap = 0.6).persist(level)
+    // committed as runWithDocs commits docs and candidates (tracked, so
+    // unpersistIntermediates releases them): verifyPairsById scans its
+    // candidates three times
+    val docsWithId = DedupPipeline.trackCheckpoint(DedupPipeline.withIds(docs))
+    val cand = DedupPipeline.trackCheckpoint(DedupPipeline.winnowCandidatePairs(
+      docsWithId, k = 8, w = 16, minFpOverlap = 0.6))
     DedupPipeline.verifyPairsById(cand, docsWithId, cfg)
   }
 

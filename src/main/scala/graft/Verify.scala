@@ -21,10 +21,13 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // release blocks persisted inside the query closure (docs/sigs/pair
-      // streams) — they are consumed lazily by the written plan, so the
-      // closures cannot unpersist them themselves; without this, 29
-      // sequential queries accumulate every pipeline's cache
+      // release blocks persisted or checkpointed inside the query closure
+      // (docs/sigs/pair streams) — they are consumed lazily by the written
+      // plan, so the closures cannot release them themselves; without
+      // this, 29 sequential queries accumulate every pipeline's cache.
+      // Local checkpoints are not in the cache manager: clearCache() alone
+      // leaves them.
+      graft.pipeline.DedupPipeline.unpersistIntermediates(spark)
       spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -114,7 +114,8 @@ final class CheckpointedDedup(
       val (out, observation) = observeLineage(compute(), keyCols, turns)
       io.write(out, table)
       // stage output is on disk: release any intermediates the pipeline
-      // persisted while computing it (verify's candidate-doc subset)
+      // kept while computing it (verify's candidate-doc subset, CC's edges
+      // and round checkpoints)
       DedupPipeline.unpersistIntermediates(spark)
       computedStages = computedStages :+ name
       val observed = Await.result(observation.future, 10.minutes)

@@ -44,37 +44,59 @@ object DedupPipeline {
   /** connectedComponents' path, probe and round decisions, at INFO. */
   private val ccLog = org.slf4j.LoggerFactory.getLogger("graft.pipeline.DedupPipeline")
 
-  /** Intermediates persisted by pipeline stages (verify's candidate-doc
-    * subset, the closure's intra-cluster pairs, the winnow
-    * bucket/vocabulary tables, runWithDocs' docs, salted bands and
-    * candidate pairs),
-    * tracked per session so long-lived callers can release them: Spark
-    * never auto-unpersists, and repeated library calls in one session
-    * would otherwise accumulate cached blocks (ADVICE r3). Unpersisting
-    * is safe at any point — downstream frames recompute — but call it
-    * after materializing stage output (CheckpointedDedup does, per
-    * stage). Verify-style callers that clearCache() per query need
-    * nothing. */
-  private val trackedPersists =
+  /** Intermediates persisted or locally checkpointed by pipeline stages
+    * (verify's candidate-doc subset, the closure's intra-cluster pairs,
+    * the winnow bucket/vocabulary tables, q09's docs and candidates, and
+    * runWithDocs' committed stages), tracked per session so long-lived
+    * callers can release them: Spark never auto-unpersists, and repeated
+    * library calls in one session would otherwise accumulate cached
+    * blocks (ADVICE r3). Call it after materializing stage output
+    * (CheckpointedDedup does, per stage): a persisted frame recomputes
+    * when read again, a released checkpoint cannot be read again. A
+    * local checkpoint is not in the cache manager, so callers that
+    * clearCache() between runs call this too. */
+  private val trackedReleases =
     new java.util.concurrent.ConcurrentHashMap[SparkSession,
-      java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]()
+      java.util.concurrent.ConcurrentLinkedQueue[() => Unit]]()
+
+  private def track(spark: SparkSession, release: () => Unit): Unit =
+    trackedReleases
+      .computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]())
+      .add(release)
 
   private def trackPersist(df: DataFrame): DataFrame = {
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    trackedPersists
-      .computeIfAbsent(df.sparkSession,
-        _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]())
-      .add(df)
+    track(df.sparkSession, () => df.unpersist(false))
     df
   }
 
-  /** Release every intermediate this pipeline persisted in `spark`. */
+  /** `df` run now under the session's adaptive execution and kept as a
+    * local checkpoint (MEMORY_AND_DISK) whose blocks `unpersistIntermediates`
+    * releases. Unlike a cached plan, whose output keeps every
+    * spark.sql.shuffle.partitions partition and loses AQE's final-stage
+    * coalescing and skew split, the checkpoint holds the partitions AQE
+    * chose, and later stages read it as a LogicalRDD that keeps the
+    * plan's output partitioning and size estimate. Blocks are lost with
+    * their executor: nothing recomputes them. */
+  private[graft] def trackCheckpoint(df: DataFrame): DataFrame = {
+    val c = df.localCheckpoint(eager = true,
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    c.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        track(c.sparkSession, () => r.rdd.unpersist(false))
+      case _ =>
+    }
+    c
+  }
+
+  /** Release every intermediate this pipeline persisted or checkpointed
+    * in `spark`. */
   def unpersistIntermediates(spark: SparkSession): Unit = {
-    val q = trackedPersists.remove(spark)
+    val q = trackedReleases.remove(spark)
     if (q != null) {
       val it = q.iterator()
       while (it.hasNext) {
-        try it.next().unpersist(false)
+        try it.next()()
         catch { case _: Throwable => }
       }
     }
@@ -949,7 +971,7 @@ object DedupPipeline {
     }
     var edges =
       if (doContract) {
-        val c = localContract(edges1).localCheckpoint(true)
+        val c = trackCheckpoint(localContract(edges1))
         edges1.unpersist(false)
         c
       } else edges1.where(col("u") =!= col("v"))
@@ -974,6 +996,7 @@ object DedupPipeline {
       val nextDf = smallStar(largeStar(edges))
       // rows are reused by the scan/exchange — copy before caching
       val rdd = nextDf.queryExecution.toRdd.map(_.copy()).localCheckpoint()
+      track(spark, () => rdd.unpersist(false))
       val partFps = spark.sparkContext.runJob(rdd,
         (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => roundFingerprint(it))
       val fp = (partFps.map(_._1).sum, partFps.map(_._2).foldLeft(0L)(_ ^ _))
@@ -1157,19 +1180,27 @@ object DedupPipeline {
                   cfg: DedupConfig = DedupConfig()): DataFrame =
     stages(() => docs, cfg, inMemory(cfg)).assignments
 
-  /** runWithDocs' commit: stages in memory, where only what two consumers
-    * read is persisted. */
+  /** runWithDocs' commit: stages in memory, where what a later stage
+    * reads more than once is a local checkpoint (`trackCheckpoint`), not
+    * a persisted plan. A persisted plan keeps all
+    * spark.sql.shuffle.partitions partitions (256 tiny tasks per later
+    * stage in Bench's session) and runs without AQE's final-stage
+    * coalescing and skew split; the checkpoint runs the stage under AQE.
+    * Like CC's rounds, the committed stages do not survive executor
+    * loss; CheckpointedDedup is the resumable run. */
   private[graft] def inMemory(cfg: DedupConfig): Commit = (name, _) => body => name match {
     // docs feed banding, verify and CC's node list, and hold the ids
-    case "docs" => trackPersist(body())
+    case "docs" => trackCheckpoint(body())
     // a lazy window plan that verify scans three times
-    case "cand_pairs" => trackPersist(body())
+    case "cand_pairs" => trackCheckpoint(body())
+    // CC persists its edges and probes them: committed, that cache holds
+    // a scan of the pairs, not the verify joins
+    case "verified_pairs" => trackCheckpoint(body())
     // salted banding reads bands twice (within + across minima). At
-    // bandSalt 1 they have one consumer: caching them would cost a
-    // columnar write plus a per-row decode on re-read, while unpersisted
-    // text_minhash fuses into the band explode + exchange in one codegen
-    // pass over the docs cache.
-    case "bands" if cfg.bandSalt > 1 => trackPersist(body())
+    // bandSalt 1 they have one consumer: committing them would cost a
+    // write plus a re-read, while uncommitted text_minhash fuses into the
+    // band explode + exchange in one codegen pass over the docs.
+    case "bands" if cfg.bandSalt > 1 => trackCheckpoint(body())
     case _ => body()
   }
 

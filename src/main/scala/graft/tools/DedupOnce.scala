@@ -99,7 +99,9 @@ object DedupOnce {
     val metrics = TaskMetricsAgg.maybeInstall(spark)
     val best = (1 to repeats).map { r =>
       // drop cached stage outputs: each repeat must do the full pipeline
-      // (Spark's cache manager matches canonicalized plans across runs)
+      // (Spark's cache manager matches canonicalized plans across runs);
+      // the committed stages are local checkpoints, outside that cache
+      DedupPipeline.unpersistIntermediates(spark)
       spark.sharedState.cacheManager.clearCache()
       metrics.foreach(_.reset())
       val t0 = System.nanoTime()

@@ -33,7 +33,7 @@ class HostileInputSpec extends AnyFunSuite {
   }
 
   /** Each runner's verified pairs and assignments over `docs`, collected. */
-  private def runners()
+  private def runners(docs: DataFrame = docs)
       : Seq[(String, Set[(String, String, Double)], Map[Option[String], Option[String]])] = {
     def collectRun(verified: DataFrame, asg: DataFrame) = (
       verified.select("a", "b", "jaccard").collect()
@@ -62,5 +62,22 @@ class HostileInputSpec extends AnyFunSuite {
       assert(verified === Set(("e1", "e2", 1.0), ("s1", "s2", 1.0)), name)
       assert(asg === expected, name)
     }
+  }
+
+  test("a one-template corpus is one cluster through both runners") {
+    // every band bucket holds all 2,001 docs: the hot-key skew path
+    import spark.implicits._
+    val text = "Thank you for contacting support. Your ticket has been received " +
+      "and an agent will reply within one business day. Reference: template."
+    val n = 2001
+    val same = (0 until n).map(i => (f"t$i%04d", text)).toDF("conv_id", "doc")
+      .withColumn("n_turns", lit(1))
+      .withColumn("doc_len", length(col("doc")).cast("long"))
+    val results = runners(same)
+    for ((name, _, asg) <- results) {
+      assert(asg.size === n, name)
+      assert(asg.values.toSet === Set(Some("t0000")), name)
+    }
+    assert(results.map(_._3).distinct.size === 1)
   }
 }
