@@ -557,9 +557,11 @@ object Bench {
       spark.catalog.clearCache()
       val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         val sec = try timed { fn(spark, sfDir).count() } catch { case _: Throwable => -1.0 }
-        // release per-call pipeline persists between queries (bounded cache
-        // growth; nothing downstream reuses them) — outside the timer
+        // release per-call pipeline persists and the queries' own caches
+        // between queries (bounded cache growth; a later query or retime
+        // must not read them) — outside the timer
         DedupPipeline.unpersistIntermediates(spark)
+        spark.catalog.clearCache()
         name -> sec
       }
       // Outlier re-time: the queries block has no weather gate (unlike the
@@ -583,6 +585,7 @@ object Bench {
           val fn = SparkEntry.queries(name)
           val sec2 = try timed { fn(spark, sfDir).count() } catch { case _: Throwable => sec }
           DedupPipeline.unpersistIntermediates(spark)
+          spark.catalog.clearCache()
           retimed(name) = (sec, sec2)
           name -> math.min(sec, sec2)
         }

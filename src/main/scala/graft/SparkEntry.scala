@@ -44,24 +44,18 @@ object SparkEntry {
   }
 
   /** q09's dataflow: winnow candidates over the docs' ids, verified by
-    * the shipped verify body. Bench's warm-up runs it too.
-    *
-    * Tier caps are FIXED (r2's corpus-proportional n/20 cap was the
-    * 100x-scale hazard): template-family buckets (up to ~250 members at
-    * sf0.1, carrying true pairs) fall under the 256 all-pairs tier, so the
-    * exact-oracle match is structural; larger buckets take the linear
-    * salted tier. minFpOverlap 0.6: measured true pairs sit at containment
-    * ratio exactly 1.0 at sf0.01 AND sf0.1 (winnow fingerprints min-sample
-    * the duplicated runs), template cousins at <= 0.9 — 0.6 sits below the
-    * true-pair band with a wide margin and cuts pair_verify work ~5x vs
-    * the conservative 0.4 default. */
+    * the shipped verify body. Bench's warm-up runs it too. Template-family
+    * buckets carrying true pairs (up to ~250 members at sf0.1) fall under
+    * the fixed 256-member bucket cap, so the exact-oracle match is
+    * structural; larger buckets are stop-fingerprints and add no
+    * candidates. */
   private[graft] def winnowNearDup(docs: DataFrame, cfg: DedupConfig): DataFrame = {
     // committed as runWithDocs commits docs and candidates (tracked, so
     // unpersistIntermediates releases them): verifyPairsById scans its
     // candidates three times
     val docsWithId = DedupPipeline.trackCheckpoint(DedupPipeline.withIds(docs))
-    val cand = DedupPipeline.trackCheckpoint(DedupPipeline.winnowCandidatePairs(
-      docsWithId, k = 8, w = 16, minFpOverlap = 0.6))
+    val cand = DedupPipeline.trackCheckpoint(
+      DedupPipeline.winnowCandidatePairs(docsWithId))
     DedupPipeline.verifyPairsById(cand, docsWithId, cfg)
   }
 
@@ -933,7 +927,8 @@ object SparkEntry {
     * applies gates the SQL oracle does not model —
     *  - the length-adaptive LCS gate (verifyPairsById drops high-Jaccard /
     *    low-LCS pairs like VerifyGatesSpec's block-shuffled construction),
-    *  - q09's fingerprint-overlap prefilter (tier-1 containment >= 0.6).
+    *  - q09's fingerprint-overlap prefilter (kept-fingerprint containment
+    *    >= 0.6).
     * The oracle is pure 8-gram Jaccard >= 0.8. The compare is exact on the
     * driver corpora because (measured, rechecked each round)
     *  - every true pair there is a near-verbatim duplicate: LCS >>

@@ -570,10 +570,6 @@ object DedupPipeline {
       .distinct()
   }
 
-  /** Weight marking a connectivity link pair (tier-2 sub-bucket minima
-    * chain) — passes any overlap prefilter unconditionally. */
-  private[pipeline] val WinnowLinkWeight: Long = 1L << 40
-
   /** All ordered pairs (a < b) of a SORTED members array, generated
     * map-side: flatten(x_i × tail_i). No join, no shuffle. */
   private def arrayCombos(ms: Column): Column =
@@ -581,195 +577,96 @@ object DedupPipeline {
       transform(slice(ms, i + lit(2), size(ms)), y =>
         struct(x.as("a"), y.as("b")))))
 
-  /** Chain+star edges generated map-side from a SORTED member array (no
-    * window sort): chain = sorted-adjacent members, star = first member to
-    * every member beyond the second (the chain already links first to
-    * member 2). The same edge set as chainStarPairs' window over a bucket
-    * in the same order, and LINEAR in the array size. */
-  private def chainStarArrayEdges(ms: Column): Column = concat(
-    filter(zip_with(ms, slice(ms, lit(2), greatest(size(ms) - 1, lit(1))),
-      (a, b) => struct(a.as("a"), b.as("b"))), p => p.getField("b").isNotNull),
-    transform(slice(ms, lit(3), greatest(size(ms) - 2, lit(1))),
-      y => struct(element_at(ms, 1).as("a"), y.as("b"))))
+  // Winnow parameters of q09, the one caller: shingle length, window.
+  private val WinnowK = 8
+  private val WinnowW = 16
+  /** Fingerprint buckets above this many members are stop-fingerprints. A
+    * FIXED absolute cap, not corpus-proportional: a cap that grows with n
+    * re-creates the O((n/c)²) hot-bucket hazard. Template-family buckets
+    * carrying true pairs (up to ~250 members at sf0.1) fall under it. */
+  private val WinnowBucketCap = 256
+  /** Minimum containment: shared kept fingerprints over the smaller doc's
+    * kept-fingerprint count. Measured true pairs sit at ratio exactly 1.0
+    * at sf0.01 AND sf0.1 (winnow fingerprints min-sample the duplicated
+    * runs), template cousins at <= 0.9 — 0.6 sits below the true-pair band
+    * with a wide margin and cuts pair_verify work ~5x against 0.4. */
+  private val WinnowMinFpOverlap = 0.6
 
-  /** Internal: the weighted candidate-pair stream (a, b, wt, tier) BEFORE
-    * per-pair aggregation — exposed for the linear-growth scale tests.
-    * tier 1 rows carry wt = 1 (exact co-occurrence counts); tier 2 rows
-    * carry wt = S (unbiased estimates); link rows carry WinnowLinkWeight. */
-  private[graft] def winnowPairStream(buckets: DataFrame, allPairsCap: Int,
-                                      subBucketSize: Int,
-                                      tier2PairRecall: Boolean = false): DataFrame = {
-    // tier 1: bounded all-pairs; each co-occurrence contributes exactly 1.
-    // Two chained explodes instead of one explode over a nested combo
-    // array: arrayCombos materializes C(m,2) two-field structs per bucket
-    // row before the Generate can stream them (32k InternalRows for a
-    // 256-member bucket); posexplode + slice keeps everything in primitive
-    // long arrays and streams pairs through both Generates pipelined
-    val t1 = buckets.where(col("m") <= allPairsCap)
-      .select(col("ms"), posexplode(col("ms")).as(Seq("i", "a")))
+  /** Internal: the candidate-pair stream (a, b), one row per shared kept
+    * fingerprint, BEFORE per-pair aggregation — exposed for the scale
+    * tests. Two chained explodes instead of one explode over a nested
+    * combo array: arrayCombos materializes C(m,2) two-field structs per
+    * bucket row before the Generate can stream them (32k InternalRows for
+    * a 256-member bucket); posexplode + slice keeps everything in
+    * primitive long arrays and streams pairs through both Generates
+    * pipelined. */
+  private[graft] def winnowPairStream(buckets: DataFrame): DataFrame =
+    buckets.select(col("ms"), posexplode(col("ms")).as(Seq("i", "a")))
       .select(col("a"),
-        explode(slice(col("ms"), col("i") + lit(2), size(col("ms")))).as("b"),
-        lit(1L).as("wt"))
-      .select(col("a"), col("b"), col("wt"))
-    // tier 2: deterministic salted sub-buckets of ~subBucketSize members
-    // (salt is per (doc, bucket), so each bucket splits independently).
-    // Work per bucket is LINEAR in bucket size — what makes
-    // template-family buckets safe at 100x corpus.
-    val t2 = trackPersist(buckets.where(col("m") > allPairsCap)
-      .withColumn("S", ceil(col("m").cast("double") / subBucketSize).cast("int"))
-      .withColumn("subs", transform(sequence(lit(0), col("S") - 1),
-        s => filter(col("ms"), x =>
-          pmod(xxhash64(x, col("band_key")), col("S").cast("long")) === s.cast("long")))))
-    // within each sub-bucket: chain+star by default (≤ 2 edges per member
-    // — the candidatePairs pattern, LINEAR in bucket size), or full
-    // all-pairs when tier2PairRecall is on. Either way a co-occurrence is
-    // observed with probability ~1/S per shared bucket, so weighting it by
-    // S makes sum(wt) an (approximately) UNBIASED estimate of the pair's
-    // true shared-fingerprint count. High variance per observation (S per
-    // hit) — the prefilter's tier-2 branch therefore also demands a
-    // minimum observation count. tier2PairRecall extends PAIR-level recall
-    // into docs whose vocabulary is >allPairsCap-frequency (w.h.p., not
-    // guaranteed), at the cost of generating the sub-bucket quadratic.
-    val edgeGen: Column => Column = if (tier2PairRecall) arrayCombos else chainStarArrayEdges
-    val t2pairs = t2
-      .select(col("S"), explode(flatten(transform(col("subs"), sub => edgeGen(sub)))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"), col("S").cast("long").as("wt"))
-    // sub-bucket minima chain: keeps every tier-2 bucket CONNECTED through
-    // its sub-bucket minima (the candidatePairs salt pattern) even when a
-    // pair never shares a sub-bucket — cluster-level recall is structural,
-    // pair-level recall within tier-2 is probabilistic (documented below)
-    val mn = sort_array(filter(transform(col("subs"), sub => array_min(sub)), x => x.isNotNull))
-    val t2links = t2
-      .select(explode(filter(
-        zip_with(mn, slice(mn, lit(2), greatest(size(mn) - 1, lit(1))),
-          (a, b) => struct(a.as("a"), b.as("b"))),
-        p => p.getField("b").isNotNull)).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"), lit(WinnowLinkWeight).as("wt"))
-    t1.unionByName(t2pairs).unionByName(t2links)
-  }
+        explode(slice(col("ms"), col("i") + lit(2), size(col("ms")))).as("b"))
 
   /** Winnowing-fingerprint candidate pairs (third candidate modality next
     * to MinHash and SimHash banding): docs sharing DISCRIMINATIVE
-    * fingerprints become candidates. The frequency tiers are FIXED
-    * absolute constants (not corpus-proportional — a cap that grows with n
-    * re-creates the O((n/c)²) hot-bucket hazard this design exists to
-    * avoid):
-    *  - bucket ≤ allPairsCap: exact all-pairs, generated map-side from the
-    *    bucket's sorted member array (one groupBy shuffle, no self-join);
-    *  - allPairsCap < bucket ≤ stopFpFreq: salted sub-buckets (all-pairs
-    *    within, S-weighted co-occurrence counting, minima chain links) —
-    *    work stays LINEAR in bucket size; pair-level recall in this tier
-    *    is probabilistic (a pair sharing B such buckets is missed with
-    *    probability ~exp(-B/S)), cluster connectivity is structural via
-    *    the minima chains;
-    *  - bucket > stopFpFreq: stop-fingerprints (boilerplate; the standard
-    *    winnowing/MOSS frequency cap) — no near-dup signal, dropped; their
-    *    count is the `m > stopFpFreq` complement of winnowBuckets' filter.
-    * The prefilter keeps pairs whose (estimated) shared-fingerprint count
-    * is ≥ minFpOverlap of the smaller doc's kept vocabulary: true near-dup
-    * pairs at tau-level similarity have near-total containment (winnow
-    * fingerprints min-sample the shared shingle runs; measured: every true
-    * pair at sf0.01/sf0.1 sits at ratio 1.0, template cousins below 0.9),
-    * so they reach pair_verify while hot-family buckets stop costing
-    * O(family²) verifications.
+    * fingerprints become candidates.
+    *  - bucket of 2 to WinnowBucketCap members: exact all-pairs, generated
+    *    map-side from the bucket's sorted member array (one groupBy
+    *    shuffle, no self-join);
+    *  - larger bucket: a stop-fingerprint (boilerplate; the standard
+    *    winnowing/MOSS frequency cap) — no near-dup signal, dropped by
+    *    winnowBuckets, and counted in no doc's kept fingerprints.
+    * The prefilter keeps pairs whose shared kept-fingerprint count is
+    * ≥ WinnowMinFpOverlap of the smaller doc's kept-fingerprint count: an
+    * exact containment measure. True near-dup pairs at tau-level
+    * similarity have near-total containment, so they reach pair_verify
+    * while hot-family buckets stop costing O(family²) verifications.
     *
     * Over docs carrying withIds' `id` and `doc`; returns (a, b) ids,
-    * a < b. Keyed by id, as the minhash path is: the tier-1 pair stream is
-    * quadratic in template-family size — 6.5M weighted instances from 5k
-    * docs at sf0.1 — and keyed by conv_id every explode/shuffle/groupBy row
-    * carried two strings; keyed by id those rows are three fixed longs.
-    * The tier-2 sub-bucket split hashes the key value
-    * (pmod(xxhash64(key, band), S)), so that tier's probabilistic pair
-    * sample depends on the ids (ADVICE r4); tier-1 evidence and cluster
-    * connectivity do not. */
-  def winnowCandidatePairs(docsWithId: DataFrame, k: Int, w: Int,
-                           minFpOverlap: Double = 0.4,
-                           allPairsCap: Int = 256,
-                           subBucketSize: Int = 64,
-                           stopFpFreq: Int = 4096,
-                           tier2PairRecall: Boolean = false): DataFrame = {
-    val buckets = trackPersist(winnowBuckets(docsWithId, k, w, stopFpFreq))
-    // kept vocabulary sizes per doc (the prefilter denominators), split by
-    // tier: the tier-1 ratio is an EXACT containment measure (both its
-    // numerator and denominator count only ≤ allPairsCap fingerprints) —
-    // zero sampling variance, so the oracle-exactness of the prefilter
-    // never rides on the tier-2 estimate. Counted over post-stop-cap
-    // buckets only: a templated doc's raw fingerprint count is dominated
-    // by stop-fingerprints, which would deflate the ratio for exactly the
-    // pairs the tiers exist to preserve.
-    val nFp = trackPersist(buckets.select(explode(col("ms")).as("id"), col("m"))
+    * a < b. Keyed by id, as the minhash path is: the pair stream is
+    * quadratic in template-family size — 6.4M instances from 5k docs at
+    * sf0.1 — and keyed by conv_id every explode/shuffle/groupBy row
+    * carried two strings; keyed by id those rows are fixed longs. */
+  def winnowCandidatePairs(docsWithId: DataFrame): DataFrame = {
+    val buckets = trackPersist(winnowBuckets(docsWithId))
+    // kept-fingerprint count per doc (the prefilter denominator), over
+    // post-cap buckets only: a templated doc's raw fingerprint count is
+    // dominated by stop-fingerprints, which would deflate the ratio for
+    // exactly the pairs the cap exists to preserve
+    val nFp = trackPersist(buckets.select(explode(col("ms")).as("id"))
       .groupBy(col("id"))
-      .agg(sum(when(col("m") <= allPairsCap, 1L).otherwise(0L)).as("nf1"),
-        count(lit(1)).as("nfall")))
-    // exact early drop: any pair passing the tier-1 branch needs
-    // t1_shared >= minFpOverlap * min(nf1 over the WHOLE corpus), so pairs
-    // below that global floor (the vast cousin tail — most candidate pairs
-    // co-occur exactly once) never reach the per-doc joins. The floors are
-    // one tiny driver-side row over the per-doc vocabulary table. The
-    // tier-2 estimate branch gets its OWN floor from min(nfall): a pure
-    // tier-2 doc (nf1 = 0 — exactly the tier2PairRecall target) can have a
-    // final threshold min(nfall)·overlap below the tier-1 floor, so gating
-    // the est branch with earlyT1 dropped pairs the final predicate keeps
-    // (ADVICE r3).
-    val floors = nFp.agg(
-      coalesce(min(when(col("nf1") > 0, col("nf1"))), lit(1L)),
-      coalesce(min(col("nfall")), lit(1L))).head()
-    val earlyT1 = math.max(1L, math.ceil(minFpOverlap * floors.getLong(0)).toLong)
-    val earlyT2 = math.max(1L, math.ceil(minFpOverlap * floors.getLong(1)).toLong)
-    // the estimate branch exists only for tier2PairRecall: with it off,
-    // tier-2 chain+star observations serve cluster connectivity through
-    // the minima links alone, and letting S-weighted hits through the
-    // gates would only add verify load (min(nfall) can be 1, making the
-    // early floor vacuous)
-    val estBranch = lit(tier2PairRecall) &&
-      col("est_shared") >= earlyT2 && col("n_obs") >= 4
-    winnowPairStream(buckets, allPairsCap, subBucketSize, tier2PairRecall)
+      .agg(count(lit(1)).as("nf")))
+    // exact early drop: any kept pair needs shared >= WinnowMinFpOverlap *
+    // min(nf over the WHOLE corpus), so pairs below that global floor (the
+    // vast cousin tail — most candidate pairs co-occur exactly once) never
+    // reach the per-doc joins. The floor is one tiny driver-side row.
+    val minNf = nFp.agg(coalesce(min(col("nf")), lit(1L))).head().getLong(0)
+    val early = math.max(1L, math.ceil(WinnowMinFpOverlap * minNf).toLong)
+    winnowPairStream(buckets)
       .groupBy(col("a"), col("b"))
-      .agg(sum(when(col("wt") === 1L, 1L).otherwise(0L)).as("t1_shared"),
-        sum(when(col("wt") < WinnowLinkWeight, col("wt")).otherwise(0L)).as("est_shared"),
-        sum(when(col("wt") < WinnowLinkWeight, 1L).otherwise(0L)).as("n_obs"),
-        max(col("wt")).as("max_wt"))
-      .where(col("t1_shared") >= earlyT1 || estBranch ||
-        col("max_wt") >= WinnowLinkWeight)
+      .agg(count(lit(1)).as("shared"))
+      .where(col("shared") >= early)
       // no broadcast hint: nFp is per-doc (10^9 rows at corpus scale) —
       // AQE broadcasts it when the actual size is small
-      .join(nFp.select(col("id").as("a"), col("nf1").as("nf1a"),
-        col("nfall").as("nfalla")), Seq("a"))
-      .join(nFp.select(col("id").as("b"), col("nf1").as("nf1b"),
-        col("nfall").as("nfallb")), Seq("b"))
-      .where(
-        // exact tier-1 containment (the oracle-bearing branch; zero
-        // variance — the tier-2 estimate never gates a tier-1-evidenced pair)
-        (least(col("nf1a"), col("nf1b")) > 0 &&
-          col("t1_shared") >= least(col("nf1a"), col("nf1b")) * minFpOverlap) ||
-        // unbiased whole-vocabulary estimate with a minimum-observation
-        // guard (single S-weighted hits are noise) — tier2PairRecall only
-        (lit(tier2PairRecall) &&
-          col("est_shared") >= least(col("nfalla"), col("nfallb")) * minFpOverlap &&
-          col("n_obs") >= 4) ||
-        // sub-bucket minima links: connectivity is structural, not gated
-        col("max_wt") >= WinnowLinkWeight)
+      .join(nFp.select(col("id").as("a"), col("nf").as("nfa")), Seq("a"))
+      .join(nFp.select(col("id").as("b"), col("nf").as("nfb")), Seq("b"))
+      .where(col("shared") >= least(col("nfa"), col("nfb")) * WinnowMinFpOverlap)
       .select(col("a"), col("b"))
   }
 
-  /** Fingerprint buckets with 2 to stopFpFreq members as (band_key, m
-    * size, ms sorted member `id`s) — the shared substrate of the winnow
-    * tiers.
-    * Bucket sizes FIRST, member arrays only for buckets the tiers will
-    * read: a stop-fingerprint bucket — a template fingerprint shared by up
-    * to the whole corpus — would otherwise pay a full
-    * sort_array(collect_list) only to be dropped (VERDICT r4 #4). One
-    * Exchange total: the count comes from a window over the
-    * band_key-partitioned stream and the groupBy reuses that partitioning
-    * (band_key ⊂ grouping keys → no second shuffle). */
-  private[graft] def winnowBuckets(docs: DataFrame, k: Int, w: Int,
-                                   stopFpFreq: Int): DataFrame =
+  /** Fingerprint buckets with 2 to WinnowBucketCap members as (band_key,
+    * ms sorted member `id`s); larger buckets are stop-fingerprints.
+    * Bucket sizes FIRST, member arrays only for kept buckets: a
+    * stop-fingerprint bucket — a template fingerprint shared by up to the
+    * whole corpus — would otherwise pay a full sort_array(collect_list)
+    * only to be dropped (VERDICT r4 #4). One Exchange total: the count
+    * comes from a window over the band_key-partitioned stream and the
+    * groupBy reuses that partitioning (no second shuffle). */
+  private[graft] def winnowBuckets(docs: DataFrame): DataFrame =
     docs.select(col("id"),
-        explode(graft.functions.winnow_fingerprints(col("doc"), k, w)).as("band_key"))
+        explode(graft.functions.winnow_fingerprints(col("doc"), WinnowK, WinnowW)).as("band_key"))
       .withColumn("m", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("band_key"))))
-      .where(col("m").between(2, stopFpFreq))
-      .groupBy(col("band_key"), col("m"))
+      .where(col("m").between(2, WinnowBucketCap))
+      .groupBy(col("band_key"))
       .agg(sort_array(collect_list(col("id"))).as("ms"))
 
   private def simhashBands(signatures: DataFrame): DataFrame = {
@@ -813,8 +710,10 @@ object DedupPipeline {
     val spark = edges0.sparkSession
 
     // materialize the edge set ONCE: the size probe and whichever CC path
-    // follows both consume it (without this, the count action would
-    // recompute the entire upstream verify subtree)
+    // follows both consume it. Both runners pass committed pairs (a table
+    // read or a local checkpoint), so this caches a scan of them; uncached,
+    // perfbench `families` measured slower (resume_s 2.12 -> 2.50 s median,
+    // 6 pairs, 4 cores)
     val edges1 = edges0.select(col("a").as("u"), col("b").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val edgeCount = edges1.count()

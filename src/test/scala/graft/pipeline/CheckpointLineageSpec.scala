@@ -84,22 +84,6 @@ class CheckpointLineageSpec extends AnyFunSuite {
     }
   }
 
-  /** Jobs submitted while `f` runs. */
-  private def jobsOf(f: => Any): Int = {
-    val sc = spark.sparkContext
-    GraftTestBridge.drainListeners(sc)
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      f
-      GraftTestBridge.drainListeners(sc)
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("in-write lineage matches the read-back oracle through ParquetTableIO") {
     val io = new ParquetTableIO(Files.createTempDirectory("lineage").toString)
     new CheckpointedDedup(io, cfg, "run-P").run(splitTdf)
@@ -193,7 +177,7 @@ class CheckpointLineageSpec extends AnyFunSuite {
     // 25 jobs on this corpus; a separate count of the transcripts for the
     // docs stage's rows_in made it 30, a persisted re-spread of the
     // cand_pairs table in verify 29
-    assert(jobsOf { new CheckpointedDedup(io, cfg, "run-K").run(tdf) } === 25)
+    assert(jobsOf(spark) { new CheckpointedDedup(io, cfg, "run-K").run(tdf) } === 25)
   }
 
   test("job budget: a resume after cand_pairs verifies the committed pairs as read") {
@@ -213,7 +197,7 @@ class CheckpointLineageSpec extends AnyFunSuite {
     val p = new CheckpointedDedup(io, cfg, "run-R")
     // 16 jobs; re-spreading and caching the cand_pairs table in verify
     // made it 20
-    assert(jobsOf { resumed = p.run(tdf) } === 16)
+    assert(jobsOf(spark) { resumed = p.run(tdf) } === 16)
     assert(p.computedStages === later)
     assert(resumed.collect().map(_.toString).sorted === expected)
   }
@@ -225,7 +209,7 @@ class CheckpointLineageSpec extends AnyFunSuite {
     val expected = first.run(tdf).collect().map(_.toString).sorted
 
     var resumed: DataFrame = null
-    val resumeJobs = jobsOf {
+    val resumeJobs = jobsOf(spark) {
       val p = new CheckpointedDedup(io, cfg, "run-J")
       resumed = p.run(tdf)
       assert(p.computedStages === Nil)
@@ -235,7 +219,7 @@ class CheckpointLineageSpec extends AnyFunSuite {
 
     for (name <- Stages :+ "metrics") {
       var read: DataFrame = null
-      assert(jobsOf { read = io.read(spark, s"run-J/$name"); read.schema } === 0, name)
+      assert(jobsOf(spark) { read = io.read(spark, s"run-J/$name"); read.schema } === 0, name)
       // the footer schema is the schema Spark's own inference finds
       assert(read.schema === spark.read.parquet(s"$root/run-J/$name").schema, name)
     }
@@ -262,6 +246,22 @@ object CheckpointLineageSpec {
         count(lit(1)).as("rows_out"),
         coalesce(bit_xor(xxhash64(keyCols.map(col): _*)), lit(0L)).as("checksum"),
         hll_agg(col(keyCols.head), 12).as("hll_sketch"))
+
+  /** Jobs submitted while `f` runs. */
+  def jobsOf(spark: SparkSession)(f: => Any): Int = {
+    val sc = spark.sparkContext
+    GraftTestBridge.drainListeners(sc)
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      GraftTestBridge.drainListeners(sc)
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
 
   def deleteDir(f: java.io.File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(deleteDir)

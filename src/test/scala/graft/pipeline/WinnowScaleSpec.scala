@@ -1,96 +1,61 @@
 package graft.pipeline
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-3 winnow scale contract (VERDICT r2 "What's wrong" #1): the
-  * candidate-generation work on a planted TEMPLATE-FAMILY corpus (every
-  * fingerprint bucket = the whole family) must grow LINEARLY with family
-  * size once the family exceeds the fixed all-pairs tier — the r2
-  * corpus-proportional cap made kept buckets grow with n, re-introducing
-  * the O((n/20)²) hot-bucket hazard at 100x corpus.
+/** Winnow candidate contract: one exact all-pairs tier over fingerprint
+  * buckets of 2 to 256 members, a fixed cap above which a bucket is a
+  * stop-fingerprint (VERDICT r2 "What's wrong" #1: a corpus-proportional
+  * cap made kept buckets grow with n, re-introducing the O((n/20)²)
+  * hot-bucket hazard at 100x corpus). Work above the cap is zero, so it
+  * cannot grow with family size; under the cap the candidates are exactly
+  * the pairs whose shared kept fingerprints reach 0.6 of the smaller
+  * doc's kept-fingerprint count.
   */
 class WinnowScaleSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  /** A stop cap above every family size here: the tier split is isolated
-    * from the stop-fingerprint cut. */
-  val NoStopCap = 100000
+  private def randomText(seed: Int, n: Int): String = {
+    val rnd = new scala.util.Random(seed)
+    (1 to n).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
+  }
 
-  /** Family of m docs sharing one long template (same winnow fingerprints
-    * at frequency ~m) with a short unique tail per doc. */
-  private def templateFamily(m: Int) = {
-    val template = {
-      val rnd = new scala.util.Random(11)
-      (1 to 600).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
-    }
+  /** m identical docs: every fingerprint bucket holds the whole family. A
+    * template with numbered per-doc tails would not do: tails such as
+    * "tail-000123" share digit-run fingerprints in buckets of 10 or 100
+    * members, under the cap. */
+  private def identicalFamily(m: Int, chars: Int) = {
+    val text = randomText(11, chars)
     import spark.implicits._
-    (0 until m).map(i => (f"doc-$i%06d", template + f" tail-$i%06d"))
-      .toDF("conv_id", "doc")
+    (0 until m).map(i => (f"doc-$i%06d", text)).toDF("conv_id", "doc")
   }
 
   /** Winnow candidates over the docs' ids, mapped back to conv_id pairs
     * (a < b). */
-  private def candidates(docs: org.apache.spark.sql.DataFrame, minFpOverlap: Double,
-                         tier2PairRecall: Boolean = false): Set[(String, String)] = {
+  private def candidates(docs: DataFrame): Set[(String, String)] = {
     val docsWithId = DedupPipeline.withIds(docs).cache()
     val ids = docsWithId.select(col("id"), col("conv_id"))
-    DedupPipeline.winnowCandidatePairs(docsWithId, 8, 16,
-        minFpOverlap = minFpOverlap, tier2PairRecall = tier2PairRecall)
+    DedupPipeline.winnowCandidatePairs(docsWithId)
       .join(ids.select(col("id").as("a"), col("conv_id").as("ca")), Seq("a"))
       .join(ids.select(col("id").as("b"), col("conv_id").as("cb")), Seq("b"))
       .select(least(col("ca"), col("cb")), greatest(col("ca"), col("cb")))
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
   }
 
-  test("tier-2: pair-stream instances grow linearly in family size") {
-    def instances(m: Int, tier2PairRecall: Boolean): Long = {
-      val buckets = DedupPipeline.winnowBuckets(
-        templateFamily(m).withColumnRenamed("conv_id", "id"), 8, 16, NoStopCap)
-      DedupPipeline.winnowPairStream(buckets, allPairsCap = 256,
-        subBucketSize = 64, tier2PairRecall).count()
+  test("the cap: buckets of 256 members are all-pairs, larger ones add no work") {
+    def stream(fam: DataFrame): DataFrame = DedupPipeline.winnowPairStream(
+      DedupPipeline.winnowBuckets(fam.withColumnRenamed("conv_id", "id")))
+    val nFp = spark.range(1)
+      .select(size(graft.functions.winnow_fingerprints(lit(randomText(11, 60)), 8, 16)))
+      .head().getInt(0)
+    assert(nFp > 0)
+    assert(stream(identicalFamily(256, 60)).count() === nFp * 256L * 255 / 2)
+    for (m <- Seq(257, 600, 1200)) {
+      val fam = identicalFamily(m, 600)
+      assert(stream(fam).count() === 0L, s"family of $m")
+      assert(candidates(fam).isEmpty, s"family of $m")
     }
-    val i600 = instances(600, tier2PairRecall = true)
-    val i1200 = instances(1200, tier2PairRecall = true)
-    assert(i600 > 0)
-    // all-pairs would grow 4x; the salted tier must stay ~linear (the
-    // sub-bucket count doubles, sub-bucket size stays ~subBucketSize)
-    assert(i1200.toDouble / i600 < 3.0,
-      s"tier-2 stream grew superlinearly: $i600 -> $i1200")
-    // links-only default: strictly less work again
-    val l1200 = instances(1200, tier2PairRecall = false)
-    assert(l1200 < i1200)
-  }
-
-  test("tier-2 candidate stream stays CONNECTED (chain+star + minima links)") {
-    val fam = templateFamily(500) // > allPairsCap -> pure tier-2
-    val buckets = DedupPipeline.winnowBuckets(fam.withColumnRenamed("conv_id", "id"),
-      8, 16, NoStopCap)
-    val stream = DedupPipeline.winnowPairStream(buckets, allPairsCap = 256,
-      subBucketSize = 64).select(col("a"), col("b")).distinct()
-    // the candidate graph must span all 500 docs as one component — the
-    // same pre-verification connectivity level the MinHash chainStar
-    // guarantees (verification then keeps only true near-dup edges)
-    val cc = DedupPipeline.connectedComponents(stream, fam.select(col("conv_id")))
-    val nClusters = cc.select(col("cluster_id")).distinct().count()
-    assert(nClusters === 1L,
-      s"tier-2 family split into $nClusters components (links must chain sub-buckets)")
-  }
-
-  test("tier2PairRecall: planted dup pair inside a tier-2-only family is emitted") {
-    import spark.implicits._
-    val m = 500
-    val base = templateFamily(m).collect().map(r => (r.getString(0), r.getString(1)))
-    // plant a near-identical partner for doc-000007 (tail char changed):
-    // ALL its fingerprints live in family-frequency (tier-2) buckets
-    val (id, text) = base(7)
-    val docs = (base :+ (id + "-dup", text.dropRight(1) + "Z")).toSeq
-      .toDF("conv_id", "doc")
-    val cand = candidates(docs, minFpOverlap = 0.4, tier2PairRecall = true)
-    // the pair shares ~every bucket; P(same sub-bucket in none) ~ (1-1/S)^B
-    // ~ 1e-2 — and the salt is deterministic, so this is a fixed outcome
-    assert(cand.contains((id, id + "-dup")),
-      "planted tier-2 dup pair not emitted with tier2PairRecall=true")
   }
 
   test("fixed tiers: true pairs in a <=256 bucket survive the exact tier-1 prefilter") {
@@ -108,10 +73,82 @@ class WinnowScaleSpec extends AnyFunSuite {
       (id + "-dup", text.dropRight(1) + "Z")
     }
     val docs = (base ++ dups).toDF("conv_id", "doc")
-    val cand = candidates(docs, minFpOverlap = 0.6)
+    val cand = candidates(docs)
     (0 until 5).foreach { i =>
       val want = (f"doc-$i%04d", f"doc-$i%04d-dup")
       assert(cand.contains(want), s"missing planted pair $want")
     }
+  }
+
+  test("candidates equal a driver-side containment oracle on both sides of the cap") {
+    import spark.implicits._
+    // 300 docs share a template: its buckets sit above the cap. Docs
+    // 0-99 also share a short segment and 100-159 a long one; each doc
+    // shares its tail with one neighbour (2j, 2j+1), so a segment cousin
+    // keeps the segment's fingerprints of its tail-pair's total: below
+    // 0.6 for the short segment, above it for the long one. Docs 3, 120
+    // and 250 get a near-identical planted partner.
+    val template = randomText(21, 600)
+    val shortSeg = randomText(22, 200)
+    val longSeg = randomText(23, 600)
+    val base = (0 until 300).map { i =>
+      val body =
+        if (i < 100) shortSeg + " " + randomText(1000 + i / 2, 300)
+        else if (i < 160) longSeg + " " + randomText(1000 + i / 2, 100)
+        else randomText(1000 + i, 200)
+      (f"doc-$i%04d", template + " " + body)
+    }
+    val dups = Seq(3, 120, 250).map { i =>
+      val (id, text) = base(i)
+      (id + "-dup", text.dropRight(1) + "Z")
+    }
+    val docsWithId = DedupPipeline.withIds((base ++ dups).toDF("conv_id", "doc")).cache()
+
+    // the rule: shared fingerprints over buckets of 2-256 members reach
+    // 0.6 of the smaller doc's count of such fingerprints
+    val fps = docsWithId
+      .select(col("id"), graft.functions.winnow_fingerprints(col("doc"), 8, 16))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
+    val bucketSize = fps.values.toSeq.flatten.groupBy(identity).map { case (f, s) => f -> s.size }
+    assert(bucketSize.values.exists(_ > 256))
+    val kept = fps.map { case (id, fs) =>
+      id -> fs.filter(f => bucketSize(f) >= 2 && bucketSize(f) <= 256) }
+    val ids = kept.keys.toSeq.sorted
+    val expected = (for {
+      (a, i) <- ids.zipWithIndex
+      b <- ids.drop(i + 1)
+      shared = (kept(a) & kept(b)).size
+      if shared > 0 && shared >= math.min(kept(a).size, kept(b).size) * 0.6
+    } yield (a, b)).toSet
+
+    val id = docsWithId.select(col("conv_id"), col("id")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    def pair(x: String, y: String) = (math.min(id(x), id(y)), math.max(id(x), id(y)))
+    // both sides of the bar are exercised
+    assert(expected.contains(pair("doc-0003", "doc-0003-dup")))
+    assert(expected.contains(pair("doc-0250", "doc-0250-dup")))
+    assert(expected.contains(pair("doc-0000", "doc-0001")))
+    assert(!expected.contains(pair("doc-0000", "doc-0002")))
+    assert(expected.contains(pair("doc-0100", "doc-0102")))
+
+    val got = DedupPipeline.winnowCandidatePairs(docsWithId)
+      .collect().map(r => (r.getLong(r.fieldIndex("a")), r.getLong(r.fieldIndex("b")))).toSet
+    assert(got === expected,
+      s"${(got -- expected).size} extra, ${(expected -- got).size} missing of ${expected.size}")
+  }
+
+  test("job budget: q09's winnow near-dup query over a fixed corpus") {
+    val docs = DedupPipeline.buildDocs(Transcripts.generateDf(spark, 300)).cache()
+    docs.count()
+    DedupPipeline.unpersistIntermediates(spark)
+    var rows = 0L
+    val jobs = CheckpointLineageSpec.jobsOf(spark) {
+      rows = graft.SparkEntry.winnowNearDup(docs, graft.core.DedupConfig()).count()
+    }
+    DedupPipeline.unpersistIntermediates(spark)
+    docs.unpersist()
+    assert(rows > 0)
+    // 21 jobs; the salted second tier above 256 members made it 23
+    assert(jobs === 21)
   }
 }
